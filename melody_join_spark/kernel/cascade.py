@@ -93,7 +93,7 @@ class EmdCascade:
     # is_metric_cost / NdJoinConfig.is_metric).  None = compute locally —
     # a fallback for direct construction only; operator code MUST pass the
     # cached verdict so executors don't re-run the O(B^3) check per
-    # applyInPandas group (ADVICE round 9).
+    # cascade construction (ADVICE round 9).
     metric_cost: bool | None = None
 
     def __post_init__(self):

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from ..kernel import normalize
 from .emd_join_nd import (
     NdJoinConfig,
+    _cascade_for,
     _centroid_cols,
     _grid_boundaries,
     _parallelism_floor,
@@ -260,8 +261,6 @@ def emd_index_search(
     batched exact stage against the broadcast query block.  Query sets over
     ``collect_threshold`` are rejected (use ``emd_join_nd(other=...)`` /
     ``emd_knn(distributed=True)`` for table-scale query sides)."""
-    from ..kernel.cascade import EmdCascade
-
     cfg, bnds, grid = index.cfg, index.bnds, index.grid
     d = bnds.shape[0]
     n_probe = queries.limit(collect_threshold + 1).count()
@@ -303,7 +302,6 @@ def emd_index_search(
 
     spark = index.records.sparkSession
     b_q = spark.sparkContext.broadcast((qids, QW, qc))
-    cost = cfg.cost
 
     def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, QW_, qc_ = b_q.value
@@ -316,17 +314,7 @@ def emd_index_search(
             # ONE cascade over [queries; partition rows]: the full screen
             # stack + batched exact stage, exactly like the join's in-cell
             # verify, with all query pairs stacked into one candidate list
-            Wall = np.vstack([QW_, W])
-            casc = EmdCascade(
-                weights=Wall,
-                cost=cost,
-                bin_points=cfg.bin_points,
-                proj_positions=cfg.proj_positions,
-                duals=cfg.duals,
-                reductions=cfg.reductions,
-                rubner_ord=cfg.rubner_ord,
-                metric_cost=cfg.metric_cost,
-            )
+            casc = _cascade_for(np.vstack([QW_, W]), cfg)
             li_parts, ri_parts = [], []
             for qi in range(nq):
                 if cfg.rubner_ord is not None:

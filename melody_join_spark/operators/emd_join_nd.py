@@ -10,11 +10,19 @@ phase 1+2 (preprocess/space)  -> narrow column expressions (centroids) +
 phase 3 (process)             -> guest-cell enumeration UDF (Grid.
                                  getGuestWithDual:352-457 analog, using the
                                  bbox-clamp Rubner screen) -> explode ->
-                                 groupBy(cell) -> applyInPandas block join
+                                 _run_cascade: hash repartition on the cell
+                                 group + one mapInPandas task per partition
                                  running the numpy filter cascade
                                  (EmdFilter.java:49-82 order) with exact
                                  EMD (transportation simplex) on survivors
 phase 4 (aggregate, top-k)    -> orderBy(emd).limit(k)
+
+Every threshold strategy (grid, pivot, bruteforce) verifies its candidate
+groups through that one runner, ``_run_cascade``; a strategy supplies only
+how rows are keyed into groups and a candidate generator that turns one
+group into (left, right) row-index pairs: the grid's dim-0 centroid window
+with native/guest dedup, the pivot plan's base/window anchors with its
+LAESA screen, the bruteforce all-pairs block.
 
 Partitioning is a *quantile* grid over the centroid (Rubner) coordinates:
 cell boundaries are per-dimension percentiles, so cells are load-balanced by
@@ -31,17 +39,16 @@ cross-cell pairs only in the lower cell (guests are replicated only to cells
 strictly below their native cell — the Spark equivalent of
 QNEProcessMapper.shouldDistribute:371-395).
 
-Scale: the only wide exchange is the groupBy(cell) shuffle of (G^d cells >>
-cores) balanced groups; all bound tables (grid boundaries, dual potentials,
-reduction maps, ground matrix) are tiny driver-side objects shipped by
-closure — the DistributedCache side files of the reference
+Scale: the only wide exchange is the hash repartition on the cell group
+(G^d cells >> cores, balanced); all bound tables (grid boundaries, dual
+potentials, reduction maps, ground matrix) are tiny driver-side objects
+shipped by closure — the DistributedCache side files of the reference
 (QuantileNormalEmd.java:141-145) with no files involved.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -57,6 +64,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import (
+    CascadeStats,
     DualPotentials,
     EmdCascade,
     ReductionMap,
@@ -107,6 +115,7 @@ class JoinStats:
         "guest_replicas",
         "laesa_considered",  # pivot path, arbitrary cost: block pairs before
         "laesa_survivors",   # / after the pivot-space triangle screen
+        "result_pairs",      # pairs the cascade emitted (= output rows)
     )
 
     def __init__(self, sc):
@@ -144,7 +153,7 @@ class NdJoinConfig:
     rubner_ord: float | None = 2
     # Cached metric verdict for ``cost`` — computed ONCE on the driver
     # (build_config) and closure-shipped, so executors never re-run the
-    # O(B^3) triangle check per applyInPandas group (ADVICE round 9).
+    # O(B^3) triangle check per cascade construction (ADVICE round 9).
     metric_cost: bool | None = None
 
     def is_metric(self) -> bool:
@@ -286,6 +295,108 @@ def _emit_pairs(ids, li, ri, emds, ordered: bool = False) -> pd.DataFrame:
     lo = np.minimum(rid, sid)
     hi = np.maximum(rid, sid)
     return pd.DataFrame({"rid": lo, "sid": hi, "emd": emds})
+
+
+_NO_PAIRS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
+
+
+def _window_pairs(
+    anchors: np.ndarray, pool: np.ndarray, key: np.ndarray, reach: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """All (anchor, pool) pairs with |key[a] - key[p]| <= reach, from a
+    sorted window on ``key`` (a centroid coordinate or a pivot distance —
+    any 1-Lipschitz lower bound of the EMD): pairs outside the window never
+    materialize, so a group costs O(n * window) candidates, not O(n^2).
+    Vectorized window expansion, no per-anchor Python loop."""
+    pool_sorted = pool[np.argsort(key[pool], kind="stable")]
+    pks = key[pool_sorted]
+    lo = np.searchsorted(pks, key[anchors] - reach, side="left")
+    hi = np.searchsorted(pks, key[anchors] + reach, side="right")
+    counts = hi - lo
+    total = int(counts.sum())
+    if total == 0:
+        return _NO_PAIRS
+    li = np.repeat(anchors, counts)
+    offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
+    return li, pool_sorted[np.repeat(lo, counts) + offs]
+
+
+def _run_cascade(
+    rows: DataFrame,
+    cfg: NdJoinConfig,
+    theta: float,
+    n_part: int,
+    candidates: Callable[
+        [int, np.ndarray, dict, np.ndarray], tuple[np.ndarray, np.ndarray]
+    ],
+    stats: "JoinStats | None" = None,
+    ordered: bool = False,
+) -> DataFrame:
+    """The partition-batched cascade runner behind every threshold strategy
+    (grid, pivot, bruteforce) — they differ only in how they form candidate
+    groups, never in how a group is verified.
+
+    ``rows`` carries (id, w, grp) plus the columns the strategy's
+    ``candidates(grp, idx, cols, cents) -> (li, ri)`` reads: ``idx`` are the
+    group's row indices into the partition, ``cols`` the partition's
+    columns as numpy arrays (array columns stacked to 2-D; ``w`` is
+    normalized into the cascade instead), ``cents`` the cascade's centroid
+    matrix.  Returned indices are partition rows.
+
+    Hash partitioning on ``grp`` places every row of a group in exactly one
+    partition, so per-GROUP pair generation is unchanged — but the cascade
+    (np.unique row-grouping, support table, dual keys, every pruning stage
+    and the batched exact solver) is built ONCE per partition and runs on
+    the CONCATENATED candidate list.  One pandas DataFrame and cascade per
+    group pays Arrow + cascade-construction overhead per group (9,597 groups of a few rows each at sf0.1 3-d ~ 10 s of the 60 s
+    join-stage CPU) and fragmented the exact stage's support classes below
+    MIN_BATCH (scalar-LP fallback).  Every cascade stage is a sound
+    per-pair screen whose survivors are decided by the same exact-EMD
+    filter: batching changes only WHERE a pair is pruned, never whether it
+    survives.
+
+    The explicit ``n_part`` hash repartition pins the task count: the exact
+    stage is CPU-quadratic per group but tiny in BYTES, so AQE's byte-based
+    coalescing would pack groups (and salted sub-groups) back onto one task
+    (measured: scripts/skew_bench.py).  A user-specified count is exempt
+    from AQE coalescing and adds no exchange beyond the one grouping
+    needs."""
+
+    def run_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pdfs = [pdf for pdf in it if len(pdf)]
+        if not pdfs:
+            return
+        allp = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+        cols = {}
+        for c in allp.columns:
+            v = allp[c].to_numpy()
+            cols[c] = np.stack(v) if v.dtype == object else v
+        casc = _cascade_for(normalize(cols.pop("w").astype(np.float64)), cfg)
+        grps = cols["grp"]
+        order = np.argsort(grps, kind="stable")
+        gs = grps[order]
+        starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
+        ends = np.r_[starts[1:], order.size]
+        li_parts: list[np.ndarray] = []
+        ri_parts: list[np.ndarray] = []
+        for s, e in zip(starts, ends):
+            li, ri = candidates(int(gs[s]), order[s:e], cols, casc.cents)
+            if li.size:
+                li_parts.append(li)
+                ri_parts.append(ri)
+        if not li_parts:
+            return
+        li = np.concatenate(li_parts) if len(li_parts) > 1 else li_parts[0]
+        ri = np.concatenate(ri_parts) if len(ri_parts) > 1 else ri_parts[0]
+        st = CascadeStats()
+        li, ri, emds = casc.run(li, ri, theta, stats=st, slack=cfg.slack)
+        if stats is not None:
+            stats.update(st)
+            stats.add("result_pairs", li.size)
+        if li.size:
+            yield _emit_pairs(cols["id"], li, ri, emds, ordered=ordered)
+
+    return rows.repartition(n_part, "grp").mapInPandas(run_partition, _PAIR_SCHEMA)
 
 
 # minimum rows per task before the parallelism floor widens an input: with
@@ -633,7 +744,9 @@ def emd_join_nd(
             strategy = "grid"
 
     if strategy == "bruteforce":
-        return _auto_wrap(_block_bruteforce(rec, cfg, theta, num_blocks, two_table))
+        return _auto_wrap(
+            _block_bruteforce(rec, cfg, theta, num_blocks, two_table, stats=stats)
+        )
     if strategy == "pivot":
         if two_table:
             raise ValueError("pivot strategy supports self-joins only")
@@ -995,10 +1108,10 @@ def _grid_join(
     )
 
     # hot-cell salting: cells over the cap fan out into block-PAIR sub-groups
-    # (the _block_bruteforce triangle applied per hot cell) so one
-    # applyInPandas task holds ~cell_cap rows, never the whole cell.  Cold
-    # cells keep salt factor 1 — the plan below degenerates to the unsalted
-    # one (sub == 0) with no extra replication.
+    # (the _block_bruteforce triangle applied per hot cell) so one group
+    # holds ~cell_cap rows, never the whole cell.  Cold cells keep salt
+    # factor 1 — the plan below degenerates to the unsalted one (sub == 0)
+    # with no extra replication.
     #
     # The split factor keys off the cell's LOAD (natives + an upper estimate
     # of incoming guests), not the native count alone: when theta spans
@@ -1049,119 +1162,44 @@ def _grid_join(
     else:
         allrows = allrows.withColumn("blk", F.lit(0)).withColumn("sub", F.lit(0))
     grp_key = (F.col("cell") * (max_s * max_s) + F.col("sub")).alias("grp")
-    allrows = allrows.select("id", "w", "side", "cell", "native", "blk", grp_key)
+    allrows = allrows.select("id", "w", "side", "native", "blk", grp_key)
 
-    def join_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Partition-batched cascade (round 12, guide §4): hash partitioning
-        # on "grp" already places every row of a group in exactly one
-        # partition, so per-GROUP pair generation below is unchanged — but
-        # the cascade (np.unique row-grouping, support table, dual keys,
-        # every pruning stage and the batched exact solver) runs ONCE on
-        # the whole partition's rows and on the CONCATENATED candidate
-        # list.  The old one-pandas-DataFrame-per-group applyInPandas paid
-        # Arrow + cascade-construction overhead per group (9,597 groups of
-        # a few rows each at sf0.1 3-d ~ 10 s of the 60 s join-stage CPU)
-        # and fragmented the exact stage's support classes below MIN_BATCH
-        # (scalar-LP fallback).  Output identity: the pair set is generated
-        # per group exactly as before, and every cascade stage is a sound
-        # per-pair screen whose survivors are decided by the same exact-EMD
-        # filter — batching changes only WHERE a pair is pruned, never
-        # whether it survives, so rid/sid/emd are bit-identical.
-        pdfs = [pdf for pdf in it if len(pdf)]
-        if not pdfs:
-            return
-        allp = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
-        ids = allp["id"].to_numpy()
-        W = normalize(np.stack(allp["w"].to_numpy()).astype(np.float64))
-        nat = allp["native"].to_numpy()
-        side = allp["side"].to_numpy()
-        blks = allp["blk"].to_numpy()
-        grps = allp["grp"].to_numpy()
-        casc = _cascade_for(W, cfg)
-        c0 = casc.cents[:, 0]
-        order = np.argsort(grps, kind="stable")
-        gs = grps[order]
-        starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
-        ends = np.r_[starts[1:], order.size]
-        li_parts: list[np.ndarray] = []
-        ri_parts: list[np.ndarray] = []
-        for s, e in zip(starts, ends):
-            idx = order[s:e]
-            if two_table:
-                # anchors: R rows; partners: S rows.  A pair is computed in
-                # the lower of the two native cells, i.e. exactly when at
-                # least one end is native here (never guest x guest).
-                anchors = idx[side[idx] == 0]
-                pool = idx[side[idx] == 1]
-            else:
-                anchors = idx[nat[idx]]
-                pool = idx
-            if anchors.size == 0 or pool.size == 0:
-                continue
-            # candidate generation via a sorted window on centroid dim 0: a
-            # qualifying partner must lie within reach on EVERY centroid
-            # dim (Rubner), so pairs outside the dim-0 window never
-            # materialize
-            pool_sorted = pool[np.argsort(c0[pool], kind="stable")]
-            pcs = c0[pool_sorted]
-            lo = np.searchsorted(pcs, c0[anchors] - reach, side="left")
-            hi = np.searchsorted(pcs, c0[anchors] + reach, side="right")
-            counts = hi - lo
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            li = np.repeat(anchors, counts)
-            # vectorized window expansion (no per-anchor Python loop)
-            offs = np.arange(total) - np.repeat(
-                np.cumsum(counts) - counts, counts
-            )
-            ri = pool_sorted[np.repeat(lo, counts) + offs]
-            if two_table:
-                # at least one native end (pair lives in the lower native
-                # cell)
-                keep = nat[li] | nat[ri]
-            else:
-                # native partners once by id order; guest partners all
-                # (guests never appear in their native cell, so no
-                # self/guest dups)
-                keep = np.where(nat[ri], ids[ri] > ids[li], True)
-            # salted cells: this sub-group owns exactly the pairs whose
-            # block pair is (gi, gj) — each pair computed in one sub-group
-            gi, gj = divmod(int(gs[s]) % (max_s * max_s), max_s)
-            keep &= (np.minimum(blks[li], blks[ri]) == gi) & (
-                np.maximum(blks[li], blks[ri]) == gj
-            )
-            li, ri = li[keep], ri[keep]
-            if li.size:
-                li_parts.append(li)
-                ri_parts.append(ri)
-        if not li_parts:
-            return
-        li = np.concatenate(li_parts) if len(li_parts) > 1 else li_parts[0]
-        ri = np.concatenate(ri_parts) if len(ri_parts) > 1 else ri_parts[0]
-        if stats is not None:
-            from ..kernel import CascadeStats
-
-            st = CascadeStats()
-            li, ri, emds = casc.run(li, ri, theta, stats=st, slack=cfg.slack)
-            stats.update(st)
+    def grid_pairs(key, idx, cols, cents):
+        nat, blks, ids = cols["native"], cols["blk"], cols["id"]
+        if two_table:
+            # anchors: R rows; partners: S rows.  A pair is computed in the
+            # lower of the two native cells, i.e. exactly when at least one
+            # end is native here (never guest x guest).
+            side = cols["side"]
+            anchors = idx[side[idx] == 0]
+            pool = idx[side[idx] == 1]
         else:
-            li, ri, emds = casc.run(li, ri, theta, slack=cfg.slack)
-        if li.size:
-            yield _emit_pairs(ids, li, ri, emds, ordered=two_table)
+            anchors = idx[nat[idx]]
+            pool = idx
+        if anchors.size == 0 or pool.size == 0:
+            return _NO_PAIRS
+        # a qualifying partner lies within reach on EVERY centroid dim
+        # (Rubner), so a dim-0 window loses no pair
+        li, ri = _window_pairs(anchors, pool, cents[:, 0], reach)
+        if two_table:
+            # at least one native end (pair lives in the lower native cell)
+            keep = nat[li] | nat[ri]
+        else:
+            # native partners once by id order; guest partners all (guests
+            # never appear in their native cell, so no self/guest dups)
+            keep = np.where(nat[ri], ids[ri] > ids[li], True)
+        # salted cells: this sub-group owns exactly the pairs whose block
+        # pair is (gi, gj) — each pair computed in one sub-group
+        gi, gj = divmod(key % (max_s * max_s), max_s)
+        keep &= (np.minimum(blks[li], blks[ri]) == gi) & (
+            np.maximum(blks[li], blks[ri]) == gj
+        )
+        return li[keep], ri[keep]
 
-    # explicit hash repartition on the group key: the exact stage is
-    # CPU-quadratic per group but tiny in BYTES, so AQE's byte-based
-    # coalescing would pack salted sub-groups back onto one task and
-    # re-serialize the hot cell (measured: scripts/skew_bench.py).  A
-    # user-specified count is exempt from AQE coalescing, and hash
-    # partitioning on "grp" keeps whole-group locality for the
-    # partition-local grouping in join_partition, so this adds NO extra
-    # exchange — it just pins the task count.
-    spark = rec1.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    allrows = allrows.repartition(n_part, "grp")
-    return allrows.mapInPandas(join_partition, _PAIR_SCHEMA)
+    n_part = int(rec1.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    return _run_cascade(
+        allrows, cfg, theta, n_part, grid_pairs, stats=stats, ordered=two_table
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1187,23 +1225,28 @@ def _pivot_join(
        replicated to window partition (i, j) when
        (d(e, P_far) - d(e, P_near)) / 2 <= theta (+slack) — the condition
        under which a qualifying partner can live across the boundary.
-    3. groupBy(partition) + applyInPandas: base partitions join all their
-       own pairs; window partitions join base-i x base-j rows only.  Each
-       qualifying pair appears exactly once (same base -> base partition;
-       different bases i<j -> window (i,j), where the triangle inequality
-       guarantees both ends satisfy the window rule).
+    3. Rows explode into their partition keys and run through the shared
+       cascade runner (``_run_cascade``, min(P^2, 4 x shuffle partitions)
+       tasks); ``pivot_pairs`` generates the candidates: base partitions
+       join all their own pairs; window partitions join base-i x base-j
+       rows only.  Each qualifying pair appears exactly once (same base ->
+       base partition; different bases i<j -> window (i,j), where the
+       triangle inequality guarantees both ends satisfy the window rule).
 
     The reference's 32 MB spill-and-reround loop (CloudJoinBaseReducer.java:
     150-272) is unnecessary: Spark's shuffle spills, and partition counts
     scale with P^2 windows.
     """
-    P = int(num_pivots)
     piv_rows = (
         rec.select("id", "w")
         .orderBy(F.pmod(F.xxhash64(F.col("id") + F.lit(seed)), F.lit(1 << 31)))
-        .limit(P)
+        .limit(int(num_pivots))
         .collect()
     )
+    if not piv_rows:
+        return rec.sparkSession.createDataFrame([], _PAIR_SCHEMA)
+    # an input with fewer records than requested pivots has them all as pivots
+    P = len(piv_rows)
     PV = normalize(np.array([r["w"] for r in piv_rows], dtype=np.float64))
     reach = theta + cfg.slack
     # pivot-pivot EMD matrix (arbitrary/metric costs only): P(P-1)/2 LPs on
@@ -1367,12 +1410,6 @@ def _pivot_join(
                 # A solved slot whose exact exceeds the cut is equally
                 # dropped by the JVM rule, so membership is unchanged.
                 D = np.where(np.isnan(EX), np.inf, EX)
-                if os.environ.get("MJS_PIVOT_PROFILE"):
-                    print(
-                        f"[assign-prof] n={n} slots_solved="
-                        f"{int(np.isfinite(D).sum())} of {n * P}",
-                        flush=True,
-                    )
             base = D.argmin(axis=1)
             yield pd.DataFrame(
                 {
@@ -1403,21 +1440,6 @@ def _pivot_join(
         rec.count(),  # cached by the pivot sample above: metadata-cheap
     )
     with_d = rec_in.mapInPandas(dists_part, dist_schema)
-    if os.environ.get("MJS_PIVOT_PROFILE"):
-        # dev-only phase split: materialize the assignment stage alone so a
-        # profiler can separate its wall from the window join's (the persist
-        # changes the plan, so never on by default)
-        import time as _time
-
-        with_d = with_d.persist()
-        _t0 = _time.time()
-        _n = with_d.count()
-        print(
-            f"[pivot-profile] assignment stage: {_time.time() - _t0:.2f}s "
-            f"({_n} rows, P={P})",
-            flush=True,
-        )
-
     # partition keys: base partition (b, b) always; window (i, j), i<j, when
     # the hyperplane rule admits a cross-boundary match with that pivot
     db = F.element_at("dists", F.col("base").cast("int") + 1)
@@ -1435,170 +1457,75 @@ def _pivot_join(
         lambda x: x >= 0,
     )
     # arbitrary costs keep the per-pivot exact distances: they are the only
-    # strong pair screen available at join time (see join_part)
+    # strong pair screen available at join time (see pivot_pairs)
     carry = ["id", "w", "base"] + (["dists"] if cfg.rubner_ord is None else [])
     expanded = with_d.select(
         *carry, F.explode(F.array_distinct(keys)).alias("grp")
     )
 
-    def join_part(pdf: pd.DataFrame) -> pd.DataFrame:
-        _prof = os.environ.get("MJS_PIVOT_PROFILE")
-        if _prof:
-            import time as _time
-
-            _t0 = _time.time()
-        empty = pd.DataFrame({"rid": [], "sid": [], "emd": []}).astype(
-            {"rid": "int64", "sid": "int64", "emd": "float64"}
-        )
-        ids = pdf["id"].to_numpy()
-        W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
-        bases = pdf["base"].to_numpy()
-        grp = int(pdf["grp"].iloc[0])
-        gi, gj = divmod(grp, P)
-        casc = _cascade_for(W, cfg)
-        if _prof:
-            _t_setup = _time.time() - _t0
-        # candidate generation via a sorted window on centroid dim 0: the
-        # Rubner contraction means a qualifying partner lies within reach on
-        # every centroid dim, so pairs outside the dim-0 window never
-        # materialize.  This replaces the reference's QuickJoin recursion
-        # for oversized base partitions (CloudJoinBaseReducer.java:277-436,
-        # leaf 5000): an oversized or skewed partition costs
-        # O(n * window) candidates, not O(n^2).
-        c0 = casc.cents[:, 0]
+    def pivot_pairs(key, idx, cols, cents):
+        gi, gj = divmod(key, P)
         if gi == gj:
-            anchors = np.arange(ids.size)
-            pool = anchors
+            anchors = pool = idx
         else:
-            anchors = np.flatnonzero(bases == gi)
-            pool = np.flatnonzero(bases == gj)
+            bases = cols["base"][idx]
+            anchors = idx[bases == gi]
+            pool = idx[bases == gj]
             if anchors.size == 0 or pool.size == 0:
-                return empty
+                return _NO_PAIRS
+        # sorted-window candidates replace the reference's QuickJoin
+        # recursion for oversized base partitions (CloudJoinBaseReducer.java:
+        # 277-436, leaf 5000): an oversized or skewed partition costs
+        # O(n * window) candidates, not O(n^2)
         if cfg.rubner_ord is not None:
             # centroid dim-0 window: |d cent_0| <= reach is implied by the
             # Rubner bound for any Minkowski ground
-            pool_sorted = pool[np.argsort(c0[pool], kind="stable")]
-            pcs = c0[pool_sorted]
-            lo = np.searchsorted(pcs, c0[anchors] - (theta + cfg.slack), side="left")
-            hi = np.searchsorted(pcs, c0[anchors] + (theta + cfg.slack), side="right")
-            cnt = hi - lo
-            total = int(cnt.sum())
-            if total == 0:
-                return empty
-            li = np.repeat(anchors, cnt)
-            # vectorized window expansion (no per-anchor Python loop)
-            offs = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-            ri = pool_sorted[np.repeat(lo, cnt) + offs]
+            li, ri = _window_pairs(anchors, pool, cents[:, 0], reach)
         else:
-            # arbitrary (metric) cost: no centroid geometry, but the SAME
-            # sorted-window shape as the Minkowski branch applies on the
-            # pivot-gi distance axis — every row of this group carries an
-            # EXACT distance to pivot gi (group admission required
-            # dists[gi] finite), and |d(a,P_gi) - d(b,P_gi)| <= theta is
-            # necessary for any qualifying pair (triangle inequality).  So
-            # candidates come from a searchsorted window instead of the
-            # full anchors x pool block (measured: 14.5M block pairs ->
-            # the window's near-survivor set at sf0.1, and the block
-            # materialization was the join stage's largest allocation).
-            # The remaining pivots then screen the window's survivors: the
-            # full LAESA max lb(a,b) = max_p |d(a,p) - d(b,p)| over pivots
-            # exact on BOTH sides, in fixed-size chunks so the temporaries
-            # stay cache-warm instead of one giant cold allocation.
-            Dp = np.stack(pdf["dists"].to_numpy()).astype(np.float64)  # (n, P)
-            key = Dp[:, gi]
-            reach_w = theta + cfg.slack
-            if np.isfinite(key).all():
-                pool_sorted = pool[np.argsort(key[pool], kind="stable")]
-                pcs = key[pool_sorted]
-                lo = np.searchsorted(pcs, key[anchors] - reach_w, side="left")
-                hi = np.searchsorted(pcs, key[anchors] + reach_w, side="right")
-                cnt = hi - lo
-                total = int(cnt.sum())
-                if total == 0:
-                    return empty
-                li = np.repeat(anchors, cnt)
-                # vectorized window expansion (no per-anchor Python loop)
-                offs = np.arange(total) - np.repeat(np.cumsum(cnt) - cnt, cnt)
-                ri = pool_sorted[np.repeat(lo, cnt) + offs]
+            # arbitrary (metric) cost: no centroid geometry, but the same
+            # window applies on the pivot-gi distance axis — every row of
+            # this group carries an EXACT distance to pivot gi (group
+            # admission required dists[gi] finite), and |d(a,P_gi) -
+            # d(b,P_gi)| <= theta is necessary for any qualifying pair
+            # (triangle inequality).  The remaining pivots then screen the
+            # window's survivors: the full LAESA max lb(a,b) = max_p
+            # |d(a,p) - d(b,p)| over pivots exact on BOTH sides, in
+            # fixed-size chunks so the temporaries stay cache-warm.
+            Dp = cols["dists"]  # (rows, P)
+            if np.isfinite(Dp[idx, gi]).all():
+                li, ri = _window_pairs(anchors, pool, Dp[:, gi], reach)
             else:
                 # defensive: the admission rule guarantees finiteness, but a
                 # full block enumeration stays correct if it ever breaks
                 li = np.repeat(anchors, pool.size)
                 ri = np.tile(pool, anchors.size)
-            ok = np.isfinite(Dp)
             keep = np.empty(li.size, dtype=bool)
             step = max(1, (1 << 22) // max(P, 1))
-            reach_pair = theta + cfg.slack
             for s in range(0, li.size, step):
-                ls, rs = li[s : s + step], ri[s : s + step]
+                dl, dr = Dp[li[s : s + step]], Dp[ri[s : s + step]]
                 with np.errstate(invalid="ignore"):  # inf-inf slots masked
-                    diffs = np.abs(Dp[ls] - Dp[rs])
-                diffs[~(ok[ls] & ok[rs])] = 0.0
-                keep[s : s + step] = diffs.max(axis=1) <= reach_pair
+                    diffs = np.abs(dl - dr)
+                diffs[~(np.isfinite(dl) & np.isfinite(dr))] = 0.0
+                keep[s : s + step] = diffs.max(axis=1) <= reach
             if stats is not None:
                 stats.add("laesa_considered", li.size)
                 stats.add("laesa_survivors", int(keep.sum()))
             li, ri = li[keep], ri[keep]
         if gi == gj:
+            ids = cols["id"]
             keep = ids[ri] > ids[li]  # unordered pairs once
             li, ri = li[keep], ri[keep]
-        if _prof:
-            _t_cand = _time.time() - _t0 - _t_setup
-        if li.size == 0:
-            if _prof:
-                print(
-                    f"[join-prof] grp={grp} n={ids.size} cand=0 "
-                    f"setup={_t_setup:.3f} gen={_t_cand:.3f} casc=0.000",
-                    flush=True,
-                )
-            return empty
-        _n_cand = li.size
-        if stats is not None:
-            from ..kernel import CascadeStats
+        return li, ri
 
-            st = CascadeStats()
-            li, ri, emds = casc.run(li, ri, theta, stats=st, slack=cfg.slack)
-            stats.update(st)
-        else:
-            li, ri, emds = casc.run(li, ri, theta, slack=cfg.slack)
-        if _prof:
-            _t_casc = _time.time() - _t0 - _t_setup - _t_cand
-            print(
-                f"[join-prof] grp={grp} n={ids.size} cand={_n_cand} "
-                f"setup={_t_setup:.3f} gen={_t_cand:.3f} casc={_t_casc:.3f}",
-                flush=True,
-            )
-        return _emit_pairs(ids, li, ri, emds)
-
-    # pin the task count: same CPU-quadratic-groups-vs-byte-based-AQE
-    # rationale as _grid_join (see comment there / SCALE.md skew section).
-    # Round 10: the previous groupBy().applyInPandas shape forced the task
-    # count to spark.sql.shuffle.partitions, which packed ~P^2/2
-    # CPU-weighted groups into (cores) bins by hash — measured ~50%
-    # parallel efficiency at sf0.1 (234.8 core-s of group work, 32 tasks,
-    # 15-19 s of join-stage wall vs the 7.3 s ideal; worst group 6.8 s).
-    # repartition(4x, "grp") + mapInPandas with a partition-local groupby
-    # keeps whole-group locality (hash on grp) and hands the scheduler 4
-    # bins per core to pack — same results, no second exchange, and the
-    # task count no longer aliases the shuffle-partition knob.  Partition
-    # memory is bounded: the concat holds one partition's (id, w, base,
-    # dists) rows, ~P*P-th of total replicated rows per partition.
-    spark = rec.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    # task count: P^2 groups packed into 4 bins per core.  Round 10: a task
+    # count of spark.sql.shuffle.partitions packed ~P^2/2 CPU-weighted
+    # groups into (cores) bins by hash — measured ~50% parallel efficiency
+    # at sf0.1 (234.8 core-s of group work, 32 tasks, 15-19 s of join-stage
+    # wall vs the 7.3 s ideal; worst group 6.8 s).  Partition memory is
+    # bounded: one partition holds ~P*P-th of the replicated rows.
+    n_part = int(rec.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     target = int(min(max(P * P, 1), 4 * n_part))
-    expanded = expanded.repartition(target, "grp")
-
-    def part_runner(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pdfs = [pdf for pdf in it if len(pdf)]
-        if not pdfs:
-            return
-        allp = pd.concat(pdfs, ignore_index=True)
-        for _, sub in allp.groupby("grp", sort=False):
-            out = join_part(sub.reset_index(drop=True))
-            if len(out):
-                yield out
-
-    return expanded.mapInPandas(part_runner, _PAIR_SCHEMA)
+    return _run_cascade(expanded, cfg, theta, target, pivot_pairs, stats=stats)
 
 
 # ---------------------------------------------------------------------------
@@ -1611,14 +1538,18 @@ def _block_bruteforce(
     theta: float,
     num_blocks: int,
     two_table: bool = False,
+    stats: "JoinStats | None" = None,
 ) -> DataFrame:
     """All-pairs block join (J7 semantics, bsp/BaselineBSP.join:274-345).
 
     Self-join: records hash into ``num_blocks`` blocks; each unordered block
-    pair (i <= j) is one applyInPandas group — a triangle of B(B+1)/2 tasks
+    pair (i <= j) is one candidate group — a triangle of B(B+1)/2 groups
     with B-fold replication, never a row-level cross join.  Two-table: the
     full B x B block grid, R rows fan out over rows of the grid, S rows over
-    columns."""
+    columns.  Its candidates are every pair of the block pair, independent
+    of any geometric window, which keeps it the other strategies' oracle;
+    the groups run through the shared cascade runner in one wave of tasks
+    (at most one per core)."""
     P = int(num_blocks)
     blk = F.pmod(F.xxhash64(F.col("id")), F.lit(P))
     rec = rec.withColumn("blk", blk)
@@ -1639,32 +1570,33 @@ def _block_bruteforce(
         "id", "w", "side", "blk", F.explode(F.array_distinct(groups)).alias("grp")
     )
 
-    def join_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
-        blks = pdf["blk"].to_numpy()
-        side = pdf["side"].to_numpy()
-        grp = int(pdf["grp"].iloc[0])
-        gi, gj = divmod(grp, P)
-        casc = _cascade_for(W, cfg)
+    def block_pairs(key, idx, cols, cents):
+        gi, gj = divmod(key, P)
+        blks = cols["blk"][idx]
         if two_table:
-            left = np.flatnonzero((side == 0) & (blks == gi))
-            right = np.flatnonzero((side == 1) & (blks == gj))
-            li = np.repeat(left, right.size)
-            ri = np.tile(right, left.size)
+            side = cols["side"][idx]
+            left = idx[(side == 0) & (blks == gi)]
+            right = idx[(side == 1) & (blks == gj)]
         elif gi == gj:
-            order = np.argsort(ids, kind="stable")
+            order = idx[np.argsort(cols["id"][idx], kind="stable")]
             a, b = np.triu_indices(order.size, k=1)
-            li, ri = order[a], order[b]
+            return order[a], order[b]
         else:
-            left = np.flatnonzero(blks == gi)
-            right = np.flatnonzero(blks == gj)
-            li = np.repeat(left, right.size)
-            ri = np.tile(right, left.size)
-        li, ri, emds = casc.run(li, ri, theta, slack=cfg.slack)
-        return _emit_pairs(ids, li, ri, emds, ordered=two_table)
+            left = idx[blks == gi]
+            right = idx[blks == gj]
+        return np.repeat(left, right.size), np.tile(right, left.size)
 
-    return expanded.groupBy("grp").applyInPandas(join_block, _PAIR_SCHEMA)
+    # one wave of tasks: the B(B+1)/2 (two-table B^2) groups are few and
+    # equally sized, and every mapInPandas task pays a fixed Arrow/worker
+    # round trip — on a 4-core host 32 bare tasks took 2.1-2.7 s against
+    # 0.4-0.6 s for 4, which made a 900-row reference join 2.5x slower at
+    # spark.sql.shuffle.partitions tasks than at one per core
+    n_groups = P * P if two_table else P * (P + 1) // 2
+    n_part = rec.sparkSession.sparkContext.defaultParallelism
+    return _run_cascade(
+        expanded, cfg, theta, min(n_groups, n_part), block_pairs,
+        stats=stats, ordered=two_table,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2104,7 +2036,8 @@ def emd_topk_nd(
     scored = None
     if n * (n - 1) // 2 < k:
         scored = _block_bruteforce(
-            rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks
+            rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks,
+            stats=stats,
         )
     else:
         # the ceiling is the kth-smallest EXACT EMD among the sample's
@@ -2155,7 +2088,8 @@ def emd_topk_nd(
             # join would both blow up — fall back to the all-pairs oracle,
             # which needs no radius (round-4 ADVICE, emd_join_nd.py:1669)
             scored = _block_bruteforce(
-                rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks
+                rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks,
+                stats=stats,
             )
     if scored is None:
         if stats is not None:

@@ -139,6 +139,21 @@ def test_pivot_matches_bruteforce(spark, hist_df, bins_2d):
         assert pv[k] == pytest.approx(bf[k], abs=1e-9)
 
 
+def test_pivot_fewer_records_than_pivots(spark, bins_2d):
+    """An input with fewer records than requested pivots uses every record
+    as a pivot; an empty input joins nothing."""
+    rows = [(i + 1, [float((i * j) % 4 + 1) for j in range(B)]) for i in range(5)]
+    df = spark.createDataFrame(rows, "id long, w array<double>")
+    got = _collect_pairs(
+        emd_join_nd(df, bins_2d, 1.0, strategy="pivot", num_pivots=16)
+    )
+    expect = _kernel_oracle(rows, bins_2d, 1.0)
+    assert expect
+    assert got == pytest.approx(expect, abs=1e-9)
+    empty = spark.createDataFrame([], "id long, w array<double>")
+    assert emd_join_nd(empty, bins_2d, THETA, strategy="pivot").count() == 0
+
+
 def test_pivot_collinear(spark):
     rng = np.random.default_rng(5)
     n, b = 30, 8
@@ -253,6 +268,22 @@ def test_join_stats_accumulators(spark, hist_df, bins_2d):
     pruned = sum(v for k, v in snap.items() if k.startswith("pruned_"))
     assert pruned + snap["exact_evaluated"] == snap["candidates"]
     assert n <= snap["exact_evaluated"]
+
+
+@pytest.mark.parametrize("strategy", ["grid", "pivot", "bruteforce"])
+def test_join_stats_count_every_strategy(spark, hist_df, bins_2d, strategy):
+    """Every threshold strategy runs through the shared cascade runner, so
+    every one fills JoinStats: the emitted-pair counter equals the output
+    row count and the exact stage is counted."""
+    from melody_join_spark.operators.emd_join_nd import JoinStats
+
+    stats = JoinStats(spark.sparkContext)
+    res = emd_join_nd(hist_df, bins_2d, THETA, strategy=strategy, stats=stats)
+    n = len(res.collect())
+    snap = stats.snapshot()
+    assert n > 0
+    assert snap["result_pairs"] == n
+    assert snap["exact_evaluated"] > 0
 
 
 def test_duplicate_free_output(spark, hist_df, bins_2d):

@@ -105,6 +105,22 @@ def test_nd_collinear_delegation_is_pure_codegen(spark):
     assert "EvalPython" in plan2 or "FlatMapGroupsInPandas" in plan2
 
 
+@pytest.mark.parametrize("strategy", ["grid", "pivot", "bruteforce"])
+def test_nd_strategies_share_partition_runner(spark, strategy):
+    """Every d>=2 threshold strategy verifies its groups in one
+    partition-batched mapInPandas runner, never a per-group
+    groupBy().applyInPandas (one pandas frame and cascade per group)."""
+    import numpy as np
+
+    from melody_join_spark.operators.emd_join_nd import emd_join_nd
+
+    hist = lineitem_histograms(spark, SF).select("id", "w")
+    bins2 = np.array([[float(i), float(j)] for i in range(4) for j in range(4)])
+    plan = plan_of(emd_join_nd(hist, bins2, 0.5, strategy=strategy))
+    assert "MapInPandas" in plan
+    assert "FlatMapGroupsInPandas" not in plan
+
+
 def test_quality_filter_scan_shaped(spark):
     """quality_filter is a pure scan-side projection: no shuffle, no Python."""
     from melody_join_spark.operators.text import quality_filter
