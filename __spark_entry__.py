@@ -1076,10 +1076,10 @@ def _q_pipeline_llm_prep(spark, sf_dir):
     cache boundary blocks the pushdown, so the gate predicates evaluate
     across the 32 cached partitions (~4 s total).  At real scale the
     input arrives in thousands of splits and both guards no-op."""
-    from melody_join_spark.cache import release_on_gc
+    from melody_join_spark.cache import persist, release_on_gc
     from melody_join_spark.operators.dedup import _spread, dedup_paragraphs
 
-    docs = _spread(_docs(spark, sf_dir)).persist()
+    docs = persist(_spread(_docs(spark, sf_dir)))
     docs.count()
     qk = quality_filter(docs).where("kept").select("doc_id")
     rk = repetition_filter(docs).where("kept").select("doc_id")
@@ -1092,7 +1092,7 @@ def _q_pipeline_llm_prep(spark, sf_dir):
     # executed twice end-to-end.  Training runs first and is a single
     # sequential action, so it materializes the cache without a
     # concurrent-first-reader race; no count() barrier needed.
-    dp = dedup_paragraphs(base).persist()
+    dp = persist(dedup_paragraphs(base))
     out = perplexity_score(
         dp, text_col="text_clean", vocab_size=LM_VOCAB
     ).orderBy("doc_id")

@@ -1,61 +1,20 @@
-"""Deterministic release of internal ``persist()`` handles.
+"""One way to materialize an operator intermediate and release it.
 
-Several operators cache an intermediate DataFrame that feeds multiple
-branches of one lazy plan (e.g. both sides of a self-join).  The cache must
-outlive the *returned* DataFrame's whole plan lifetime — callers routinely
-derive (`.orderBy(...)`, `.select(...)`) from the result and drop the
-original object long before triggering the action, so unpersisting directly
-on result GC would evict the cache mid-query and force the upstream chain
-(scan + agg + UDF signatures) to recompute once per join side — a measured
-3-6x regression.
+``persist(df)`` caches ``df`` plus a dropped literal column holding a tag
+unique to the handle, giving every cache a private plan identity.  Spark
+matches caches by analyzed-plan equality, so untagged twins share one entry,
+one handle's ``unpersist()`` evicts the other's cache, and an operator cache
+substitutes into any user plan of the same shape.  Tagged, ``unpersist()``
+reaches only the handle's own entry.  The optimizer prunes the unused column,
+so the cached plan is exactly the one ``df`` optimizes to (a tag *filter*
+also gives private identity but perturbs predicate pushdown), and frames
+derived from the handle read its in-memory columns with pruning.
 
-Two-phase release instead:
-
-1. ``release_on_gc(result, *cached)`` registers the caches and arms a
-   weakref on ``result``; when ``result`` is garbage-collected the entry is
-   only MARKED releasable (nothing is unpersisted yet).
-2. Marked entries are actually unpersisted at the next operator invocation
-   (every registration starts with a ``drain()``), or explicitly via
-   ``release_caches()``.  In a sequential workload query N's caches are
-   freed the moment query N+1 is constructed — after N's action completed —
-   so a long-lived session holds at most one query's worth of cached
-   self-join inputs instead of accumulating them forever.
-
-Interleaved lazy queries can at worst lose a cache early (recompute), never
-correctness.  ``release_caches(spark)`` remains the explicit big hammer
-(bench.py uses the equivalent ``spark.catalog.clearCache()``).
-
-**Plan-equality hazard (the round-10 "second execution costs 3x" defect).**
-``DataFrame.unpersist()`` does NOT release a private handle: Spark's
-CacheManager uncaches every entry whose *analyzed plan* ``sameResult``s the
-DataFrame's — so draining a DEAD query's handle evicts a LIVE,
-identically-planned cache registered by a later query.  Concretely:
-``dedup_clusters`` runs ``jaccard_pairs`` internally and its persisted
-``docs`` handle goes dead when the query function returns; the deferred
-drain then fires during the NEXT ``release_on_gc`` — i.e. right after
-``dedup_jaccard_ngram``'s own ``docs.persist()``, whose plan is identical —
-and evicts the fresh cache, so the tokenize+freq+groupBy chain recomputes
-once per consumer (measured 3x wall: 21.6 s vs 6.9 s at sf0.1; survives
-``clearCache()``/GC barriers because the eviction happens *after* the new
-persist).  ``drain`` therefore skips unpersisting any marked handle whose
-plan matches a live entry's (including the caches being registered by the
-in-flight ``release_on_gc`` call): the live twin now owns the single
-CacheManager entry both handles point at, and will release it on its own
-schedule.
-
-**Ownership tokens (round 12).** The live-twin guard above only sees twins
-that are already registered here — but a twin cache exists from the moment
-the newer query calls ``.persist()``, which is typically at the START of
-its construction, long before its own ``release_on_gc``.  A dead handle
-drained in that window (by some INNER operator's registration) would evict
-the new twin: measured on pipeline_llm_prep re-executed in one session,
-whose freshly-counted ``docs`` cache was evicted by the drain inside
-``dedup_paragraphs``, collapsing the heavy gate scan back into the
-single-split file read (6 s -> 35-66 s per re-run).  Each registration now
-also captures the identity of the CacheManager object backing the handle;
-``drain`` unpersists only when the manager still holds THAT object — a
-different object means someone newer re-cached the plan and the dead
-handle has nothing left to release.
+Release is two-phase: ``release_on_gc(result, *cached)`` arms a weakref on
+``result`` whose collection only marks the entry releasable; marked entries
+are unpersisted at the next registration or ``drain()``.  Callers derive from
+a result and drop it before the action runs, so unpersisting on collection
+would evict a cache mid-query (early release costs a recompute, no more).
 """
 
 from __future__ import annotations
@@ -63,130 +22,53 @@ from __future__ import annotations
 import itertools
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-__all__ = ["release_on_gc", "drain", "release_caches"]
+__all__ = ["persist", "release_on_gc", "drain", "release_caches"]
 
-
-class _Entry:
-    __slots__ = ("dfs", "tokens", "releasable")
-
-    def __init__(self, dfs):
-        self.dfs = dfs
-        self.tokens = [_cache_token(df) for df in dfs]
-        self.releasable = False
+_ids = itertools.count()  # handle tags and entry keys
+# handle -> its source frame: a release armed on the source waits for the handle
+_made: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_entries: dict[int, list[DataFrame]] = {}
+_releasable: set[int] = set()
 
 
-_entries: dict[int, _Entry] = {}
-_ids = itertools.count()
+def persist(df: DataFrame) -> DataFrame:
+    """Lazily cache ``df`` under a private plan identity; a frame this
+    helper made is returned unchanged."""
+    if df in _made:
+        return df
+    tag = F.lit(f"melody_join_spark.cache:{next(_ids)}")
+    out = df.withColumn("__cache_tag", tag).drop("__cache_tag").persist()
+    _made[out] = df
+    return out
 
 
-def _analyzed(df: DataFrame):
-    return df._jdf.queryExecution().analyzed()
-
-
-def _cache_token(df: DataFrame):
-    """Identity of the CacheManager object backing ``df``'s persist, captured
-    at registration.  Lets ``drain`` tell *our* cache entry from a twin
-    registered later under the same plan: ``DataFrame.unpersist()`` uncaches
-    by plan equality, so without ownership a dead handle's drain evicts a
-    NEWER query's freshly-materialized cache whenever that query has not yet
-    reached its own ``release_on_gc`` (the round-12 pipeline_llm_prep
-    re-execution defect: the second run's ``docs`` cache — persisted and
-    counted at construction start — was evicted by the drain fired from
-    ``dedup_paragraphs``'s inner registration, collapsing the gate scan to
-    the raw single-split file, 6 s -> 35-66 s per isolated re-run)."""
-    try:
-        sess = df.sparkSession
-        cm = sess._jsparkSession.sharedState().cacheManager()
-        # Spark 4.x signature: lookupCachedData(Dataset); 3.x also had a
-        # bare (LogicalPlan) overload — try the Dataset form first
-        try:
-            opt = cm.lookupCachedData(df._jdf)
-        except Exception:
-            opt = cm.lookupCachedData(_analyzed(df))
-        if opt.isDefined():
-            cd = opt.get()
-            try:
-                rep = cd.cachedRepresentation()
-            except Exception:
-                rep = cd
-            return sess._jvm.System.identityHashCode(rep)
-    except Exception:
-        pass
-    return None
-
-
-def _owns_cache(df: DataFrame, token) -> bool:
-    """True when the CacheManager entry for ``df``'s plan is still the one
-    captured at registration (or ownership is unknown — fail open to the
-    pre-round-12 unpersist behavior so nothing ever leaks)."""
-    if token is None:
-        return True
-    now = _cache_token(df)
-    if now is None:  # nothing cached under this plan: unpersist is a no-op
-        return False
-    return now == token
-
-
-def drain(force: bool = False, protect: tuple[DataFrame, ...] = ()) -> int:
+def drain(force: bool = False) -> int:
     """Unpersist every entry whose result DataFrame has been collected by
     the garbage collector (all entries when ``force``).  Returns the number
-    of entries released.
-
-    A marked handle whose analyzed plan ``sameResult``s a LIVE entry's (or
-    one of ``protect`` — the caches the in-flight ``release_on_gc`` call is
-    about to register) is dropped WITHOUT unpersisting: Spark uncaches by
-    plan equality, so unpersisting the dead twin would evict the live
-    query's freshly-registered cache (see module docstring)."""
-    live_plans = []
-    if not force:
-        live = [df for e in _entries.values() if not e.releasable
-                for df in e.dfs]
-        live.extend(protect)
-        for df in live:
+    of entries released."""
+    done = [k for k in _entries if force or k in _releasable]
+    for k in done:
+        for df in _entries.pop(k):
             try:
-                live_plans.append(_analyzed(df))
+                df.unpersist()
             except Exception:
-                pass  # session stopped — nothing can be live
-    released = 0
-    for k in list(_entries):
-        e = _entries[k]
-        if e.releasable or force:
-            for df, token in zip(e.dfs, e.tokens):
-                try:
-                    if live_plans:
-                        plan = _analyzed(df)
-                        if any(plan.sameResult(lp) for lp in live_plans):
-                            continue  # live twin owns this cache entry now
-                    # ownership check (round 12): only unpersist when the
-                    # CacheManager still holds the object captured at THIS
-                    # entry's registration — a different object means a
-                    # newer query re-cached the same plan after ours was
-                    # cleared, and plan-equality unpersist would evict its
-                    # live cache (see _cache_token).  force bypasses: the
-                    # caller wants the session cache-free regardless.
-                    if not force and not _owns_cache(df, token):
-                        continue
-                    df.unpersist()
-                except Exception:
-                    pass  # session already stopped — nothing to release
-            del _entries[k]
-            released += 1
-    return released
+                pass  # session already stopped — nothing to release
+    _releasable.intersection_update(_entries)
+    return len(done)
 
 
 def release_on_gc(result: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Tie ``cached`` DataFrames' persist lifetime to ``result`` (two-phase:
-    mark on GC, unpersist at the next registration or explicit drain)."""
-    drain(protect=cached)
-    entry = _Entry(list(cached))
-    _entries[next(_ids)] = entry
-
-    def _mark(e=entry):
-        e.releasable = True
-
-    weakref.finalize(result, _mark)
+    """Tie ``cached`` handles' lifetime to ``result`` (two-phase: mark on
+    GC, unpersist at the next registration or explicit drain).  Only
+    handles made by :func:`persist` are accepted."""
+    if any(df not in _made for df in cached):
+        raise ValueError("release_on_gc takes only frames made by cache.persist")
+    drain()
+    k = next(_ids)
+    _entries[k] = list(cached)
+    weakref.finalize(result, _releasable.add, k)
     return result
 
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import persist, release_on_gc
 from .operators.emd_join_nd import build_config, emd_join_nd, emd_topk_nd
 from .sources.histogram_text import read_flat_doubles, read_histogram_text
 
@@ -173,7 +174,7 @@ def run_generate_from_properties(
             # persist the crawl snapshot: every enabled feature would
             # otherwise re-trigger the full URL fetch, and flaky fetches
             # could make features see DIFFERENT document sets in one run
-            media = media.persist()
+            media = persist(media)
             crawled = media
 
     out: dict[str, DataFrame] = {}
@@ -199,7 +200,5 @@ def run_generate_from_properties(
         # materialization above runs; afterwards it follows the last
         # feature frame's lifetime (early release = recompute, never
         # correctness — cache.py contract)
-        from .cache import release_on_gc
-
         release_on_gc(next(reversed(out.values())), crawled)
     return out

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..cache import persist, release_on_gc
 from .text import (
     WINNOW_K,
     WINNOW_W,
@@ -352,10 +353,12 @@ def dup_clusters(
         # (tokenize + prefix join + verify) serially at low parallelism —
         # measured 38.7 s vs 9.4 s for the jaccard-fed bench query.  count()
         # materializes the same chain ONCE at full parallelism.
-        edge_probe = pairs.select(
-            F.col("rid").cast("long").alias("a"),
-            F.col("sid").cast("long").alias("b"),
-        ).persist()
+        edge_probe = persist(
+            pairs.select(
+                F.col("rid").cast("long").alias("a"),
+                F.col("sid").cast("long").alias("b"),
+            )
+        )
         if edge_probe.count() <= driver_threshold:
             probe = edge_probe.collect()
             edge_probe.unpersist()
@@ -376,8 +379,6 @@ def dup_clusters(
             )
         )
         star = _star_rounds(edges_ab, max_iter)
-        from ..cache import release_on_gc
-
         # stable star edges point node -> component min; roots and isolated
         # nodes label themselves
         members = star.select("a", F.col("b").alias("lbl")).unionByName(
@@ -396,28 +397,30 @@ def dup_clusters(
                 F.coalesce("lbl", F.col("a")).alias("cluster_id"),
             )
         )
-        cached = (star,) if edge_probe is None else (star, edge_probe)
-        return release_on_gc(out, *cached)
+        # star is a local checkpoint: Spark's ContextCleaner reclaims it
+        return out if edge_probe is None else release_on_gc(out, edge_probe)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}")
     # symmetric edges from ONE pass over pairs: a union of two selects would
     # embed the (possibly expensive) upstream pairs plan twice in the same
     # job — with jaccard_pairs upstream that doubles the whole tokenize +
     # prefix-join + verify chain.  explode keeps a single scan.
-    edges = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("rid").cast("long").alias("a"),
-                    F.col("sid").cast("long").alias("b"),
-                ),
-                F.struct(
-                    F.col("sid").cast("long").alias("a"),
-                    F.col("rid").cast("long").alias("b"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.a", "e.b").persist()
+    edges = persist(
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("rid").cast("long").alias("a"),
+                        F.col("sid").cast("long").alias("b"),
+                    ),
+                    F.struct(
+                        F.col("sid").cast("long").alias("a"),
+                        F.col("rid").cast("long").alias("b"),
+                    ),
+                )
+            ).alias("e")
+        ).select("e.a", "e.b")
+    )
     nodes = edges.select("a").distinct()
     if ids is not None:
         nodes = nodes.unionByName(
@@ -459,10 +462,8 @@ def dup_clusters(
         edges.unpersist()
         raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
     edges.unpersist()
-    from ..cache import release_on_gc
-
-    out = labels.select(F.col("a").alias("id"), F.col("lbl").alias("cluster_id"))
-    return release_on_gc(out, labels)
+    # labels is a local checkpoint: Spark's ContextCleaner reclaims it
+    return labels.select(F.col("a").alias("id"), F.col("lbl").alias("cluster_id"))
 
 
 def dup_clusters_oracle_sql(pairs_sql: str, ids_sql: str | None = None) -> str:
@@ -691,8 +692,7 @@ def jaccard_pairs(
     )
     # docs feeds the prefix explode AND both verify sides: persist, or the
     # tokenize+freq+vocab+groupBy chain runs three times
-    docs = docs.withColumn("prefix", F.slice("toks", F.lit(1), prefix_len)).persist()
-    from ..cache import release_on_gc
+    docs = persist(docs.withColumn("prefix", F.slice("toks", F.lit(1), prefix_len)))
     pr = docs.select("id", "nt", F.posexplode("prefix").alias("p", "tok"))
     # cross-corpus: restrict the join SIDES up front (side bit encoded in
     # the id), so same-side candidate pairs never materialize
@@ -829,14 +829,13 @@ def winnow_pairs(
     total = df.agg(F.count("*").alias("__n_docs"))
     # persist: ex feeds THREE plan branches (sizes + both self-join sides);
     # without it the codegen fingerprint scan + fp window re-run per branch
-    ex = (
+    ex = persist(
         ex0.withColumn("df_", F.count("*").over(Window.partitionBy("fp")))
         .join(F.broadcast(total))
         .filter(F.col("df_") <= F.col("__n_docs") * F.lit(max_df_frac))
         .select("id", "fp")
-        .persist()
     )
-    sizes = ex.groupBy("id").agg(F.count("*").alias("n_fp")).persist()
+    sizes = persist(ex.groupBy("id").agg(F.count("*").alias("n_fp")))
     a, b = ex.alias("a"), ex.alias("b")
     inter = (
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.id") < F.col("b.id")))
@@ -858,8 +857,6 @@ def winnow_pairs(
         .filter((F.col("n_common") >= min_common) & (F.col("sim") >= threshold))
         .select("doc_a", "doc_b", "n_common", "sim")
     )
-    from ..cache import release_on_gc
-
     return release_on_gc(res, ex, sizes)
 
 
@@ -1063,10 +1060,10 @@ def minhash_lsh_pairs(
     banded equi-join, no ordering constraint, each side's signatures
     computed once.  Id namespaces are independent; pairs are (df id,
     other id)."""
-    band_keys = _minhash_band_keys(
-        df, id_col, text_col, num_hashes, bands, shingle, seed
-    ).persist()  # both join sides derive from the signature pandas-UDF chain
-    from ..cache import release_on_gc
+    # both join sides derive from the signature pandas-UDF chain
+    band_keys = persist(
+        _minhash_band_keys(df, id_col, text_col, num_hashes, bands, shingle, seed)
+    )
 
     if other is None:
         a = band_keys.select(F.col("id").alias("rid"), "band", "key")
@@ -1077,21 +1074,21 @@ def minhash_lsh_pairs(
             .select("rid", "sid")
             .distinct()
         )
-        docs = _jaccard_tokens(df, id_col, text_col, shingle).persist()
+        docs = persist(_jaccard_tokens(df, id_col, text_col, shingle))
         return release_on_gc(
             _verify_jaccard(cand, docs, threshold), band_keys, docs
         )
-    other_keys = _minhash_band_keys(
-        other, id_col, text_col, num_hashes, bands, shingle, seed
-    ).persist()
+    other_keys = persist(
+        _minhash_band_keys(other, id_col, text_col, num_hashes, bands, shingle, seed)
+    )
     cand = (
         band_keys.select(F.col("id").alias("rid"), "band", "key")
         .join(other_keys.select(F.col("id").alias("sid"), "band", "key"), ["band", "key"])
         .select("rid", "sid")
         .distinct()
     )
-    docs_a = _jaccard_tokens(df, id_col, text_col, shingle).persist()
-    docs_b = _jaccard_tokens(other, id_col, text_col, shingle).persist()
+    docs_a = persist(_jaccard_tokens(df, id_col, text_col, shingle))
+    docs_b = persist(_jaccard_tokens(other, id_col, text_col, shingle))
     return release_on_gc(
         _verify_jaccard(cand, docs_a, threshold, docs_b=docs_b),
         band_keys,
@@ -1152,11 +1149,12 @@ def simhash_pairs(
         F.shiftrightunsigned("simhash", c * width).bitwiseAND(F.lit((1 << width) - 1))
         for c in range(chunks)
     ]
-    keys = sh.select(
-        "id",
-        "simhash",
-        F.posexplode(F.array(*chunk_exprs)).alias("chunk", "key"),
-    ).persist()  # both join sides derive from the simhash pandas-UDF chain
+    # both join sides derive from the simhash pandas-UDF chain
+    keys = persist(
+        sh.select(
+            "id", "simhash", F.posexplode(F.array(*chunk_exprs)).alias("chunk", "key")
+        )
+    )
     a = keys.select(F.col("id").alias("rid"), F.col("simhash").alias("ha"), "chunk", "key")
     b = keys.select(F.col("id").alias("sid"), F.col("simhash").alias("hb"), "chunk", "key")
     cand = (
@@ -1166,8 +1164,6 @@ def simhash_pairs(
         .distinct()
     )
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    from ..cache import release_on_gc
-
     out = cand.select("rid", "sid", ham.alias("hamming")).where(
         F.col("hamming") <= max_hamming
     )
@@ -1375,9 +1371,7 @@ def dedup_paragraphs(
     from .text import doc_lines
 
     t = F.coalesce(F.col(text_col), F.lit(""))
-    src = df.select(
-        F.col(id_col).alias("_id"), doc_lines(t).alias("_lines")
-    ).persist()
+    src = persist(df.select(F.col(id_col).alias("_id"), doc_lines(t).alias("_lines")))
     try:
         ex = src.select(
             "_id", F.posexplode("_lines").alias("_pos", "_line")
@@ -1425,8 +1419,6 @@ def dedup_paragraphs(
                 ).alias("n_removed"),
             )
         )
-        from ..cache import release_on_gc
-
         return release_on_gc(out, src)
     except Exception:
         src.unpersist()

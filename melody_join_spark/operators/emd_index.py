@@ -38,13 +38,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import persist
 from ..kernel import normalize
 from .emd_join_nd import (
     NdJoinConfig,
     _cascade_for,
     _centroid_cols,
     _grid_boundaries,
-    _parallelism_floor,
     build_config,
 )
 
@@ -106,7 +106,7 @@ def emd_index_build(
     rec = hist.where(mass).select(
         F.col(id_col).cast("long").alias("id"), F.col(w_col).alias("w")
     )
-    rec0 = _centroid_cols(rec, bin_points, "w").persist()
+    rec0 = persist(_centroid_cols(rec, bin_points, "w"))
     bnds = _grid_boundaries(rec0, d, grid)
     # deterministic dual seeds: hash-ordered sample, stored in the manifest
     # so load() rebuilds the IDENTICAL config
@@ -165,14 +165,11 @@ def emd_index_build(
                 rec0.unpersist()
                 return emd_index_load(spark, path)
 
-    # parallelism floor AFTER rec0 is materialized (the boundary agg and
-    # seed sample above scan it): a small-but-dense table arriving as ONE
-    # byte-sized scan split would otherwise serialize the partitioned-by-
-    # cell write into a single task; probing the cached relation costs no
-    # extra upstream execution (see emd_join_nd._build_grid_ctx)
-    out = _parallelism_floor(rec0, rec0.count()).withColumn(
-        "cell", _cell_expr(bnds, grid)
-    )
+    # hash-partition on the cell before the partitioned write: each task
+    # then holds whole cells and writes one file per non-empty cell, where
+    # a round-robin layout wrote one file per (task, cell) and every search
+    # opened them all
+    out = rec0.withColumn("cell", _cell_expr(bnds, grid)).repartition("cell")
     out.write.mode("overwrite").partitionBy("cell").parquet(f"{vdir}/records")
     rec0.unpersist()
     spark.createDataFrame(

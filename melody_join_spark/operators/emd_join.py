@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache import persist, release_on_gc
+
 __all__ = [
     "pair_emd_expr",
     "with_mean_position",
@@ -106,12 +108,16 @@ def emd_threshold_join(
         # persist each side like the self-join path persists h: without the
         # materialization boundary, CollapseProject inlines the O(B^2) cum
         # expression into the per-PAIR emd expression — measured 7x slower
-        hr = with_mean_position(hist, positions).withColumn(
-            "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
-        ).persist()
-        hs = with_mean_position(other, positions).withColumn(
-            "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
-        ).persist()
+        hr = persist(
+            with_mean_position(hist, positions).withColumn(
+                "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
+            )
+        )
+        hs = persist(
+            with_mean_position(other, positions).withColumn(
+                "cell", F.floor(F.col("mpos") / F.lit(cw)).cast("long")
+            )
+        )
         a = _pair_frame(hr, "a")
         b = _pair_frame(hs, "b")
         a = a.withColumn(
@@ -125,8 +131,6 @@ def emd_threshold_join(
         pairs = a.join(b, on=[a.probe == b.cell_b]).where(
             F.abs(F.col("mpos_a") - F.col("mpos_b")) <= F.lit(cw)
         )
-        from ..cache import release_on_gc
-
         return release_on_gc(
             _finish_threshold(pairs, threshold, positions), hr, hs
         )
@@ -162,7 +166,7 @@ def emd_threshold_join(
     # concurrently, and concurrent first readers of an unmaterialized cache
     # RACE — each recomputed the whole upstream chain (four full media
     # decodes measured on the generate->join path, guide §5 caching).
-    h = h.persist()
+    h = persist(h)
     h.count()
     a, b = _pair_frame(h, "a"), _pair_frame(h, "b")
 
@@ -179,8 +183,6 @@ def emd_threshold_join(
         )
         out.append(_finish_threshold(pruned, threshold, positions))
     res = out[0].unionAll(out[1])
-    from ..cache import release_on_gc
-
     # normalize pair order to rid < sid for output parity with the oracle
     return release_on_gc(
         res.select(
@@ -237,7 +239,7 @@ def emd_topk_join(
     n_pairs_needed = k
     # three actions consume hist (seed sample, both cell-join sides):
     # persist once
-    hist = hist.persist()
+    hist = persist(hist)
     # deterministic seed sample in xxhash64(id) order — stable across
     # runs/partitionings like the reference's seeded random sample
     # (NEPreMapper.java:130-132), but unbiased on id-clustered data where
@@ -253,16 +255,12 @@ def emd_topk_join(
     )
     seed_emds = [r.emd for r in spairs.select("emd").orderBy("emd").limit(n_pairs_needed).collect()]
     if len(seed_emds) < n_pairs_needed:
-        from ..cache import release_on_gc
-
         return release_on_gc(
             emd_topk_join(hist, k, positions, strategy="bruteforce"), hist
         )
     bound = float(seed_emds[-1])
 
     cand = emd_threshold_join(hist, max(bound, 1e-12), positions, strategy="cells")
-    from ..cache import release_on_gc
-
     return release_on_gc(_rank_topk(cand, k), hist)
 
 

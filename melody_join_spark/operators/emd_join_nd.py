@@ -63,6 +63,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..cache import persist, release_on_gc
 from ..kernel import (
     CascadeStats,
     DualPotentials,
@@ -589,7 +590,9 @@ def _grid_boundaries(
         for k in range(d)
     ]
     row = hist.agg(*aggs).collect()[0]
-    return np.array([row[f"b{k}"] for k in range(d)], dtype=np.float64)
+    # the sketches are null when there are no records; then any bounds do
+    zeros = [0.0] * (grid - 1)
+    return np.array([row[f"b{k}"] or zeros for k in range(d)], dtype=np.float64)
 
 
 def _derive_grid(n: int, d: int) -> int:
@@ -697,13 +700,7 @@ def emd_join_nd(
             )
         )
 
-    from ..cache import release_on_gc
-
-    _auto_rec = None  # probe-persisted rec, released with the result
-
-    def _auto_wrap(df: DataFrame) -> DataFrame:
-        return release_on_gc(df, _auto_rec) if _auto_rec is not None else df
-
+    held: list[DataFrame] = []  # the auto probe's cache, released with the result
     if strategy == "auto":
         # physical-strategy pick, Catalyst-style: the caller states WHAT
         # (threshold join under this ground), the engine picks HOW.
@@ -726,8 +723,8 @@ def emd_join_nd(
         # cached, so the chosen strategy reuses them instead of re-running
         # the upstream histogram build (ADVICE round-3: the same
         # unpersisted-double-execution class as dup_clusters/pivot)
-        rec = rec.persist()
-        _auto_rec = rec
+        rec = persist(rec)
+        held.append(rec)
         n_probe = rec.limit(small_probe + 1).count()
         if n_probe <= small_probe:
             strategy = "bruteforce"
@@ -744,8 +741,9 @@ def emd_join_nd(
             strategy = "grid"
 
     if strategy == "bruteforce":
-        return _auto_wrap(
-            _block_bruteforce(rec, cfg, theta, num_blocks, two_table, stats=stats)
+        return release_on_gc(
+            _block_bruteforce(rec, cfg, theta, num_blocks, two_table, stats=stats),
+            *held,
         )
     if strategy == "pivot":
         if two_table:
@@ -767,16 +765,16 @@ def emd_join_nd(
         # persist: the pivot sample (orderBy+limit collect) and the
         # assignment mapInPandas each consume rec — without the boundary the
         # upstream (histogram build at sf-scale) executes twice
-        rec_c = rec if _auto_rec is not None else rec.persist()
+        rec = persist(rec)
         if num_pivots is None:
             num_pivots = _derive_pivots(
-                rec_c.count(), arbitrary_cost=cfg.rubner_ord is None
+                rec.count(), arbitrary_cost=cfg.rubner_ord is None
             )
         return release_on_gc(
             _pivot_join(
-                rec_c, cfg, theta, num_pivots=num_pivots, seed=seed, stats=stats
+                rec, cfg, theta, num_pivots=num_pivots, seed=seed, stats=stats
             ),
-            rec_c,
+            rec,
         )
     if strategy != "grid":
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -824,24 +822,25 @@ def emd_join_nd(
             # persist the unioned record table BEFORE the side split: each
             # .where(side=...) otherwise re-executes BOTH sides' upstream
             # histogram builds (measured 2x the whole query)
-            rec_c = rec if _auto_rec is not None else rec.persist()
+            rec = persist(rec)
             out = emd_threshold_join(
-                _prep(rec_c.where(F.col("side") == 0)),
+                _prep(rec.where(F.col("side") == 0)),
                 theta + slack,
                 positions=pos[order],
                 strategy="cells",
-                other=_prep(rec_c.where(F.col("side") == 1)),
+                other=_prep(rec.where(F.col("side") == 1)),
             )
-            return release_on_gc(out, rec_c)
-        return _auto_wrap(
+            return release_on_gc(out, rec)
+        return release_on_gc(
             emd_threshold_join(
                 _prep(rec), theta + slack, positions=pos[order], strategy="cells"
-            )
+            ),
+            *held,
         )
 
     ctx = _build_grid_ctx(rec, bin_points, cfg, grid, seed=seed, ground=ground)
     out = _grid_join(ctx, theta, stats=stats, two_table=two_table, cell_cap=cell_cap)
-    return _auto_wrap(release_on_gc(out, ctx.rec1))
+    return release_on_gc(out, ctx.rec1, *held)
 
 
 @dataclass
@@ -874,7 +873,7 @@ def _build_grid_ctx(
     # re-execute the upstream plan (for the bench bridge tables that is a
     # 3-join + groupBy chain — measured ~40% of the whole d=2 query before
     # this cache)
-    rec0 = _centroid_cols(rec, bin_points, "w").persist()
+    rec0 = persist(_centroid_cols(rec, bin_points, "w"))
     if grid is None:
         # ONE fused job for count + boundaries (round 12, guide §2.1/§2.6:
         # the auto-grid path used to pay two sequential driver actions —
@@ -914,9 +913,11 @@ def _build_grid_ctx(
         n_rec = int(row["n"])
         grid = _derive_grid(n_rec, d)
         want = np.arange(1, grid) / grid
+        # the sketches are null when there are no records; then any bounds do
+        zeros = [0.0] * len(fine_probs)
         bnds = np.stack(
             [
-                np.interp(want, fine_probs, np.asarray(row[f"b{k}"], dtype=np.float64))
+                np.interp(want, fine_probs, np.asarray(row[f"b{k}"] or zeros, dtype=np.float64))
                 for k in range(d)
             ]
         )
@@ -953,11 +954,10 @@ def _build_grid_ctx(
     # execute the whole chain one extra time (measured ~4 s per query on
     # the sf0.1 bridge tables).  rec1, the expensive per-record stat pass,
     # is what actually needs the width; rec0's cheap JVM aggregates do not.
-    rec1 = (
+    rec1 = persist(
         _parallelism_floor(rec0, n_rec)
         .withColumn("cell", cell.cast("long"))
         .withColumn("st", stat_udf("w"))
-        .persist()
     )
 
     # one agg over the (small) cell space: per-cell centroid bbox, per-cell
@@ -1646,17 +1646,12 @@ def emd_knn(
         sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
         cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
 
-    from ..cache import release_on_gc
-
-    _holds: list[DataFrame] = []
-    q = queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
+    # persist BEFORE the sizing probe (round 12, same class as the
+    # auto-strategy persist in emd_join_nd): the probe and the later consumer
+    # (collect, or the cogroup's q-side) would otherwise each re-execute the
+    # query-side upstream chain
+    q = persist(queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w")))
     if distributed is None or distributed is False:
-        # persist BEFORE the sizing probe (round 12, same class as the
-        # auto-strategy persist in emd_join_nd): the probe and the later
-        # consumer (collect, or the cogroup's q-side) would otherwise each
-        # re-execute the query-side upstream chain
-        q = q.persist()
-        _holds.append(q)
         n_probe = q.limit(collect_threshold + 1).count()
         big = n_probe > collect_threshold
         if big and distributed is False:
@@ -1819,17 +1814,13 @@ def emd_knn(
     dbr = db.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
     if distributed:
         # cogrouped block path: no driver materialization of either side.
-        # Persist + materialize BOTH sides first (round 12): probing .rdd
+        # Materialize the persisted q side first (round 12): probing .rdd
         # on the unpersisted AQE chains executed their query stages (the
         # documented _parallelism_floor trap, +4.0-4.6 s per probe on the
         # sf0.1 bridge chains), and the cogroup's two branches then
         # re-executed the chains again — four upstream executions per join.
-        # With the caches the chains run once each, and the counts they
+        # With the cache the chains run once each, and the counts they
         # return drive the blocking.
-        lvl = q.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            q = q.persist()
-            _holds.append(q)
         nq_rows = q.count()
         # db side: count WITHOUT caching — the array-column cache write
         # costs more than the one chain re-execution it would save
@@ -1914,7 +1905,7 @@ def emd_knn(
         .where(F.col("rank") <= k)
         .select("qid", "nid", "emd", "rank")
     )
-    return release_on_gc(out, *_holds) if _holds else out
+    return release_on_gc(out, q)
 
 
 # ---------------------------------------------------------------------------
@@ -1991,7 +1982,7 @@ def emd_topk_nd(
             cfg = build_config(
                 bin_points, seed_weights=sw, seed=seed, ground=ground
             )
-        rec = rec.persist()
+        rec = persist(rec)
         sample_src = rec
 
     # driver-side seed bound for the global kth distance (QNEPreReducer.java:

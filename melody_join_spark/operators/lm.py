@@ -56,6 +56,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from melody_join_spark.cache import persist
 from melody_join_spark.operators.text import _WS, _word_tokens
 
 __all__ = [
@@ -151,7 +152,7 @@ def unigram_lm(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    cnt = cnt.persist()
+    cnt = persist(cnt)
     try:
         total = cnt.agg(F.coalesce(F.sum("c"), F.lit(0))).collect()[0][0]
         top = (
@@ -610,12 +611,11 @@ def bigram_lm(
             lambda x: F.struct(F.lit(1).alias("k"), x.alias("w")),
         ),
     )
-    cnt = (
+    cnt = persist(
         df.select(F.explode(tagged).alias("e"))
         .select(F.col("e.k").alias("k"), F.col("e.w").alias("w"))
         .groupBy("k", "w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     try:
         uni = cnt.where(F.col("k") == 0)

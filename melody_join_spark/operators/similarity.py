@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import persist, release_on_gc
+
 _log = logging.getLogger("melody_join_spark.similarity")
 
 __all__ = [
@@ -181,7 +183,6 @@ def _cosine_topk_blocked(
     local selection then sorts by (cosine desc, nid asc), the exact global
     tie order, so exact-duplicate vectors never drop nondeterministically
     at the block boundary.  ~3x the matmul's constant; same asymptotics."""
-    from ..cache import release_on_gc
     from .dedup import _spread
 
     db = emb.select(F.col(id_col).alias("nid"), _as_double(vec_col).alias("v"))
@@ -194,7 +195,7 @@ def _cosine_topk_blocked(
     # only (column-pruned parquet count ~ metadata) — caching the vector
     # payload costs more than the one re-execution it saves (measured on
     # the emd_knn cogroup, same shape).
-    q = _spread(q).persist()
+    q = persist(_spread(q))
     nq_rows = q.count()
     nd_rows = db.count()
     # ROW-count-based blocking (round 12): partition counts were the wrong
@@ -811,7 +812,7 @@ def lsh_cosine_pairs(
         bits = (acc >= 0).astype(np.int32)
         return pd.Series(list(bits))
 
-    e = e.persist()  # feeds the sketch plus both verify sides
+    e = persist(e)  # feeds the sketch plus both verify sides
     sk = e.withColumn("bits", bits_udf("v"))
     # band join and dedup move only (id, key) — the 128-double vectors join
     # back AFTER dedup, so the widest shuffle carries ids, not arrays
@@ -824,7 +825,7 @@ def lsh_cosine_pairs(
             ])
         ).alias("band", "key"),
     )
-    band_keys = band_keys.persist()  # sketch expressions run once, not twice
+    band_keys = persist(band_keys)  # sketch expressions run once, not twice
     a = band_keys.select(F.col("id").alias("rid"), "band", "key")
     b = band_keys.select(F.col("id").alias("sid"), "band", "key")
     cand = (
@@ -835,7 +836,6 @@ def lsh_cosine_pairs(
     )
     va = e.select(F.col("id").alias("rid"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     vb = e.select(F.col("id").alias("sid"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    from ..cache import release_on_gc
 
     out = (
         cand.join(va, "rid")
@@ -913,10 +913,9 @@ def ivf_cosine_pairs(
     exactly once and never changes a cosine, so the output (and the spec
     fixture hash) is invariant.
     """
-    e = (
+    e = persist(
         emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
         .withColumn("nrm", _norm_expr("v"))
-        .persist()
     )
     if nlist is None:
         # sqrt(N) lists: ~sqrt(N) vectors per list -> N^1.5 candidate work
@@ -1020,11 +1019,9 @@ def ivf_cosine_pairs(
         )
         return pd.concat(parts, ignore_index=True) if parts else _empty
 
-    from ..cache import release_on_gc
-
     # one cheap count pass decides whether any list needs the block-pair
     # decomposition; asg persists so count + verify execute assign once
-    asg = asg.persist()
+    asg = persist(asg)
     cnt_rows = asg.groupBy("list_id").count().collect()  # <= nlist rows
     splits = {
         int(r["list_id"]): -(-int(r["count"]) // list_cap) for r in cnt_rows
@@ -1411,7 +1408,7 @@ def similar_pairs(
                     "relation — pass n= (or an explicit method)"
                 )
             if not _count_is_cheap(emb):
-                persisted = emb = emb.persist()
+                persisted = emb = persist(emb)
             n = emb.count()
         method = choose_similarity_method(n, threshold, recall_target)
     if method == "ivf" and nlist is None and n is not None:
@@ -1432,7 +1429,5 @@ def similar_pairs(
     else:
         raise ValueError(f"unknown method {method!r}")
     if persisted is not None:
-        from ..cache import release_on_gc
-
         out = release_on_gc(out, persisted)
     return out

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..cache import persist
+
 __all__ = [
     "EVENTS_SCHEMA",
     "stream_events",
@@ -262,17 +264,15 @@ def streaming_near_dedup(
     )
 
     rows = num_hashes // bands
-    ref_keys = (
+    ref_keys = persist(
         _minhash_band_keys(
             reference, id_col, text_col, num_hashes, bands, shingle, seed
         )
         .select(F.col("id").alias("sid"), "band", "key")
-        .persist()
     )
-    ref_toks = (
+    ref_toks = persist(
         _jaccard_tokens(reference, id_col, text_col, shingle)
         .select(F.col("id").alias("sid"), F.col("toks").alias("tb"), F.col("nt").alias("nb"))
-        .persist()
     )
     sig = _make_sig_udf(num_hashes, shingle, seed)(F.col(text_col))
     band_key = F.transform(

@@ -1,18 +1,19 @@
-"""Regression tests for the round-10 "second execution costs 3x" defect.
+"""Regression tests for the "second execution costs 3x" defect class.
 
-Root cause (round 11): ``DataFrame.unpersist()`` uncaches by analyzed-plan
-``sameResult``, so ``cache.drain()`` of a DEAD query's persist handle
-evicted a LIVE, identically-planned cache registered by a later query —
-``dedup_clusters`` (which runs jaccard_pairs internally) followed by
-``dedup_jaccard_ngram`` recomputed the tokenize+freq+groupBy chain three
-times (21.6 s vs 6.9 s at sf0.1).  ``drain`` now skips unpersisting any
-marked handle whose plan matches a live entry's (including the caches the
-in-flight ``release_on_gc`` call is registering).
+``DataFrame.unpersist()`` uncaches by analyzed-plan equality, so draining a
+DEAD query's persist handle used to evict a LIVE, identically-planned cache
+of a later query — ``dedup_clusters`` (which runs jaccard_pairs internally)
+followed by ``dedup_jaccard_ngram`` recomputed the tokenize+freq+groupBy
+chain three times (21.6 s vs 6.9 s at sf0.1).  ``cache.persist`` gives each
+handle a private plan identity, so a handle's release reaches only its own
+cache entry.
 """
 
 from __future__ import annotations
 
 import gc
+import pathlib
+import re
 import time
 
 import pytest
@@ -37,17 +38,17 @@ def test_drain_protects_live_plan_twin(spark):
     """Draining a dead handle must NOT evict a live, identically-planned
     cache registered by a later query (Spark uncaches by plan equality)."""
     cache.drain(force=True)
-    c0 = _tiny(spark).persist()
+    c0 = cache.persist(_tiny(spark))
     r0 = c0.select(F.sum("n").alias("s"))
     cache.release_on_gc(r0, c0)
     r0.count()
     del r0, c0
     gc.collect()  # entry 0 marked releasable, drained at next registration
 
-    c1 = _tiny(spark).persist()  # SAME analyzed plan as c0
+    c1 = cache.persist(_tiny(spark))  # SAME source plan as c0
     r1 = c1.select(F.sum("n").alias("s"))
-    # this drain unpersists the dead c0 handle; before the fix the
-    # plan-matching uncache also killed c1's registration
+    # this drain unpersists the dead c0 handle; a plan-matching uncache
+    # would also kill c1's registration
     cache.release_on_gc(r1, c1)
     r1.count()
     assert c1.storageLevel.useMemory, (
@@ -61,11 +62,10 @@ def test_drain_protects_live_plan_twin(spark):
 def test_drain_skips_foreign_recached_twin(spark):
     """Round-12 defect: a dead handle drained DURING a newer same-planned
     query's construction (after its persist+materialize, before its own
-    release_on_gc) must not evict the new cache.  The live-twin guard can't
-    see it — it is in the CacheManager but not yet registered here — so the
-    ownership token has to catch it."""
+    release_on_gc) must not evict the new cache, which is in the
+    CacheManager but not yet registered for release."""
     cache.drain(force=True)
-    c0 = _tiny(spark).persist()
+    c0 = cache.persist(_tiny(spark))
     r0 = c0.select(F.sum("n").alias("s"))
     cache.release_on_gc(r0, c0)
     r0.count()
@@ -75,11 +75,11 @@ def test_drain_skips_foreign_recached_twin(spark):
 
     # the "newer query": persist + materialize the SAME plan, but do NOT
     # register it yet (its release_on_gc would come at construction end)
-    c1 = _tiny(spark).persist()
+    c1 = cache.persist(_tiny(spark))
     c1.count()
     # an inner operator's registration fires the drain of the dead entry;
-    # c1 is in neither _entries nor protect
-    other = spark.range(0, 5).persist()
+    # c1 is not registered yet
+    other = cache.persist(spark.range(0, 5))
     cache.release_on_gc(other.select(F.sum("id").alias("s")), other)
     assert c1.storageLevel.useMemory, (
         "dead handle's drain evicted the newer query's re-registered cache"
@@ -90,9 +90,9 @@ def test_drain_skips_foreign_recached_twin(spark):
 
 
 def test_drain_force_still_releases_everything(spark):
-    """release_caches/force bypasses the twin protection: everything goes."""
+    """release_caches/force releases live entries too: everything goes."""
     cache.drain(force=True)
-    c0 = _tiny(spark).persist()
+    c0 = cache.persist(_tiny(spark))
     r0 = c0.select(F.sum("n").alias("s"))
     cache.release_on_gc(r0, c0)
     r0.count()
@@ -155,3 +155,39 @@ def test_jaccard_second_execution_cache_survives(spark):
     # and both verify sides); 2.5x slack absorbs same-host noise while still
     # catching the defect's 3x signature
     assert wall2 <= max(2.5 * wall1, wall1 + 2.0), (wall1, wall2)
+
+
+def test_helper_cache_stays_out_of_raw_twin(spark):
+    """A helper handle's cache never substitutes into the same chain built
+    by a user, while frames derived from the handle read it."""
+    cache.drain(force=True)
+    h = cache.persist(_tiny(spark))
+    assert cache.persist(h) is h
+    h.count()
+
+    def cached_plan(df):
+        return df._jdf.queryExecution().withCachedData().toString()
+
+    assert "InMemoryRelation" in cached_plan(h.select("n"))
+    assert "InMemoryRelation" not in cached_plan(_tiny(spark))
+    with pytest.raises(ValueError, match="cache.persist"):
+        cache.release_on_gc(h, _tiny(spark))
+    cache.release_on_gc(h.select("n"), h)
+    cache.drain(force=True)
+
+
+def test_library_persists_only_through_cache_helper():
+    """Every library cache goes through ``cache.persist``: a raw
+    ``.persist(`` elsewhere would bring plan-shared caches back."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    helper = root / "melody_join_spark" / "cache.py"
+    files = sorted((root / "melody_join_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    hits = [
+        f"{f.relative_to(root)}:{i}"
+        for f in files
+        if f != helper
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if re.search(r"\.persist\(", line)
+    ]
+    assert not hits, hits

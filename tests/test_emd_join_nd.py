@@ -154,6 +154,28 @@ def test_pivot_fewer_records_than_pivots(spark, bins_2d):
     assert emd_join_nd(empty, bins_2d, THETA, strategy="pivot").count() == 0
 
 
+@pytest.mark.parametrize(
+    "strategy, sides",
+    [(s, "self") for s in ("grid", "pivot", "bruteforce")]
+    + [
+        (s, sides)
+        for s in ("grid", "bruteforce")
+        for sides in ("r_empty", "s_empty", "both_empty")
+    ],
+)
+def test_empty_input_joins_nothing(spark, hist_df, bins_2d, strategy, sides):
+    """An empty self-join input, or an empty side of a two-table join,
+    yields no pairs under every strategy."""
+    empty = spark.createDataFrame([], "id long, w array<double>")
+    if sides == "self":
+        out = emd_join_nd(empty, bins_2d, THETA, strategy=strategy)
+    else:
+        r = hist_df if sides == "s_empty" else empty
+        s = hist_df if sides == "r_empty" else empty
+        out = emd_join_nd(r, bins_2d, THETA, strategy=strategy, other=s)
+    assert out.count() == 0
+
+
 def test_pivot_collinear(spark):
     rng = np.random.default_rng(5)
     n, b = 30, 8

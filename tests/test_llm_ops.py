@@ -1157,19 +1157,24 @@ def test_cross_width_derivation(spark, emb):
     )
 
     dp = spark.sparkContext.defaultParallelism
+
+    def derived(n):
+        return min(
+            max(dp, -(-(n * n // 2) // _CROSS_PAIRS_PER_TASK)), _CROSS_MAX_WAVES * dp
+        )
+
     # no count hint -> exactly the cluster width (the old local[32] shape)
     assert _cross_width(spark) == dp
     # small N -> floor holds (every core gets work, nothing shatters)
     assert _cross_width(spark, 1000) == dp
-    # bench/driver shapes (N <= ~11k on 32 cores) keep the historical 32
-    assert _cross_width(spark, 6400) == dp
+    # bench/driver shapes (N <= ~11k on 32 cores) keep the historical 32;
+    # 6400 vectors need 11 tasks, so below 11 cores the derivation widens
+    assert _cross_width(spark, 6400) == derived(6400)
     # huge N -> widens past the floor but never beyond the wave cap:
     # 10^6 vectors = 5e11 pairs would need 2.5e5 tasks; capped at 8 waves
     n = 10**6
     w = _cross_width(spark, n)
-    assert w == min(
-        max(dp, -(-(n * n // 2) // _CROSS_PAIRS_PER_TASK)), _CROSS_MAX_WAVES * dp
-    )
+    assert w == derived(n)
     assert w == _CROSS_MAX_WAVES * dp  # the cap binds at 10^6 on any <=31k-core cluster
     # plan shape: the width actually lands in the physical plan
     df = cosine_pairs(emb, 0.25, n=n)
