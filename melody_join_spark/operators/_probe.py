@@ -1,0 +1,177 @@
+"""Query-block runners for the lookup operators.
+
+MELODY-Join answers a lookup by sending a small query side to every
+partition of the large side (its kNN guest path, SURVEY.md §2.3 J5).  The
+operators here (``emd_knn``, ``cosine_topk``, ``emd_index_search``,
+``streaming_emd_join_nd``; ``ivf_search`` takes the probe only) supply two
+functions and nothing else:
+
+- ``prep(q_pdf) -> payload``: the query block in the form the kernel wants
+  (ids, normalized weights, centroids, ...);
+- ``block(payload, db_pdf) -> pdf``: one query block against one database
+  block.
+
+**Lookup** (:func:`lookup_rows` + :func:`broadcast_blocks`): the size probe
+collects at most ``collect_threshold + 1`` query rows and is itself the
+collect, so the query chain runs once and needs no cache.  ``prep`` runs
+once on the driver, its payload is broadcast, and one ``mapInPandas`` runs
+``block`` on every Arrow batch of the database.
+
+**Blocked** (:func:`cogroup_blocks`): no driver collect.  The query side is
+spread, persisted and counted, the database side only counted (caching its
+payload costs more than the one re-execution it saves: persisting both sides
+read 1.11x on ``emd_knn_big``).  Blocking is by row count: each
+(q-block, db-block) group holds bq x bd rows with bq * bd <= 2^22, so the
+per-group (nq, ndb) score or lower-bound matrix stays ~32 MB, and
+bq / bd ~ nq / nd so neither side fragments; the replicated row volume
+(nq * dcN + nd * qcN) then grows as ~sqrt of the total block work, the best
+an all-pairs block cover can do.  (Scan partition counts are the wrong
+signal: AQE coalesces the query chains to one partition on small inputs,
+and the cached relation reports its pre-coalesce shape.)  The group count
+is floored at 4x the cluster parallelism, scaling the query axis, so small
+inputs do not land on a handful of CPU-dense groups.  Queries hash into
+``qcN`` blocks and replicate across the ``dcN`` database blocks and vice
+versa; ``cogroup().applyInPandas`` runs ``prep`` once per group and then
+``block``.  Both children are hash-repartitioned on the keys to
+``spark.sql.shuffle.partitions``: the block work is CPU-bound while its
+shuffle bytes are small, so AQE byte-coalescing would pack the stage onto a
+few tasks (5 tasks / 9.9 s median on ``emd_knn_big``), and an explicit
+count satisfies CoGroup's clustering requirement without an extra exchange.
+
+Both paths run the same ``block`` on the same ``prep`` output, so they
+return the same values; only the grouping of rows into blocks differs.
+"""
+
+from __future__ import annotations
+
+from collections.abc import Callable, Iterator
+from typing import Any
+
+import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from ..cache import persist, release_on_gc
+
+Prep = Callable[[pd.DataFrame], Any]
+Block = Callable[[Any, pd.DataFrame], pd.DataFrame]
+
+_BLOCK_ENTRIES = 1 << 22
+
+
+def lookup_rows(
+    q: DataFrame,
+    collect_threshold: int,
+    distributed: bool | None,
+    op: str,
+    alternative: str,
+) -> pd.DataFrame | None:
+    """The size probe, which is also the collect: the query side as pandas
+    when it has at most ``collect_threshold`` rows, else ``None`` (take the
+    blocked path).  ``distributed=True`` skips the probe; ``False`` on an
+    oversized query side raises ``ValueError`` naming ``alternative``."""
+    if distributed:
+        return None
+    rows = q.limit(collect_threshold + 1).collect()
+    if len(rows) <= collect_threshold:
+        return pd.DataFrame(rows, columns=q.columns)
+    if distributed is False:
+        raise ValueError(
+            f"{op}: query set exceeds collect_threshold={collect_threshold} "
+            f"rows; collecting it would bottleneck the driver. {alternative}"
+        )
+    return None
+
+
+def broadcast_blocks(
+    db: DataFrame, payload: Any, block: Block, schema: str
+) -> DataFrame:
+    """Broadcast ``payload`` and run ``block(payload, pdf)`` on every Arrow
+    batch of ``db`` in one ``mapInPandas``.  A ``None`` payload (no query
+    rows) emits nothing."""
+    b = db.sparkSession.sparkContext.broadcast(payload)
+
+    def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        payload_ = b.value
+        for pdf in it:
+            if payload_ is None or not len(pdf):
+                continue
+            out = block(payload_, pdf)
+            if len(out):
+                yield out
+
+    return db.mapInPandas(part, schema)
+
+
+def cogroup_blocks(
+    q: DataFrame,
+    db: DataFrame,
+    q_id: str,
+    db_id: str,
+    prep: Prep,
+    block: Block,
+    schema: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The blocked path (module docstring): returns the per-group output
+    and the query side's cache handle, which the caller releases with its
+    final result."""
+    from .dedup import _spread
+
+    q = persist(_spread(q))
+    nq_rows = q.count()
+    nd_rows = db.count()
+    ratio = max(nq_rows, 1) / max(nd_rows, 1)
+    bq = max(1, int((_BLOCK_ENTRIES * ratio) ** 0.5))
+    bd = max(1, int((_BLOCK_ENTRIES / ratio) ** 0.5))
+    qcN = max(1, -(-nq_rows // bq))
+    dcN = max(1, -(-nd_rows // bd))
+    spark = q.sparkSession
+    par = 4 * spark.sparkContext.defaultParallelism
+    if qcN * dcN < par:
+        qcN = -(-par // dcN)
+    # key columns LONG on both sides: int-typed exploded literals silently
+    # fail to align with pmod(xxhash64)'s long in the cogroup
+    q2 = q.withColumn("qc", F.pmod(F.xxhash64(q_id), F.lit(qcN))).withColumn(
+        "dc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(dcN)]))
+    )
+    d2 = db.withColumn("dc", F.pmod(F.xxhash64(db_id), F.lit(dcN))).withColumn(
+        "qc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(qcN)]))
+    )
+
+    def group(qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(qpdf) or not len(dpdf):
+            return pd.DataFrame()
+        return block(prep(qpdf), dpdf)
+
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    local = (
+        q2.repartition(n_part, "qc", "dc")
+        .groupBy("qc", "dc")
+        .cogroup(d2.repartition(n_part, "qc", "dc").groupBy("qc", "dc"))
+        .applyInPandas(group, schema)
+    )
+    return local, q
+
+
+def run_query_blocks(
+    q: DataFrame,
+    db: DataFrame,
+    keys: tuple[str, str],
+    prep: Prep,
+    block: Block,
+    schema: str,
+    finish: Callable[[DataFrame], DataFrame],
+    *,
+    distributed: bool | None,
+    collect_threshold: int,
+    op: str,
+    alternative: str,
+) -> DataFrame:
+    """Probe, then the lookup or the blocked path; ``finish`` turns the
+    per-block output into the operator's result (the global ranking)."""
+    qpdf = lookup_rows(q, collect_threshold, distributed, op, alternative)
+    if qpdf is not None:
+        payload = prep(qpdf) if len(qpdf) else None
+        return finish(broadcast_blocks(db, payload, block, schema))
+    local, held = cogroup_blocks(q, db, *keys, prep, block, schema)
+    return release_on_gc(finish(local), held)

@@ -31,7 +31,6 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -40,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist
 from ..kernel import normalize
+from ._probe import broadcast_blocks, lookup_rows
 from .emd_join_nd import (
     NdJoinConfig,
     _cascade_for,
@@ -260,16 +260,16 @@ def emd_index_search(
     ``emd_knn(distributed=True)`` for table-scale query sides)."""
     cfg, bnds, grid = index.cfg, index.bnds, index.grid
     d = bnds.shape[0]
-    n_probe = queries.limit(collect_threshold + 1).count()
-    if n_probe > collect_threshold:
-        raise ValueError(
-            f"emd_index_search: query set exceeds collect_threshold="
-            f"{collect_threshold}; use emd_join_nd(other=...) or "
-            "emd_knn(distributed=True) for table-scale query sides."
-        )
-    qrows = queries.select(id_col, w_col).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    QW = normalize(np.array([r[1] for r in qrows], dtype=np.float64))
+    q = queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
+    qpdf = lookup_rows(
+        q, collect_threshold, False, "emd_index_search",
+        "Use emd_join_nd(other=...) or emd_knn(distributed=True) for "
+        "table-scale query sides.",
+    )
+    qids = qpdf["id"].to_numpy().astype(np.int64)
+    # the reshape keeps an empty query set two-dimensional
+    W0 = np.array(qpdf["w"].tolist(), dtype=np.float64)
+    QW = normalize(W0.reshape(-1, cfg.bin_points.shape[0]))
     qc = QW @ cfg.bin_points
 
     # reachable cells per dim via the boundary arrays (the join's guest
@@ -284,7 +284,6 @@ def emd_index_search(
             jlo = int(np.searchsorted(hi_edges[k], qc[qi, k] - reach, "left"))
             jhi = int(np.searchsorted(lo_edges[k], qc[qi, k] + reach, "right"))
             ranges.append(range(jlo, jhi))
-        idxs = [0] * d
         # cartesian expansion of the per-dim windows (small: windows are a
         # few cells wide per dim)
         def rec_expand(k: int, acc: int) -> None:
@@ -297,50 +296,41 @@ def emd_index_search(
         rec_expand(0, 0)
     probe_cells = sorted(cells)
 
-    spark = index.records.sparkSession
-    b_q = spark.sparkContext.broadcast((qids, QW, qc))
-
-    def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, QW_, qc_ = b_q.value
+    def block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        qids_, QW_, qc_ = payload
         nq = len(qids_)
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy()
-            W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
-            # ONE cascade over [queries; partition rows]: the full screen
-            # stack + batched exact stage, exactly like the join's in-cell
-            # verify, with all query pairs stacked into one candidate list
-            casc = _cascade_for(np.vstack([QW_, W]), cfg)
-            li_parts, ri_parts = [], []
-            for qi in range(nq):
-                if cfg.rubner_ord is not None:
-                    lb = np.linalg.norm(
-                        casc.cents[nq:] - qc_[qi], ord=cfg.rubner_ord, axis=1
-                    )
-                    cand = np.flatnonzero((lb <= reach) & (ids != qids_[qi]))
-                else:
-                    cand = np.flatnonzero(ids != qids_[qi])
-                if cand.size:
-                    li_parts.append(np.full(cand.size, qi, dtype=np.int64))
-                    ri_parts.append(cand + nq)
-            if not li_parts:
-                continue
-            li, ri, emds = casc.run(
-                np.concatenate(li_parts),
-                np.concatenate(ri_parts),
-                float(threshold),
-                slack=cfg.slack,
-            )
-            yield pd.DataFrame(
-                {
-                    "qid": qids_[li],
-                    "nid": ids[ri - nq],
-                    "emd": emds,
-                }
-            )
+        ids = pdf["id"].to_numpy()
+        W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
+        # ONE cascade over [queries; partition rows]: the full screen
+        # stack + batched exact stage, exactly like the join's in-cell
+        # verify, with all query pairs stacked into one candidate list
+        casc = _cascade_for(np.vstack([QW_, W]), cfg)
+        li_parts, ri_parts = [], []
+        for qi in range(nq):
+            if cfg.rubner_ord is not None:
+                lb = np.linalg.norm(
+                    casc.cents[nq:] - qc_[qi], ord=cfg.rubner_ord, axis=1
+                )
+                cand = np.flatnonzero((lb <= reach) & (ids != qids_[qi]))
+            else:
+                cand = np.flatnonzero(ids != qids_[qi])
+            if cand.size:
+                li_parts.append(np.full(cand.size, qi, dtype=np.int64))
+                ri_parts.append(cand + nq)
+        if not li_parts:
+            return pd.DataFrame()
+        li, ri, emds = casc.run(
+            np.concatenate(li_parts),
+            np.concatenate(ri_parts),
+            float(threshold),
+            slack=cfg.slack,
+        )
+        return pd.DataFrame({"qid": qids_[li], "nid": ids[ri - nq], "emd": emds})
 
     pruned = index.records.where(F.col("cell").isin(probe_cells))
-    return pruned.select("id", "w").mapInPandas(
-        part, "qid long, nid long, emd double"
+    return broadcast_blocks(
+        pruned.select("id", "w"),
+        (qids, QW, qc),
+        block,
+        "qid long, nid long, emd double",
     )

@@ -73,6 +73,7 @@ from ..kernel import (
     normalize,
     projection_positions,
 )
+from ._probe import run_query_blocks
 
 __all__ = [
     "NdJoinConfig",
@@ -1630,12 +1631,12 @@ def emd_knn(
     lists then merge through one small shuffle.
 
     Large query sets take the NO-collect block path (``distributed=None``
-    auto-detects via a limit+count probe; True forces): queries hash into
-    q-blocks and replicate across db-blocks via ``cogroup().applyInPandas``
-    (block counts = each side's scan partition count, so group memory stays
-    bounded by maxPartitionBytes at any total size); every (q-block,
-    db-block) group runs the SAME multi-step screened loop, and the global
-    ranking window merges.  ``distributed=False`` on an oversized query set
+    decides from the size probe; True forces): queries and database rows
+    hash into blocks that meet in ``cogroup().applyInPandas`` groups, sized
+    by row count as described in
+    :mod:`~melody_join_spark.operators._probe`; every (q-block, db-block)
+    group runs the SAME multi-step screened loop, and the global ranking
+    window merges.  ``distributed=False`` on an oversized query set
     raises instead of silently bottlenecking the driver.
     """
     bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
@@ -1646,24 +1647,7 @@ def emd_knn(
         sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
         cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
 
-    # persist BEFORE the sizing probe (round 12, same class as the
-    # auto-strategy persist in emd_join_nd): the probe and the later consumer
-    # (collect, or the cogroup's q-side) would otherwise each re-execute the
-    # query-side upstream chain
-    q = persist(queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w")))
-    if distributed is None or distributed is False:
-        n_probe = q.limit(collect_threshold + 1).count()
-        big = n_probe > collect_threshold
-        if big and distributed is False:
-            raise ValueError(
-                f"emd_knn: query set exceeds collect_threshold="
-                f"{collect_threshold} rows; collecting it would bottleneck "
-                "the driver. Pass distributed=True (cogrouped block path) "
-                "or raise collect_threshold explicitly."
-            )
-        distributed = big
-
-    spark = db.sparkSession
+    q = queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
     cost = cfg.cost
     # the 1-D CDF closed form assumes |x-y| costs — Minkowski-only
     d1 = cfg.bin_points.shape[1] == 1 and cfg.rubner_ord is not None
@@ -1676,13 +1660,17 @@ def emd_knn(
         for p in cfg.proj_positions
     ]
 
-    def knn_block(
-        qids_: np.ndarray, QW_: np.ndarray, qc_: np.ndarray, pdf: pd.DataFrame
-    ) -> pd.DataFrame:
+    def prep(qpdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        qids_ = qpdf["id"].to_numpy().astype(np.int64)
+        QW_ = normalize(np.stack(qpdf["w"].to_numpy()).astype(np.float64))
+        return qids_, QW_, QW_ @ cfg.bin_points
+
+    def knn_block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         """The screened multi-step loop for one (query block, db block)
-        pair — shared verbatim by the broadcast and cogrouped paths."""
+        pair."""
         from ..kernel.emd_batch import emd_exact_pairs_memo, support_table
 
+        qids_, QW_, qc_ = payload
         nq = len(qids_)
         ids = pdf["id"].to_numpy()
         W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
@@ -1811,101 +1799,30 @@ def emd_knn(
                 out_e.append(e)
         return pd.DataFrame({"qid": out_q, "nid": out_n, "emd": out_e})
 
-    dbr = db.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
-    if distributed:
-        # cogrouped block path: no driver materialization of either side.
-        # Materialize the persisted q side first (round 12): probing .rdd
-        # on the unpersisted AQE chains executed their query stages (the
-        # documented _parallelism_floor trap, +4.0-4.6 s per probe on the
-        # sf0.1 bridge chains), and the cogroup's two branches then
-        # re-executed the chains again — four upstream executions per join.
-        # With the cache the chains run once each, and the counts they
-        # return drive the blocking.
-        nq_rows = q.count()
-        # db side: count WITHOUT caching — the array-column cache write
-        # costs more than the one chain re-execution it would save
-        # (interleaved A/B: persisting both sides read 1.11x on
-        # emd_knn_big), and the count replaces the old partition probe's
-        # full execution one-for-one, so the db chain still runs exactly
-        # twice (count + cogroup child), never more.
-        nd_rows = dbr.count()
-        # ROW-count-based blocking (round 12): partition counts are the
-        # wrong signal here — both AQE chains coalesce to 1 partition at
-        # sf0.1, so the old scan-partition heuristic degenerated to
-        # whatever the parallelism floor produced, and probing the CACHED
-        # relations instead returned the 64-partition pre-coalesce shape
-        # (4,096 near-empty groups, per-group overhead measured 4.2x the
-        # query).  Blocks are sized so each (q-block, db-block) group holds
-        # bq x bd rows with bq*bd <= _KNN_LB_ENTRIES — bounding the
-        # per-group (nq, ndb) lower-bound matrix at ~32 MB — and
-        # bq/bd ~ nq/nd so neither side fragments; replicated row volume
-        # (nq*dcN + nd*qcN) then grows as ~sqrt of the total block work,
-        # the best an all-pairs block cover can do.  The 4x-cores floor
-        # keeps small inputs from landing on a handful of tasks.
-        LB_ENTRIES = 1 << 22
-        ratio = max(nq_rows, 1) / max(nd_rows, 1)
-        bq = max(1, int((LB_ENTRIES * ratio) ** 0.5))
-        bd = max(1, int((LB_ENTRIES / ratio) ** 0.5))
-        qcN = max(1, -(-nq_rows // bq))
-        dcN = max(1, -(-nd_rows // bd))
-        par = 4 * spark.sparkContext.defaultParallelism
-        if qcN * dcN < par:
-            qcN = -(-par // dcN)
-        # key columns LONG on both sides — int-typed exploded literals
-        # silently fail to align with pmod(xxhash64)'s long in the cogroup
-        q2 = q.withColumn("qc", F.pmod(F.xxhash64("id"), F.lit(qcN))).withColumn(
-            "dc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(dcN)]))
-        )
-        d2 = dbr.withColumn("dc", F.pmod(F.xxhash64("id"), F.lit(dcN))).withColumn(
-            "qc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(qcN)]))
+    def rank(local: DataFrame) -> DataFrame:
+        from pyspark.sql.window import Window
+
+        w = Window.partitionBy("qid").orderBy(F.col("emd").asc(), F.col("nid").asc())
+        return (
+            local.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+            .select("qid", "nid", "emd", "rank")
         )
 
-        def block(qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(qpdf) or not len(dpdf):
-                return pd.DataFrame({"qid": [], "nid": [], "emd": []}).astype(
-                    {"qid": "int64", "nid": "int64", "emd": "float64"}
-                )
-            qids_ = qpdf["id"].to_numpy().astype(np.int64)
-            QW_ = normalize(np.stack(qpdf["w"].to_numpy()).astype(np.float64))
-            return knn_block(qids_, QW_, QW_ @ cfg.bin_points, dpdf)
-
-        # pin the cogroup's task count: the block work is LP/CPU-bound
-        # while its shuffle bytes are small, so AQE byte-coalescing packs
-        # the stage onto a few tasks (measured 5 tasks / 9.9 s median on
-        # emd_knn_big).  Hash partitioning both children on the keys with
-        # an explicit count satisfies CoGroup's clustering requirement and
-        # is exempt from coalescing.
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        local = (
-            q2.repartition(n_part, "qc", "dc")
-            .groupBy("qc", "dc")
-            .cogroup(d2.repartition(n_part, "qc", "dc").groupBy("qc", "dc"))
-            .applyInPandas(block, "qid long, nid long, emd double")
-        )
-    else:
-        qrows = q.collect()
-        qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        QW = normalize(np.array([r[1] for r in qrows], dtype=np.float64))
-        qcents = QW @ cfg.bin_points
-        b_q = spark.sparkContext.broadcast((qids, QW, qcents))
-
-        def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            qids_, QW_, qc_ = b_q.value
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                yield knn_block(qids_, QW_, qc_, pdf)
-
-        local = dbr.mapInPandas(part, "qid long, nid long, emd double")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("emd").asc(), F.col("nid").asc())
-    out = (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "emd", "rank")
+    return run_query_blocks(
+        q,
+        db.select(F.col(id_col).alias("id"), F.col(w_col).alias("w")),
+        ("id", "id"),
+        prep,
+        knn_block,
+        "qid long, nid long, emd double",
+        rank,
+        distributed=distributed,
+        collect_threshold=collect_threshold,
+        op="emd_knn",
+        alternative="Pass distributed=True (cogrouped block path) or raise "
+        "collect_threshold explicitly.",
     )
-    return release_on_gc(out, q)
 
 
 # ---------------------------------------------------------------------------

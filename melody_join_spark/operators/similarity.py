@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import persist, release_on_gc
+from ._probe import lookup_rows, run_query_blocks
 
 _log = logging.getLogger("melody_join_spark.similarity")
 
@@ -161,136 +162,6 @@ def _rank_topk(local: DataFrame, k: int, round_to: int | None) -> DataFrame:
     )
 
 
-def _cosine_topk_blocked(
-    emb: DataFrame,
-    q: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    round_to: int | None,
-    q_blocks: int | None = None,
-    db_blocks: int | None = None,
-    fold_exact: bool = False,
-) -> DataFrame:
-    """Distributed exact top-k: block-matrix matmul over a cogroup of
-    (q-block x db-block) pairs.  No driver-side materialization of either
-    side (see :func:`cosine_topk` docstring for the scale argument).
-
-    ``fold_exact`` replaces the blocked matmul with sequential left-fold
-    accumulation over the dimension index — bit-identical to the SQL
-    ``aggregate(zip_with(...)) / (na*nb)`` formulation and the DuckDB
-    ``list_sum`` oracle, so results can be hash-compared WITHOUT rounding;
-    local selection then sorts by (cosine desc, nid asc), the exact global
-    tie order, so exact-duplicate vectors never drop nondeterministically
-    at the block boundary.  ~3x the matmul's constant; same asymptotics."""
-    from .dedup import _spread
-
-    db = emb.select(F.col(id_col).alias("nid"), _as_double(vec_col).alias("v"))
-    # Persist + count the query side BEFORE any sizing (round 12): the old
-    # .rdd partition probes executed the query-synthesis chain once each
-    # (two 1-task serial stages, 1.6 s + 0.9 s on cosine_topk_big's
-    # single-file scan), and the cogroup's q-branch then re-ran it again.
-    # _spread first so the synthesis materializes into the cache at full
-    # width instead of on the scan's single split.  The db side is counted
-    # only (column-pruned parquet count ~ metadata) — caching the vector
-    # payload costs more than the one re-execution it saves (measured on
-    # the emd_knn cogroup, same shape).
-    q = persist(_spread(q))
-    nq_rows = q.count()
-    nd_rows = db.count()
-    # ROW-count-based blocking (round 12): partition counts were the wrong
-    # signal — AQE coalesces these chains to one partition locally, so the
-    # old heuristic degenerated to whatever the parallelism floor made of
-    # it.  Size blocks so each (q-block, db-block) group's score matrix
-    # stays ~32 MB with bq/bd ~ nq/nd (see emd_knn for the replication
-    # argument).
-    S_ENTRIES = 1 << 22
-    ratio = max(nq_rows, 1) / max(nd_rows, 1)
-    bq = max(1, int((S_ENTRIES * ratio) ** 0.5))
-    bd = max(1, int((S_ENTRIES / ratio) ** 0.5))
-    qcN = max(1, q_blocks or -(-nq_rows // bq))
-    dcN = max(1, db_blocks or -(-nd_rows // bd))
-    # floor the group count at 4x cluster parallelism: small inputs would
-    # otherwise yield 1x1 blocks — one giant group on one core — and
-    # CPU-dense matmul groups need slack for balance.  Scale the QUERY
-    # axis (replicating queries across db blocks is the cheap direction
-    # when queries outnumber lists).
-    par = 4 * q.sparkSession.sparkContext.defaultParallelism
-    if q_blocks is None and qcN * dcN < par:
-        qcN = -(-par // dcN)
-
-    # NB: both key columns must be LONG on both sides — pmod(xxhash64) is
-    # long, and int-typed exploded literals would silently fail to align in
-    # the cogroup (keys compare by type+value)
-    q2 = q.withColumn("qc", F.pmod(F.xxhash64("qid"), F.lit(qcN))).withColumn(
-        "dc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(dcN)]))
-    )
-    d2 = db.withColumn("dc", F.pmod(F.xxhash64("nid"), F.lit(dcN))).withColumn(
-        "qc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(qcN)]))
-    )
-
-    def block(qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(qpdf) or not len(dpdf):
-            return pd.DataFrame({"qid": [], "nid": [], "cosine": []}).astype(
-                {"qid": "int64", "nid": "int64", "cosine": "float64"}
-            )
-        qids = qpdf["qid"].to_numpy()
-        Q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
-        ids = dpdf["nid"].to_numpy()
-        V = np.stack(dpdf["v"].to_numpy()).astype(np.float64)
-        kk = min(k + 1, V.shape[0])  # +1 headroom for self-match removal
-        if fold_exact:
-            dim = Q.shape[1]
-            S = np.zeros((Q.shape[0], V.shape[0]))
-            nq2 = np.zeros(Q.shape[0])
-            nv2 = np.zeros(V.shape[0])
-            for j in range(dim):  # left-fold order == SQL aggregate/list_sum
-                S += Q[:, j : j + 1] * V[None, :, j]
-                nq2 += Q[:, j] * Q[:, j]
-                nv2 += V[:, j] * V[:, j]
-            S = S / (np.sqrt(nq2)[:, None] * np.sqrt(nv2)[None, :])
-            rows_q, rows_n, rows_c = [], [], []
-            for qi in range(Q.shape[0]):
-                row = S[qi]
-                idx = np.lexsort((ids, -row))[:kk]  # global tie order
-                rows_q.append(np.full(idx.size, qids[qi]))
-                rows_n.append(ids[idx])
-                rows_c.append(row[idx])
-            out = pd.DataFrame(
-                {
-                    "qid": np.concatenate(rows_q),
-                    "nid": np.concatenate(rows_n),
-                    "cosine": np.concatenate(rows_c),
-                }
-            )
-            return out[out.qid != out.nid]
-        Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-        S = Qn @ Vn.T  # (q, n)
-        idx = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-        out = pd.DataFrame(
-            {
-                "qid": np.repeat(qids, kk),
-                "nid": ids[idx].ravel(),
-                "cosine": np.take_along_axis(S, idx, axis=1).ravel(),
-            }
-        )
-        return out[out.qid != out.nid]
-
-    # pin the cogroup's task count against AQE byte-coalescing (matmul work
-    # is CPU-dense per byte; see emd_knn's identical note)
-    n_part = int(
-        q.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    local = (
-        q2.repartition(n_part, "qc", "dc")
-        .groupBy("qc", "dc")
-        .cogroup(d2.repartition(n_part, "qc", "dc").groupBy("qc", "dc"))
-        .applyInPandas(block, "qid long, nid long, cosine double")
-    )
-    return release_on_gc(_rank_topk(local, k, round_to), q)
-
-
 def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
@@ -308,22 +179,30 @@ def cosine_topk(
     rank); excludes self-matches (qid == nid).
 
     Two physical strategies, picked by query-set size (``distributed=None``
-    probes with a cheap ``limit(collect_threshold+1).count()``; pass
-    True/False to force):
+    decides from a size probe that also collects a small query set; pass
+    True/False to force), both running the same per-block kernel (see
+    :mod:`~melody_join_spark.operators._probe`):
 
-    - **lookup** (small query set): the query block is collected and
-      broadcast into a ``mapInPandas`` over the database partitions; each
-      partition computes a (q x block) matmul in numpy and emits its local
-      top-k — no shuffle of the database side at all.
+    - **lookup** (small query set): the query block is broadcast into a
+      ``mapInPandas`` over the database partitions; each partition computes
+      a (q x block) matmul in numpy and emits its local top-k — no shuffle
+      of the database side at all.
     - **distributed** (large query set): NO driver collect — the classic
       block-matrix algorithm via ``cogroup().applyInPandas``: queries hash
-      into ``qcN`` blocks and replicate across ``dcN`` database blocks (and
-      vice versa), every (q-block, db-block) group runs one numpy matmul
-      and emits its local top-k, and the global ranking window merges.
-      Block counts default to each side's scan partition count, so group
-      memory stays ~2 x ``spark.sql.files.maxPartitionBytes`` no matter the
-      total size; shuffle volume is Q*dcN + N*qcN rows — the unavoidable
-      replication of an exact all-pairs top-k, with no driver in the path.
+      into q-blocks and replicate across database blocks (and vice versa),
+      every (q-block, db-block) group runs one numpy matmul and emits its
+      local top-k, and the global ranking window merges.  Blocks are sized
+      by row count as that module describes; shuffle volume is the
+      unavoidable replication of an exact all-pairs top-k, with no driver
+      in the path.
+
+    ``fold_exact`` replaces the matmul with sequential left-fold
+    accumulation over the dimension index — bit-identical to the SQL
+    ``aggregate(zip_with(...)) / (na*nb)`` formulation and the DuckDB
+    ``list_sum`` oracle, so results can be hash-compared WITHOUT rounding;
+    local selection then sorts by (cosine desc, nid asc), the exact global
+    tie order, so exact-duplicate vectors never drop nondeterministically
+    at the block boundary.  ~3x the matmul's constant; same asymptotics.
 
     A query set over ``collect_threshold`` with ``distributed=False`` is
     rejected with a clear error instead of silently bottlenecking the
@@ -333,52 +212,58 @@ def cosine_topk(
     q = queries.select(
         F.col(q_id_col).alias("qid"), _as_double(q_vec_col).alias("qv")
     )
-    if distributed is None or distributed is False:
-        n_probe = q.limit(collect_threshold + 1).count()
-        big = n_probe > collect_threshold
-        if big and distributed is False:
-            raise ValueError(
-                f"cosine_topk: query set exceeds collect_threshold="
-                f"{collect_threshold} rows; collecting it would bottleneck "
-                "the driver. Pass distributed=True (block-matrix path) or "
-                "raise collect_threshold explicitly."
-            )
-        distributed = big
-    if distributed:
-        return _cosine_topk_blocked(
-            emb, q, k, id_col, vec_col, round_to, fold_exact=fold_exact
-        )
-    qrows = q.collect()
-    qids = np.array([r[0] for r in qrows])
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    spark = emb.sparkSession
-    b_q = spark.sparkContext.broadcast((qids, Qn))
-
     db = emb.select(F.col(id_col).alias("nid"), _as_double(vec_col).alias("v"))
 
-    def part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids_, Qn_ = b_q.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids = pdf["nid"].to_numpy()
-            V = np.stack(pdf["v"].to_numpy())
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            S = Qn_ @ Vn.T  # (q, n)
-            kk = min(k + 1, S.shape[1])  # +1 headroom for self-match removal
-            idx = np.argpartition(-S, kk - 1, axis=1)[:, :kk]
-            out = pd.DataFrame(
-                {
-                    "qid": np.repeat(qids_, kk),
-                    "nid": ids[idx].ravel(),
-                    "cosine": np.take_along_axis(S, idx, axis=1).ravel(),
-                }
-            )
-            yield out[out.qid != out.nid]
+    def prep(qpdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+        Q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
+        if not fold_exact:
+            Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+        return qpdf["qid"].to_numpy(), Q
 
-    local = db.mapInPandas(part, "qid long, nid long, cosine double")
-    return _rank_topk(local, k, round_to)
+    def block(payload: tuple, dpdf: pd.DataFrame) -> pd.DataFrame:
+        qids, Q = payload
+        ids = dpdf["nid"].to_numpy()
+        V = np.stack(dpdf["v"].to_numpy()).astype(np.float64)
+        kk = min(k + 1, V.shape[0])  # +1 headroom for self-match removal
+        if fold_exact:
+            dim = Q.shape[1]
+            S = np.zeros((Q.shape[0], V.shape[0]))
+            nq2 = np.zeros(Q.shape[0])
+            nv2 = np.zeros(V.shape[0])
+            for j in range(dim):  # left-fold order == SQL aggregate/list_sum
+                S += Q[:, j : j + 1] * V[None, :, j]
+                nq2 += Q[:, j] * Q[:, j]
+                nv2 += V[:, j] * V[:, j]
+            S = S / (np.sqrt(nq2)[:, None] * np.sqrt(nv2)[None, :])
+            # global tie order
+            idx = np.stack([np.lexsort((ids, -row))[:kk] for row in S])
+            cos = np.take_along_axis(S, idx, axis=1).ravel()
+        else:
+            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+            # the matmul only selects: its last bit depends on the block's
+            # shape, so each kept cosine is recomputed as a row-wise product
+            # sum, which depends on the two vectors alone
+            idx = np.argpartition(-(Q @ Vn.T), kk - 1, axis=1)[:, :kk]
+            cos = (np.repeat(Q, kk, axis=0) * Vn[idx.ravel()]).sum(axis=1)
+        out = pd.DataFrame(
+            {"qid": np.repeat(qids, kk), "nid": ids[idx].ravel(), "cosine": cos}
+        )
+        return out[out.qid != out.nid]
+
+    return run_query_blocks(
+        q,
+        db,
+        ("qid", "nid"),
+        prep,
+        block,
+        "qid long, nid long, cosine double",
+        lambda local: _rank_topk(local, k, round_to),
+        distributed=distributed,
+        collect_threshold=collect_threshold,
+        op="cosine_topk",
+        alternative="Pass distributed=True (block-matrix path) or raise "
+        "collect_threshold explicitly.",
+    )
 
 
 def _spherical_kmeans(X: np.ndarray, nlist: int, iters: int, seed: int) -> np.ndarray:
@@ -552,20 +437,13 @@ def ivf_search(
     q = queries.select(
         F.col(q_id_col).alias("qid"), _as_double(q_vec_col).alias("qv")
     )
-    if distributed is None or distributed is False:
-        n_probe_rows = q.limit(collect_threshold + 1).count()
-        big = n_probe_rows > collect_threshold
-        if big and distributed is False:
-            raise ValueError(
-                f"ivf_search: query set exceeds collect_threshold="
-                f"{collect_threshold} rows; collecting it would bottleneck "
-                "the driver. Pass distributed=True (mapInPandas probe "
-                "assignment) or raise collect_threshold explicitly."
-            )
-        distributed = big
-
+    qpdf = lookup_rows(
+        q, collect_threshold, distributed, "ivf_search",
+        "Pass distributed=True (mapInPandas probe assignment) or raise "
+        "collect_threshold explicitly.",
+    )
     np_eff = min(nprobe, C.shape[0])
-    if distributed:
+    if qpdf is None:
         b_c = spark.sparkContext.broadcast(C)
 
         def assign_probes(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -593,9 +471,8 @@ def ivf_search(
             F.col("qid") != F.col("nid")
         )
     else:
-        qrows = q.collect()
-        qids = [r[0] for r in qrows]
-        Q = np.array([np.asarray(r[1], dtype=np.float64) for r in qrows])
+        qids = qpdf["qid"].tolist()
+        Q = np.array(qpdf["qv"].tolist(), dtype=np.float64).reshape(-1, C.shape[1])
         Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
         probe_lists = np.argsort(-(Qn @ C.T), axis=1)[:, :np_eff]
         probe_rows = [

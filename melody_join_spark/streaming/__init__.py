@@ -432,9 +432,8 @@ def streaming_emd_join_nd(
     pair, and scales horizontally with stream partitions (the reference set
     ships once per executor via broadcast, as the batch operators do for
     their side inputs)."""
-    import numpy as np
-
     from ..kernel import normalize
+    from ..operators._probe import broadcast_blocks
     from ..operators.emd_join_nd import _cascade_for, build_config
 
     bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
@@ -445,34 +444,28 @@ def streaming_emd_join_nd(
     RW = normalize(np.array([r[1] for r in ref_rows], dtype=np.float64))
     if cfg is None:
         cfg = build_config(bin_points, seed_weights=RW, seed=seed, ground=ground)
-    spark = stream_hist.sparkSession
-    b_ref = spark.sparkContext.broadcast((rids, RW))
 
-    def part(it):
-        import pandas as pd
-
-        rids_, RW_ = b_ref.value
+    def block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        rids_, RW_ = payload
         m = RW_.shape[0]
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            W = normalize(np.stack(pdf[w_col].to_numpy()).astype(np.float64))
-            n = W.shape[0]
-            # one cascade over the stacked [batch | ref] matrix; candidate
-            # pairs are the full batch x ref cross — the vectorized Rubner
-            # stage prunes it before anything per-pair runs
-            casc = _cascade_for(np.vstack([W, RW_]), cfg)
-            li = np.repeat(np.arange(n), m)
-            ri = n + np.tile(np.arange(m), n)
-            li, ri, emds = casc.run(li, ri, float(threshold), slack=cfg.slack)
-            yield pd.DataFrame(
-                {"rid": ids[li], "sid": rids_[ri - n], "emd": emds}
-            )
+        ids = pdf[id_col].to_numpy()
+        W = normalize(np.stack(pdf[w_col].to_numpy()).astype(np.float64))
+        n = W.shape[0]
+        # one cascade over the stacked [batch | ref] matrix; candidate
+        # pairs are the full batch x ref cross — the vectorized Rubner
+        # stage prunes it before anything per-pair runs
+        casc = _cascade_for(np.vstack([W, RW_]), cfg)
+        li = np.repeat(np.arange(n), m)
+        ri = n + np.tile(np.arange(m), n)
+        li, ri, emds = casc.run(li, ri, float(threshold), slack=cfg.slack)
+        return pd.DataFrame({"rid": ids[li], "sid": rids_[ri - n], "emd": emds})
 
-    return stream_hist.select(
-        F.col(id_col).alias(id_col), F.col(w_col).alias(w_col)
-    ).mapInPandas(part, "rid long, sid long, emd double")
+    return broadcast_blocks(
+        stream_hist.select(F.col(id_col).alias(id_col), F.col(w_col).alias(w_col)),
+        (rids, RW),
+        block,
+        "rid long, sid long, emd double",
+    )
 
 
 def streaming_asof_lookup(

@@ -50,7 +50,7 @@ import __spark_entry__ as em  # noqa: E402
 fn = em.queries()[NAME]
 
 
-def run_once(tag: str) -> tuple[float, float, float]:
+def run_once(tag: str) -> float:
     spark.catalog.clearCache()
     sc.setJobGroup(tag, f"{NAME} {tag}")
     t0 = time.time()
@@ -58,12 +58,10 @@ def run_once(tag: str) -> tuple[float, float, float]:
     df.write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
     sc.setJobGroup("", "")
-    return t0, time.time(), wall
+    return wall
 
 
-marks = []
-for i in range(RUNS):
-    marks.append((f"run{i}",) + run_once(f"run{i}"))
+marks = [(f"run{i}", run_once(f"run{i}")) for i in range(RUNS)]
 
 spark.stop()
 
@@ -85,38 +83,36 @@ if not logfs:
 
 jobs = {}     # jobId -> dict(start, end, group, stage_ids)
 stages = {}   # stageId -> dict(submit, complete, ntasks, name)
-import itertools
-
-lines = itertools.chain.from_iterable(open(lf) for lf in logfs)
-if True:
-    for line in lines:
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        e = ev.get("Event")
-        if e == "SparkListenerJobStart":
-            props = ev.get("Properties") or {}
-            jobs[ev["Job ID"]] = {
-                "start": ev["Submission Time"] / 1e3,
-                "end": None,
-                "group": props.get("spark.jobGroup.id", ""),
-                "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-            }
-        elif e == "SparkListenerJobEnd":
-            if ev["Job ID"] in jobs:
-                jobs[ev["Job ID"]]["end"] = ev["Completion Time"] / 1e3
-        elif e == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            sub = si.get("Submission Time")
-            com = si.get("Completion Time")
-            if sub and com:
-                stages[si["Stage ID"]] = {
-                    "submit": sub / 1e3,
-                    "complete": com / 1e3,
-                    "ntasks": si.get("Number of Tasks", 0),
-                    "name": si.get("Stage Name", "")[:60],
+for lf in logfs:
+    with open(lf) as fh:
+        for line in fh:
+            try:
+                ev = json.loads(line)
+            except json.JSONDecodeError:
+                continue
+            e = ev.get("Event")
+            if e == "SparkListenerJobStart":
+                props = ev.get("Properties") or {}
+                jobs[ev["Job ID"]] = {
+                    "start": ev["Submission Time"] / 1e3,
+                    "end": None,
+                    "group": props.get("spark.jobGroup.id", ""),
+                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
                 }
+            elif e == "SparkListenerJobEnd":
+                if ev["Job ID"] in jobs:
+                    jobs[ev["Job ID"]]["end"] = ev["Completion Time"] / 1e3
+            elif e == "SparkListenerStageCompleted":
+                si = ev["Stage Info"]
+                sub = si.get("Submission Time")
+                com = si.get("Completion Time")
+                if sub and com:
+                    stages[si["Stage ID"]] = {
+                        "submit": sub / 1e3,
+                        "complete": com / 1e3,
+                        "ntasks": si.get("Number of Tasks", 0),
+                        "name": si.get("Stage Name", "")[:60],
+                    }
 
 
 def union_len(intervals: list[tuple[float, float]]) -> float:
@@ -136,7 +132,7 @@ def union_len(intervals: list[tuple[float, float]]) -> float:
     return out
 
 
-for tag, t0, t1, wall in marks:
+for tag, wall in marks:
     jids = [j for j, v in jobs.items() if v["group"] == tag and v["end"]]
     sids = sorted({s for j in jids for s in jobs[j]["stages"] if s in stages})
     ivals = [(stages[s]["submit"], stages[s]["complete"]) for s in sids]

@@ -695,19 +695,38 @@ def test_dedupe_incremental(docs, spark):
         assert 10_002 not in kept, method
 
 
-def test_cosine_topk_distributed_matches_collected(emb):
+def test_cosine_topk_distributed_matches_collected(spark, emb):
     """The cogrouped block path (no driver collect) returns exactly the
-    collected-broadcast path's ranking."""
-    qs = emb.orderBy("vec_id").limit(40)
-    ref = {
-        (r.qid, r.rank): (r.nid, r.cosine)
-        for r in cosine_topk(emb, qs, k=5, round_to=6, distributed=False).collect()
-    }
-    got = {
-        (r.qid, r.rank): (r.nid, r.cosine)
-        for r in cosine_topk(emb, qs, k=5, round_to=6, distributed=True).collect()
-    }
-    assert got == ref and len(got) == 40 * 5
+    collected-broadcast path's ranking and unrounded cosines, in both
+    arithmetic modes.  In the default mode a zero vector sits on both
+    sides: it scores 0.0 against everything on both paths (the zero
+    query's ties at 0.0 may pick different neighbours per blocking, so
+    only its scores are compared)."""
+    base = emb.select("vec_id", "embedding")
+    qs = base.orderBy("vec_id").limit(40)
+    dim = len(base.first().embedding)
+    zq, zd = 10**9, 10**9 + 1
+    zq_rows = spark.createDataFrame([(zq, [0.0] * dim)], base.schema)
+    zd_rows = spark.createDataFrame([(zd, [0.0] * dim)], base.schema)
+    for fold_exact, nq in ((True, 40), (False, 41)):
+        if not fold_exact:
+            qs, base = qs.unionByName(zq_rows), base.unionByName(zd_rows)
+        ref, got = (
+            {
+                (r.qid, r.rank): (r.nid, r.cosine)
+                for r in cosine_topk(
+                    base, qs, k=5, distributed=dist, fold_exact=fold_exact
+                ).collect()
+            }
+            for dist in (False, True)
+        )
+        assert len(ref) == len(got) == nq * 5
+        assert {k: v for k, v in got.items() if k[0] != zq} == {
+            k: v for k, v in ref.items() if k[0] != zq
+        }, fold_exact
+        if not fold_exact:
+            for res in (ref, got):
+                assert [res[(zq, r)][1] for r in range(1, 6)] == [0.0] * 5
 
 
 def test_cosine_topk_collect_guard(emb):
