@@ -296,7 +296,7 @@ def _q_emd_index_search(spark, sf_dir):
     import melody_join_spark.operators.emd_join_nd as _emj
 
     # digest BOTH modules the build output depends on: emd_index.py and
-    # emd_join_nd.py (_grid_boundaries/build_config/_parallelism_floor) —
+    # emd_join_nd.py (_grid_boundaries/build_config) —
     # a boundary change must not serve a stale index (round-5 ADVICE,
     # __spark_entry__.py:280)
     h = hashlib.md5()
@@ -1066,7 +1066,7 @@ def _q_pipeline_llm_prep(spark, sf_dir):
     scan; the oracle is the same chain composed from each operator's own
     SQL twin (the oracle builders take table= subqueries by design).
 
-    The input goes through dedup's _spread guard AND a persist first: the
+    The input goes through the spread guard AND a persist first: the
     repetition gate is heavy per-row codegen (six sorted-run n-gram
     folds), the sf0.1 table is ONE parquet file, and — the subtle part —
     a bare repartition does NOT help because PushDownPredicate moves the
@@ -1077,9 +1077,10 @@ def _q_pipeline_llm_prep(spark, sf_dir):
     across the 32 cached partitions (~4 s total).  At real scale the
     input arrives in thousands of splits and both guards no-op."""
     from melody_join_spark.cache import persist, release_on_gc
-    from melody_join_spark.operators.dedup import _spread, dedup_paragraphs
+    from melody_join_spark.operators._width import spread
+    from melody_join_spark.operators.dedup import dedup_paragraphs
 
-    docs = persist(_spread(_docs(spark, sf_dir)))
+    docs = persist(spread(_docs(spark, sf_dir)))
     docs.count()
     qk = quality_filter(docs).where("kept").select("doc_id")
     rk = repetition_filter(docs).where("kept").select("doc_id")

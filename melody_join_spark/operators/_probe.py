@@ -27,16 +27,18 @@ bq / bd ~ nq / nd so neither side fragments; the replicated row volume
 (nq * dcN + nd * qcN) then grows as ~sqrt of the total block work, the best
 an all-pairs block cover can do.  (Scan partition counts are the wrong
 signal: AQE coalesces the query chains to one partition on small inputs,
-and the cached relation reports its pre-coalesce shape.)  The group count
-is floored at 4x the cluster parallelism, scaling the query axis, so small
-inputs do not land on a handful of CPU-dense groups.  Queries hash into
+and the cached relation reports its pre-coalesce shape.)  The task count
+is :func:`._width.task_width` of the nq x nd block entries, at the
+operator's ``unit`` entries per task (its per-entry kernel cost against a
+task's round trip); the group count is raised to at least that width,
+scaling the query axis, so every task gets a group.  Queries hash into
 ``qcN`` blocks and replicate across the ``dcN`` database blocks and vice
 versa; ``cogroup().applyInPandas`` runs ``prep`` once per group and then
-``block``.  Both children are hash-repartitioned on the keys to
-``spark.sql.shuffle.partitions``: the block work is CPU-bound while its
-shuffle bytes are small, so AQE byte-coalescing would pack the stage onto a
-few tasks (5 tasks / 9.9 s median on ``emd_knn_big``), and an explicit
-count satisfies CoGroup's clustering requirement without an extra exchange.
+``block``.  Both children are hash-repartitioned on the keys to that
+width: the block work is CPU-bound while its shuffle bytes are small, so
+AQE byte-coalescing would pack the stage onto a few tasks (5 tasks / 9.9 s
+median on ``emd_knn_big``), and an explicit count satisfies CoGroup's
+clustering requirement without an extra exchange.
 
 Both paths run the same ``block`` on the same ``prep`` output, so they
 return the same values; only the grouping of rows into blocks differs.
@@ -52,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import persist, release_on_gc
+from ._width import spread, task_width
 
 Prep = Callable[[pd.DataFrame], Any]
 Block = Callable[[Any, pd.DataFrame], pd.DataFrame]
@@ -111,13 +114,12 @@ def cogroup_blocks(
     prep: Prep,
     block: Block,
     schema: str,
+    unit: float,
 ) -> tuple[DataFrame, DataFrame]:
     """The blocked path (module docstring): returns the per-group output
     and the query side's cache handle, which the caller releases with its
     final result."""
-    from .dedup import _spread
-
-    q = persist(_spread(q))
+    q = persist(spread(q))
     nq_rows = q.count()
     nd_rows = db.count()
     ratio = max(nq_rows, 1) / max(nd_rows, 1)
@@ -125,10 +127,9 @@ def cogroup_blocks(
     bd = max(1, int((_BLOCK_ENTRIES / ratio) ** 0.5))
     qcN = max(1, -(-nq_rows // bq))
     dcN = max(1, -(-nd_rows // bd))
-    spark = q.sparkSession
-    par = 4 * spark.sparkContext.defaultParallelism
-    if qcN * dcN < par:
-        qcN = -(-par // dcN)
+    width = task_width(q.sparkSession, nq_rows * nd_rows, unit)
+    if qcN * dcN < width:
+        qcN = -(-width // dcN)
     # key columns LONG on both sides: int-typed exploded literals silently
     # fail to align with pmod(xxhash64)'s long in the cogroup
     q2 = q.withColumn("qc", F.pmod(F.xxhash64(q_id), F.lit(qcN))).withColumn(
@@ -143,11 +144,10 @@ def cogroup_blocks(
             return pd.DataFrame()
         return block(prep(qpdf), dpdf)
 
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     local = (
-        q2.repartition(n_part, "qc", "dc")
+        q2.repartition(width, "qc", "dc")
         .groupBy("qc", "dc")
-        .cogroup(d2.repartition(n_part, "qc", "dc").groupBy("qc", "dc"))
+        .cogroup(d2.repartition(width, "qc", "dc").groupBy("qc", "dc"))
         .applyInPandas(group, schema)
     )
     return local, q
@@ -162,16 +162,18 @@ def run_query_blocks(
     schema: str,
     finish: Callable[[DataFrame], DataFrame],
     *,
+    unit: float,
     distributed: bool | None,
     collect_threshold: int,
     op: str,
     alternative: str,
 ) -> DataFrame:
     """Probe, then the lookup or the blocked path; ``finish`` turns the
-    per-block output into the operator's result (the global ranking)."""
+    per-block output into the operator's result (the global ranking).
+    ``unit`` is the block entries one blocked-path task should carry."""
     qpdf = lookup_rows(q, collect_threshold, distributed, op, alternative)
     if qpdf is not None:
         payload = prep(qpdf) if len(qpdf) else None
         return finish(broadcast_blocks(db, payload, block, schema))
-    local, held = cogroup_blocks(q, db, *keys, prep, block, schema)
+    local, held = cogroup_blocks(q, db, *keys, prep, block, schema, unit)
     return release_on_gc(finish(local), held)

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..cache import persist, release_on_gc
+from ._width import spread
 from .text import (
     WINNOW_K,
     WINNOW_W,
@@ -72,47 +73,6 @@ __all__ = [
     "dedup_paragraphs",
     "dedup_paragraphs_oracle_sql",
 ]
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Small-input parallelism guard for heavy per-row stages.
-
-    The tokenize/shingle/hash expressions in this module run inside the
-    SCAN stage, so their parallelism is the scan's: a corpus that arrives
-    as one small parquet file (or a handful) runs the entire per-row CPU on
-    ONE core while 31 idle — measured 13.7 s single-task vs ~0.6 s spread
-    for the winnowing hash at sf0.1.  Repartition only when the input's
-    partition count is clearly below the cluster's parallelism; at real
-    scale (thousands of file splits) this is a no-op and no shuffle is
-    added.  The repartitioned relation carries only the source columns —
-    for document tables that is a few hundred bytes/row, so the guard
-    shuffle is negligible next to the expression work it parallelizes.
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    # A plan that already contains a wide operator (aggregate/join/window/
-    # sort/repartition/...) is already partitioned by spark.sql.shuffle.
-    # partitions — and, critically, calling .rdd on it under AQE EAGERLY
-    # executes every materialized query stage, so the probe itself would
-    # run the upstream chain one extra time (measured: +8 s on the
-    # pipeline_llm_prep capstone when the LM trainer probed its cleaned
-    # input).  Only narrow scan-shaped inputs are probed and spread.
-    import re
-
-    plan = df._jdf.queryExecution().analyzed().toString()
-    if re.search(
-        # `Repartition n, false` is coalesce() — narrow, still a spread
-        # candidate; `Repartition n, true` is an explicit shuffle
-        r"(?m)^[ :+\-]*(Aggregate|Join|Window|Sort"
-        r"|RepartitionByExpression|RebalancePartitions|Deduplicate"
-        r"|GlobalLimit|FlatMapGroupsInPandas|FlatMapCoGroupsInPandas)\b"
-        r"|Repartition \d+, true",
-        plan,
-    ):
-        return df
-    if df.rdd.getNumPartitions() < max(2, target // 2):
-        return df.repartition(target)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -644,7 +604,7 @@ def jaccard_pairs(
     # 64-bit collisions merge two tokens with odds ~|vocab|^2 / 2^65 —
     # negligible below billion-token vocabularies, and can only nudge a
     # jaccard value, never crash.
-    rel = _spread(df).select(
+    rel = spread(df).select(
         F.col(id_col).alias("id"), F.explode(tokens).alias("tok")
     ).select("id", F.xxhash64("tok").alias("th"))
     # document frequency via count() OVER (PARTITION BY th): ONE exchange of
@@ -823,7 +783,7 @@ def winnow_pairs(
     from pyspark.sql import Window
 
     fp = winnow_fingerprints(
-        _spread(df), text_col=text_col, k=k, w=w, impl=impl
+        spread(df), text_col=text_col, k=k, w=w, impl=impl
     ).select(F.col(id_col).alias("id"), "fps")
     ex0 = fp.select("id", F.explode("fps").alias("fp"))
     total = df.agg(F.count("*").alias("__n_docs"))
@@ -959,7 +919,7 @@ def minhash_signatures(
     document's signature as a gather + column-min over its rows.  Bit-for-
     bit identical to the per-document formula (min over a superset of
     duplicated rows is unchanged)."""
-    return _spread(df).select(
+    return spread(df).select(
         F.col(id_col).alias("id"),
         _make_sig_udf(num_hashes, shingle, seed)(F.col(text_col)).alias("sig"),
     )
@@ -1019,7 +979,7 @@ def _minhash_band_keys(
 def _jaccard_tokens(df: DataFrame, id_col: str, text_col: str, shingle: int) -> DataFrame:
     """(id, toks, nt) character-shingle token table for exact verification.
 
-    ``_spread`` matters here even though the tokenize is a scan-stage
+    ``spread`` matters here even though the tokenize is a scan-stage
     expression: every caller persists this relation and immediately sizes
     it with an agg (`_verify_jaccard`'s broadcast gate), so on a corpus
     arriving as one file split the ENTIRE shingle tokenize executed as a
@@ -1028,7 +988,7 @@ def _jaccard_tokens(df: DataFrame, id_col: str, text_col: str, shingle: int) -> 
     verify joins even started.  At real scale (thousands of splits) the
     guard is a no-op."""
     grams = tokenize_char_ngrams(F.col(text_col), shingle)
-    return _spread(df).select(F.col(id_col).alias("id"), grams.alias("toks")).withColumn(
+    return spread(df).select(F.col(id_col).alias("id"), grams.alias("toks")).withColumn(
         "nt", F.size("toks")
     )
 
@@ -1126,7 +1086,7 @@ def simhash64(
             out[k] = np.array([packed], dtype=np.uint64).view(np.int64)[0]
         return pd.Series(out)
 
-    return _spread(df).select(
+    return spread(df).select(
         F.col(id_col).alias("id"), sim_udf(F.col(text_col)).alias("simhash")
     )
 
@@ -1319,8 +1279,9 @@ n AS (SELECT id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
 dropped AS (
   SELECT DISTINCT b.id AS id
   FROM n a JOIN n b ON a.id < b.id
-  WHERE list_sum(list_transform(range(1, {dim + 1}), i -> a.v[i] * b.v[i]))
-          / (a.nrm * b.nrm) >= {threshold}
+  WHERE CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
+             ELSE list_sum(list_transform(range(1, {dim + 1}), i -> a.v[i] * b.v[i]))
+                    / (a.nrm * b.nrm) END >= {threshold}
 )
 SELECT {id_col} FROM {docs_table}
 WHERE {id_col} NOT IN (SELECT id FROM dropped)
@@ -1640,13 +1601,13 @@ def decontaminate(
     of training bytes at all; the only exchange is the output-sized
     groupBy on (train id, eval id).  n-gram generation happens in JVM
     codegen (split/transform/slice), no Python in the hot path."""
-    # _spread: the n-gram generation is scan-stage codegen, so a train
+    # spread: the n-gram generation is scan-stage codegen, so a train
     # corpus arriving as one file would tokenize on one core (measured
     # 4.2 s single-task at sf0.1 vs ~0.3 s spread — guide §2.5); at real
     # scale the input has thousands of splits and this is a no-op, which
     # preserves the "one streaming scan, no shuffle of training bytes"
     # contract where it matters
-    tg = _spread(train).select(
+    tg = spread(train).select(
         F.col(id_col).cast("long").alias(id_col),
         F.explode(word_ngrams(F.col(text_col), n)).alias("_g"),
     )
@@ -1733,7 +1694,7 @@ def scrub_contamination(
     w = _word_tokens(F.col(text_col))
     grams = word_ngram_windows(F.col(text_col), n)
     # same single-split guard as decontaminate (guide §2.5; no-op at scale)
-    tg = _spread(train).select(
+    tg = spread(train).select(
         F.col(id_col).cast("long").alias(id_col),
         F.posexplode(grams).alias("_pos0", "_g"),
     ).select(id_col, (F.col("_pos0") + 1).alias("_i"), "_g")

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..cache import persist, release_on_gc
+from ._width import CROSS_PAIRS, task_width
 
 __all__ = [
     "pair_emd_expr",
@@ -137,10 +138,10 @@ def emd_threshold_join(
     if strategy == "bruteforce":
         h = with_mean_position(hist, positions)
         # spread the cartesian across tasks (a small cached side otherwise
-        # collapses to a handful of partitions); width = cluster parallelism,
-        # never a literal (round-9, same rationale as similarity._cross_width)
+        # collapses to a handful of partitions); the N^2/2 pairs are not
+        # counted here, so the width is one wave (task_width of unknown work)
         a = _pair_frame(h, "a").repartition(
-            hist.sparkSession.sparkContext.defaultParallelism
+            task_width(hist.sparkSession, None, CROSS_PAIRS)
         )
         b = _pair_frame(h, "b")
         pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
@@ -224,7 +225,7 @@ def emd_topk_join(
     """
     if strategy == "bruteforce":
         a = _pair_frame(hist, "a").repartition(
-            hist.sparkSession.sparkContext.defaultParallelism
+            task_width(hist.sparkSession, None, CROSS_PAIRS)
         )
         b = _pair_frame(hist, "b")
         pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))

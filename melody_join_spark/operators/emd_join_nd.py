@@ -74,6 +74,7 @@ from ..kernel import (
     projection_positions,
 )
 from ._probe import run_query_blocks
+from ._width import EMD_PAIRS, TASK_S, spread, task_width
 
 __all__ = [
     "NdJoinConfig",
@@ -118,6 +119,7 @@ class JoinStats:
         "laesa_considered",  # pivot path, arbitrary cost: block pairs before
         "laesa_survivors",   # / after the pivot-space triangle screen
         "result_pairs",      # pairs the cascade emitted (= output rows)
+        "runner_tasks",      # the cascade runner's task count (driver-side)
     )
 
     def __init__(self, sc):
@@ -327,7 +329,7 @@ def _run_cascade(
     rows: DataFrame,
     cfg: NdJoinConfig,
     theta: float,
-    n_part: int,
+    width: int,
     candidates: Callable[
         [int, np.ndarray, dict, np.ndarray], tuple[np.ndarray, np.ndarray]
     ],
@@ -357,12 +359,15 @@ def _run_cascade(
     filter: batching changes only WHERE a pair is pruned, never whether it
     survives.
 
-    The explicit ``n_part`` hash repartition pins the task count: the exact
-    stage is CPU-quadratic per group but tiny in BYTES, so AQE's byte-based
-    coalescing would pack groups (and salted sub-groups) back onto one task
-    (measured: scripts/skew_bench.py).  A user-specified count is exempt
-    from AQE coalescing and adds no exchange beyond the one grouping
-    needs."""
+    ``width`` is the task count, which each strategy derives from its
+    candidate-pair estimate through :func:`._width.task_width`, so a task
+    carries enough pairs to repay its fixed round trip.  It is set by an
+    explicit hash repartition: the exact stage is CPU-quadratic per group
+    but tiny in BYTES, so AQE's byte-based coalescing would pack groups
+    (and salted sub-groups) back onto one task (measured:
+    scripts/skew_bench.py).  A user-specified count is exempt from AQE
+    coalescing and adds no exchange beyond the one grouping needs.  The
+    width is added to ``stats`` as ``runner_tasks`` on the driver."""
 
     def run_partition(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pdfs = [pdf for pdf in it if len(pdf)]
@@ -398,65 +403,18 @@ def _run_cascade(
         if li.size:
             yield _emit_pairs(cols["id"], li, ri, emds, ordered=ordered)
 
-    return rows.repartition(n_part, "grp").mapInPandas(run_partition, _PAIR_SCHEMA)
+    if stats is not None:
+        stats.add("runner_tasks", width)
+    return rows.repartition(width, "grp").mapInPandas(run_partition, _PAIR_SCHEMA)
 
 
-# minimum rows per task before the parallelism floor widens an input: with
-# fewer, per-task Arrow/UDF overhead exceeds the parallelism it buys
-_FLOOR_ROWS_PER_TASK = 128
-
-
-def _parallelism_floor(df: DataFrame, n_rows: int | None = None) -> DataFrame:
-    """Guarantee CPU parallelism for the per-record Python stages.
-
-    Scan partitioning is BYTE-sized (spark.sql.files.maxPartitionBytes),
-    which is blind to per-row compute: a dense histogram table is tiny on
-    disk (57k records of 27 doubles ~ 12 MB = ONE split), yet every record
-    downstream pays a normal fit, guest-cell screens and possibly an exact
-    LP — measured as a single 456 s task (31/32 cores idle) on the sf1
-    scale run before this guard.  Repartition UP to the session's shuffle
-    parallelism when the input arrives below it; when the input is already
-    at least that wide (any cluster-scale read with real file splits) this
-    is a no-op with no added exchange.  Round-robin repartition, so it
-    never changes results — only where rows sit.
-
-    MISUSE GUARD: probing ``df.rdd.getNumPartitions()`` EXECUTES the
-    upstream plan when the relation is not already materialized (measured
-    +4.0-4.6 s per call on the sf0.1 bridge chains, ABCHECK_r05 §5) — so
-    this helper refuses inputs that are not persisted, leaving a third
-    call site no way to silently pay an extra chain execution (round-5
-    VERDICT next #7).  Both call sites probe cached relations by design.
-    """
-    lvl = df.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        # a narrow projection of a persisted frame is also fine (its own
-        # storageLevel reads NONE but the probe hits the InMemoryRelation);
-        # check the cache-substituted plan for one
-        try:
-            plan = df._jdf.queryExecution().withCachedData().toString()
-        except Exception:
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if "InMemoryRelation" not in plan:
-            raise ValueError(
-                "_parallelism_floor requires a persisted (cache-backed) "
-                "input: probing partition count on a raw chain re-executes "
-                "it. persist() the relation first (see "
-                "emd_join_nd._build_grid_ctx)."
-            )
-    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    if n_rows is not None:
-        # row-aware cap: >= ~_FLOOR_ROWS_PER_TASK rows per task.  Tiny
-        # tables gain nothing from full width — shattering the 72-image
-        # media join into 32 near-empty Arrow/UDF tasks measured +0.9-1.0 s
-        # (round-6 A/B, BENCHAB_r06.md), a pure overhead tax — while the
-        # regimes the floor exists for keep the cap (sf0.1 bridge 5.8k
-        # rows -> 46 > 32 unchanged; sf1 57k rows -> cap).  Callers pass
-        # the count of the already-materialized cache, so this costs no
-        # extra job.
-        target = min(target, max(1, -(-n_rows // _FLOOR_ROWS_PER_TASK)))
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    return df
+# rows one task of a per-record stage must carry to repay its round trip
+# (``_width.TASK_S``).  The grid's records pay the stat pass and then the
+# guest-cell enumeration and replica explode, measured 0.3 s and 3.0 s for
+# sf0.1's 5,793 d=3 records on one task (~0.57 ms a record); the pivot
+# assignment is LP-bound, 6.7 s for them on one task (~1.16 ms a record).
+_GRID_ROWS = int(TASK_S / 0.57e-3)
+_PIVOT_ROWS = int(TASK_S / 1.16e-3)
 
 
 def _centroid_cols(hist: DataFrame, bin_points: np.ndarray, w_col: str) -> DataFrame:
@@ -625,12 +583,14 @@ def _derive_pivots(n: int, arbitrary_cost: bool) -> int:
     return int(np.clip(round(np.sqrt(float(max(n, 4))) / 3.0), 8, 128))
 
 
-def _derive_cell_cap(n: int, n_part: int) -> int:
+def _derive_cell_cap(n: int, width: int) -> int:
     """Auto hot-cell salting cap: ~one equal slice of the record table per
-    shuffle partition, floored at 200 (the measured skew_bench sweet spot —
-    8.3x max-task cut at sf0.1).  Unskewed cells sit far below the cap and
-    are never split; only genuinely hot cells shatter."""
-    return max(200, int(np.ceil(n / float(max(n_part, 1)))))
+    runner task (``width``, the cascade runner's task count), floored at
+    200 (the measured skew_bench sweet spot — 8.3x max-task cut at sf0.1).
+    Unskewed cells sit far below the cap and are never split; only
+    genuinely hot cells shatter.  Salting changes only which sub-group
+    computes a pair, never the candidate set."""
+    return max(200, int(np.ceil(n / float(max(width, 1)))))
 
 
 def emd_join_nd(
@@ -702,6 +662,7 @@ def emd_join_nd(
         )
 
     held: list[DataFrame] = []  # the auto probe's cache, released with the result
+    n_rows = None  # the record count, when a probe already took it
     if strategy == "auto":
         # physical-strategy pick, Catalyst-style: the caller states WHAT
         # (threshold join under this ground), the engine picks HOW.
@@ -729,6 +690,7 @@ def emd_join_nd(
         n_probe = rec.limit(small_probe + 1).count()
         if n_probe <= small_probe:
             strategy = "bruteforce"
+            n_rows = n_probe
         elif minkowski_g is None:
             # the pivot plan's hyperplane windows assume the triangle
             # inequality — a non-metric matrix silently drops qualifying
@@ -743,7 +705,9 @@ def emd_join_nd(
 
     if strategy == "bruteforce":
         return release_on_gc(
-            _block_bruteforce(rec, cfg, theta, num_blocks, two_table, stats=stats),
+            _block_bruteforce(
+                rec, cfg, theta, num_blocks, two_table, stats=stats, n_rows=n_rows
+            ),
             *held,
         )
     if strategy == "pivot":
@@ -948,15 +912,13 @@ def _build_grid_ctx(
         cell = cell * grid + idx_k
 
     stat_udf, stat_len = _stat_udf(cfg)
-    # the parallelism floor sits BETWEEN the caches, after rec0 is
-    # materialized (the boundary agg above always scans it): the partition
-    # probe then reads the in-memory relation without re-running the
-    # upstream plan — probing the RAW input instead would force AQE to
-    # execute the whole chain one extra time (measured ~4 s per query on
-    # the sf0.1 bridge tables).  rec1, the expensive per-record stat pass,
-    # is what actually needs the width; rec0's cheap JVM aggregates do not.
+    # the spread guard sits BETWEEN the caches, after rec0 is materialized
+    # (the boundary agg above always scans it): the partition probe then
+    # reads the in-memory relation without re-running the upstream plan.
+    # rec1, the per-record stat pass, and the guest enumeration that reads
+    # it are what need the width; rec0's cheap JVM aggregates do not.
     rec1 = persist(
-        _parallelism_floor(rec0, n_rec)
+        spread(rec0, n_rec, _GRID_ROWS)
         .withColumn("cell", cell.cast("long"))
         .withColumn("st", stat_udf("w"))
     )
@@ -989,12 +951,6 @@ def _grid_join(
 ) -> DataFrame:
     cfg, d, grid, bnds, cs = ctx.cfg, ctx.d, ctx.grid, ctx.bnds, ctx.cs
     rec1 = ctx.rec1
-    if cell_cap is None:
-        # free: the per-cell counts are already collected; N = their sum
-        n_part_cap = int(
-            rec1.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        cell_cap = _derive_cell_cap(int(cs.cnt.sum()), n_part_cap)
     n_proj = len(cfg.proj_positions)
     n_dual = len(cfg.duals)
 
@@ -1143,6 +1099,12 @@ def _grid_join(
             higher = occ[None, :] > occ[s0:s1, None]
             guests_into[s0:s1] = (near & higher) @ cnt_occ
         load[occ] += guests_into
+    # runner width from the MELODY-Join cost model: a cell's natives meet
+    # every row the cell hosts, so sum(cnt x load) bounds the candidate
+    # pairs.  The per-cell counts are already collected, so it is free.
+    width = task_width(rec1.sparkSession, float(cs.cnt @ load), EMD_PAIRS)
+    if cell_cap is None:
+        cell_cap = _derive_cell_cap(int(cs.cnt.sum()), width)
     salt = _salt_factors(load, cell_cap)
     max_s = int(salt.max()) if salt.size else 1
     if max_s > 1:
@@ -1197,9 +1159,8 @@ def _grid_join(
         )
         return li[keep], ri[keep]
 
-    n_part = int(rec1.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
     return _run_cascade(
-        allrows, cfg, theta, n_part, grid_pairs, stats=stats, ordered=two_table
+        allrows, cfg, theta, width, grid_pairs, stats=stats, ordered=two_table
     )
 
 
@@ -1227,8 +1188,8 @@ def _pivot_join(
        (d(e, P_far) - d(e, P_near)) / 2 <= theta (+slack) — the condition
        under which a qualifying partner can live across the boundary.
     3. Rows explode into their partition keys and run through the shared
-       cascade runner (``_run_cascade``, min(P^2, 4 x shuffle partitions)
-       tasks); ``pivot_pairs`` generates the candidates: base partitions
+       cascade runner (``_run_cascade``, min(P^2, the candidate-pair
+       width) tasks); ``pivot_pairs`` generates the candidates: base partitions
        join all their own pairs; window partitions join base-i x base-j
        rows only.  Each qualifying pair appears exactly once (same base ->
        base partition; different bases i<j -> window (i,j), where the
@@ -1436,9 +1397,11 @@ def _pivot_join(
     # per-record work here is LP-bound (exact EMDs to pivots) — measured
     # 6.7 s on ONE task at sf0.1.  A round-robin repartition of the tiny
     # (id, w) rows costs nothing next to the work it parallelizes.
-    rec_in = _parallelism_floor(
+    n = rec.count()  # cached by the pivot sample above: metadata-cheap
+    rec_in = spread(
         rec.select("id", "w", F.col("side").cast("long").alias("side")),
-        rec.count(),  # cached by the pivot sample above: metadata-cheap
+        n,
+        _PIVOT_ROWS,
     )
     with_d = rec_in.mapInPandas(dists_part, dist_schema)
     # partition keys: base partition (b, b) always; window (i, j), i<j, when
@@ -1518,15 +1481,17 @@ def _pivot_join(
             li, ri = li[keep], ri[keep]
         return li, ri
 
-    # task count: P^2 groups packed into 4 bins per core.  Round 10: a task
-    # count of spark.sql.shuffle.partitions packed ~P^2/2 CPU-weighted
-    # groups into (cores) bins by hash — measured ~50% parallel efficiency
-    # at sf0.1 (234.8 core-s of group work, 32 tasks, 15-19 s of join-stage
-    # wall vs the 7.3 s ideal; worst group 6.8 s).  Partition memory is
-    # bounded: one partition holds ~P*P-th of the replicated rows.
-    n_part = int(rec.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    target = int(min(max(P * P, 1), 4 * n_part))
-    return _run_cascade(expanded, cfg, theta, target, pivot_pairs, stats=stats)
+    # task count from the candidate pairs: an unordered pair is a candidate
+    # in at most one group (its base partition, or the window of its two
+    # bases), so n^2/2 bounds them, and no more tasks than the P^2 groups.
+    # Round 10: one wave packed ~P^2/2 CPU-weighted groups into (cores)
+    # bins by hash — measured ~50% parallel efficiency at sf0.1 (234.8
+    # core-s of group work, 32 tasks, 15-19 s of join-stage wall vs the
+    # 7.3 s ideal; worst group 6.8 s) — so large work takes the helper's
+    # several waves.  Partition memory is bounded: one partition holds
+    # ~P*P-th of the replicated rows.
+    width = min(P * P, task_width(rec.sparkSession, n * n / 2.0, EMD_PAIRS))
+    return _run_cascade(expanded, cfg, theta, width, pivot_pairs, stats=stats)
 
 
 # ---------------------------------------------------------------------------
@@ -1540,6 +1505,7 @@ def _block_bruteforce(
     num_blocks: int,
     two_table: bool = False,
     stats: "JoinStats | None" = None,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """All-pairs block join (J7 semantics, bsp/BaselineBSP.join:274-345).
 
@@ -1549,8 +1515,9 @@ def _block_bruteforce(
     full B x B block grid, R rows fan out over rows of the grid, S rows over
     columns.  Its candidates are every pair of the block pair, independent
     of any geometric window, which keeps it the other strategies' oracle;
-    the groups run through the shared cascade runner in one wave of tasks
-    (at most one per core)."""
+    the groups run through the shared cascade runner.  ``n_rows``, when the
+    caller already counted the records, sizes the runner by its candidate
+    pairs (at most n^2/2); without it the runner takes one wave."""
     P = int(num_blocks)
     blk = F.pmod(F.xxhash64(F.col("id")), F.lit(P))
     rec = rec.withColumn("blk", blk)
@@ -1587,16 +1554,14 @@ def _block_bruteforce(
             right = idx[blks == gj]
         return np.repeat(left, right.size), np.tile(right, left.size)
 
-    # one wave of tasks: the B(B+1)/2 (two-table B^2) groups are few and
-    # equally sized, and every mapInPandas task pays a fixed Arrow/worker
-    # round trip — on a 4-core host 32 bare tasks took 2.1-2.7 s against
-    # 0.4-0.6 s for 4, which made a 900-row reference join 2.5x slower at
-    # spark.sql.shuffle.partitions tasks than at one per core
+    # the B(B+1)/2 (two-table B^2) groups are few and equally sized, so
+    # never more tasks than groups; every candidate pair is an entry of
+    # one block pair
     n_groups = P * P if two_table else P * (P + 1) // 2
-    n_part = rec.sparkSession.sparkContext.defaultParallelism
+    work = None if n_rows is None else n_rows * n_rows / 2.0
+    width = min(n_groups, task_width(rec.sparkSession, work, EMD_PAIRS))
     return _run_cascade(
-        expanded, cfg, theta, min(n_groups, n_part), block_pairs,
-        stats=stats, ordered=two_table,
+        expanded, cfg, theta, width, block_pairs, stats=stats, ordered=two_table,
     )
 
 
@@ -1817,6 +1782,7 @@ def emd_knn(
         knn_block,
         "qid long, nid long, emd double",
         rank,
+        unit=EMD_PAIRS,  # each entry pays the lower-bound screens
         distributed=distributed,
         collect_threshold=collect_threshold,
         op="emd_knn",
@@ -1945,7 +1911,7 @@ def emd_topk_nd(
     if n * (n - 1) // 2 < k:
         scored = _block_bruteforce(
             rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks,
-            stats=stats,
+            stats=stats, n_rows=rec_n,
         )
     else:
         # the ceiling is the kth-smallest EXACT EMD among the sample's
@@ -1997,7 +1963,7 @@ def emd_topk_nd(
             # which needs no radius (round-4 ADVICE, emd_join_nd.py:1669)
             scored = _block_bruteforce(
                 rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks,
-                stats=stats,
+                stats=stats, n_rows=rec_n,
             )
     if scored is None:
         if stats is not None:

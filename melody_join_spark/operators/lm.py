@@ -143,12 +143,12 @@ def unigram_lm(
     """
     toks = _word_tokens(F.coalesce(F.col(text_col), F.lit("")))
     # tokenize+explode runs in the SCAN stage, so a single-file corpus would
-    # run the whole token pass on one core (guide §2.5 input skew); _spread
+    # run the whole token pass on one core (guide §2.5 input skew); spread
     # is a no-op at real scale (thousands of splits)
-    from .dedup import _spread
+    from ._width import spread
 
     cnt = (
-        _spread(df).select(F.explode(toks).alias("w"))
+        spread(df).select(F.explode(toks).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -396,9 +396,9 @@ def dsir_weights(
             feats = F.concat(feats, word_ngram_windows(t, n))
     # single-split guard: the feature explode (tokens + hashed bigrams) is
     # scan-stage expression work — see the bigram_lm note (guide §2.5)
-    from .dedup import _spread
+    from ._width import spread
 
-    ex = _spread(df).select(
+    ex = spread(df).select(
         target.cast("int").alias("_t"), F.explode(feats).alias("w")
     ).select("_t", _bucket(F.col("w"), n_buckets).alias("b"))
     rows = (
@@ -591,9 +591,9 @@ def bigram_lm(
     # window pass allocates a pair string per token and measured 3.5 s on
     # one core at sf0.1 vs ~0.15 s spread (guide §2.5); no-op when the
     # corpus already arrives in many splits
-    from .dedup import _spread
+    from ._width import spread
 
-    df = _spread(df)
+    df = spread(df)
 
     # ONE cached (kind, key)-count relation serves the unigram model, the
     # bigram counts AND the bigram heads' raw counts.  Earlier cuts paid a

@@ -1523,13 +1523,13 @@ def decode_features(
     # select() before mapInPandas prunes every other column from the scan.
     # Parallelism normally comes from the source layout (spark.sql.files.
     # maxPartitionBytes) — at 100 TB the corpus arrives in thousands of
-    # splits and _spread is a no-op, so content bytes are never shuffled
+    # splits and spread is a no-op, so content bytes are never shuffled
     # there.  The guard only fires for few-split local inputs, where the
     # decode otherwise runs on one core (measured 2.6 s single-task for
     # the 5k-doc byte-histogram pass at sf0.1 vs ~0.15 s spread).
-    from .dedup import _spread
+    from ._width import spread
 
-    return _spread(df.select("media_id", "content")).mapInPandas(
+    return spread(df.select("media_id", "content")).mapInPandas(
         run, out_schema
     )
 

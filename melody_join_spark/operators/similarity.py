@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist, release_on_gc
 from ._probe import lookup_rows, run_query_blocks
+from ._width import CROSS_PAIRS, TASK_S, spread, task_width
 
 _log = logging.getLogger("melody_join_spark.similarity")
 
@@ -59,12 +60,26 @@ def _norm_expr(v: str) -> Column:
     )
 
 
+def _cos(dot: Column, den: Column) -> Column:
+    """``dot / den`` for a cosine whose norm product is ``den``.  A zero
+    vector has no direction; its cosine with anything is defined as 0.0 on
+    every path of this module (ANSI division by zero would fail the
+    query)."""
+    return F.when(den == 0, F.lit(0.0)).otherwise(dot / den)
+
+
+def _np_cos(dot: np.ndarray, den: np.ndarray) -> np.ndarray:
+    """numpy twin of :func:`_cos`: 0.0 where the norm product is 0."""
+    return np.divide(dot, den, out=np.zeros_like(dot), where=den != 0)
+
+
 def cosine_expr(va: str = "va", vb: str = "vb", na: str = "na", nb: str = "nb") -> Column:
-    """cos = dot(va, vb) / (na * nb) with precomputed norms."""
+    """cos = dot(va, vb) / (na * nb) with precomputed norms (0.0 for a zero
+    vector)."""
     dot = F.aggregate(
         F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
     )
-    return dot / (F.col(na) * F.col(nb))
+    return _cos(dot, F.col(na) * F.col(nb))
 
 
 def _sides(emb: DataFrame, id_col: str, vec_col: str) -> tuple[DataFrame, DataFrame]:
@@ -76,33 +91,12 @@ def _sides(emb: DataFrame, id_col: str, vec_col: str) -> tuple[DataFrame, DataFr
     return a, b
 
 
-# Pair evaluations one exact cross-join task should hold: ~2e6 dim<=64 dot
-# products keeps a task in the tens-of-ms band (measured: sf0.1's 6.4k
-# vectors = 2.0e7 pairs over 32 tasks ~ 1 s total), small enough for AQE /
-# speculation to absorb stragglers without per-task overhead dominating.
-_CROSS_PAIRS_PER_TASK = 2_000_000
-# ... but never more than this many task WAVES per core: past the point
-# where every core has 8 tasks queued, extra splits only add scheduler and
-# Arrow-batch overhead (the skew-resilience payoff has flattened).
-_CROSS_MAX_WAVES = 8
-
-
-def _cross_width(spark, n: int | None = None) -> int:
-    """Task width for the exact all-pairs cross join — derived, never
-    hard-coded (round-8 VERDICT next #5: a literal 32 was a cluster-wide
-    parallelism ceiling once ``recall_target>=1.0`` started routing up to
-    10^6 vectors here).  Floor = ``defaultParallelism`` (every core gets
-    work on any cluster size); when the caller knows N, widen toward one
-    task per ``_CROSS_PAIRS_PER_TASK`` pair evaluations, capped at
-    ``_CROSS_MAX_WAVES`` waves so a 10^6-vector exact join becomes many
-    bounded tasks instead of 32 monsters — on local[32] every driver/bench
-    shape (N <= ~11k) resolves to exactly the old width of 32, so walls
-    and hashes are unchanged where it was already right."""
-    dp = int(spark.sparkContext.defaultParallelism)
-    if n is None:
-        return dp
-    need = -(-(n * n // 2) // _CROSS_PAIRS_PER_TASK)
-    return int(min(max(dp, need), _CROSS_MAX_WAVES * dp))
+# Block entries one cogrouped cosine_topk task should hold: a (q x db)
+# entry costs ~0.024 us in the normalized matmul and ~0.44 us in the
+# fold_exact left fold plus its per-row lexsort (dim 64, numpy, measured on
+# 2,000 x 2,000 sf0.1 embeddings), against ``TASK_S`` of task round trip.
+_TOPK_ENTRIES = int(TASK_S / 0.024e-6)
+_TOPK_FOLD_ENTRIES = int(TASK_S / 0.44e-6)
 
 
 def cosine_pairs(
@@ -115,10 +109,13 @@ def cosine_pairs(
     """All pairs with cosine >= threshold -> (rid, sid, cosine).  Brute-force
     cross join — the correctness oracle for the LSH variant.  ``n`` (row
     count, when the caller already knows it — :func:`similar_pairs` passes
-    its dispatch count through) sizes the task width via
-    :func:`_cross_width`; results never depend on it."""
+    its dispatch count through) sizes the task width by its N^2/2 pairs
+    (:func:`._width.task_width`); results never depend on it.  A zero
+    vector's cosine is 0.0."""
     a, b = _sides(emb, id_col, vec_col)
-    width = _cross_width(emb.sparkSession, n)
+    width = task_width(
+        emb.sparkSession, None if n is None else n * n / 2.0, CROSS_PAIRS
+    )
     pairs = a.repartition(width).crossJoin(b).where(F.col("rid") < F.col("sid"))
     return pairs.select("rid", "sid", cosine_expr().alias("cosine")).where(
         F.col("cosine") >= threshold
@@ -137,13 +134,15 @@ WITH e AS (
   SELECT {id_col} AS id, list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS v
   FROM {table}
 ),
-n AS (SELECT id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e)
-SELECT a.id AS rid, b.id AS sid,
-       list_sum(list_transform(range(1, {dim + 1}), i -> a.v[i] * b.v[i]))
-         / (a.nrm * b.nrm) AS cosine
-FROM n a JOIN n b ON a.id < b.id
-WHERE list_sum(list_transform(range(1, {dim + 1}), i -> a.v[i] * b.v[i]))
-        / (a.nrm * b.nrm) >= {threshold}"""
+n AS (SELECT id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
+p AS (
+  SELECT a.id AS rid, b.id AS sid,
+         CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
+              ELSE list_sum(list_transform(range(1, {dim + 1}), i -> a.v[i] * b.v[i]))
+                     / (a.nrm * b.nrm) END AS cosine
+  FROM n a JOIN n b ON a.id < b.id
+)
+SELECT rid, sid, cosine FROM p WHERE cosine >= {threshold}"""
 
 
 def _rank_topk(local: DataFrame, k: int, round_to: int | None) -> DataFrame:
@@ -204,6 +203,9 @@ def cosine_topk(
     tie order, so exact-duplicate vectors never drop nondeterministically
     at the block boundary.  ~3x the matmul's constant; same asymptotics.
 
+    A zero vector's cosine is 0.0 on both paths, with and without
+    ``fold_exact``.
+
     A query set over ``collect_threshold`` with ``distributed=False`` is
     rejected with a clear error instead of silently bottlenecking the
     driver."""
@@ -234,7 +236,7 @@ def cosine_topk(
                 S += Q[:, j : j + 1] * V[None, :, j]
                 nq2 += Q[:, j] * Q[:, j]
                 nv2 += V[:, j] * V[:, j]
-            S = S / (np.sqrt(nq2)[:, None] * np.sqrt(nv2)[None, :])
+            S = _np_cos(S, np.sqrt(nq2)[:, None] * np.sqrt(nv2)[None, :])
             # global tie order
             idx = np.stack([np.lexsort((ids, -row))[:kk] for row in S])
             cos = np.take_along_axis(S, idx, axis=1).ravel()
@@ -258,6 +260,7 @@ def cosine_topk(
         block,
         "qid long, nid long, cosine double",
         lambda local: _rank_topk(local, k, round_to),
+        unit=_TOPK_FOLD_ENTRIES if fold_exact else _TOPK_ENTRIES,
         distributed=distributed,
         collect_threshold=collect_threshold,
         op="cosine_topk",
@@ -497,7 +500,7 @@ def ivf_search(
         F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
     )
     scored = cand.select(
-        "qid", "nid", (dot / (nrm * F.col("qn"))).alias("cosine")
+        "qid", "nid", _cos(dot, nrm * F.col("qn")).alias("cosine")
     )
     return _rank_topk(scored, k, round_to)
 
@@ -658,9 +661,7 @@ def lsh_cosine_pairs(
     # single-split guard (guide §2.5): the norm fold, the sketch UDF and
     # both verify join-backs all read this relation; a one-file embeddings
     # table would otherwise run them at parallelism 1 (no-op at scale)
-    from .dedup import _spread
-
-    e = _spread(
+    e = spread(
         emb.select(F.col(id_col).alias("id"), _as_double(vec_col).alias("v"))
     ).withColumn("nrm", _norm_expr("v"))
 
@@ -867,7 +868,7 @@ def ivf_cosine_pairs(
             rj = np.concatenate(
                 [np.arange(i + 1, m, dtype=np.int64) for i in range(i0, i1)]
             )
-            cos = _fold_dots(V[li], V[rj]) / (nrm[li] * nrm[rj])
+            cos = _np_cos(_fold_dots(V[li], V[rj]), nrm[li] * nrm[rj])
             keep = cos >= thr
             if keep.any():
                 out.append(_emit(ids[li[keep]], ids[rj[keep]], cos[keep]))
@@ -881,7 +882,7 @@ def ivf_cosine_pairs(
             i1 = min(i0 + B, m1)
             li = np.repeat(np.arange(i0, i1, dtype=np.int64), m2)
             rj = np.tile(np.arange(m2, dtype=np.int64), i1 - i0)
-            cos = _fold_dots(V1[li], V2[rj]) / (nrm1[li] * nrm2[rj])
+            cos = _np_cos(_fold_dots(V1[li], V2[rj]), nrm1[li] * nrm2[rj])
             keep = cos >= thr
             if keep.any():
                 out.append(_emit(ids1[li[keep]], ids2[rj[keep]], cos[keep]))

@@ -191,3 +191,21 @@ def test_library_persists_only_through_cache_helper():
         if re.search(r"\.persist\(", line)
     ]
     assert not hits, hits
+
+
+def test_operators_size_tasks_only_through_width_helper():
+    """Every operator task count comes from ``_width.task_width``: reading
+    ``spark.sql.shuffle.partitions`` or ``defaultParallelism`` elsewhere
+    under ``operators/`` would bring back a fixed width that ignores the
+    work a task carries."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    ops = root / "melody_join_spark" / "operators"
+    helper = ops / "_width.py"
+    hits = [
+        f"{f.relative_to(root)}:{i}"
+        for f in sorted(ops.rglob("*.py"))
+        if f != helper
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if re.search(r"shuffle\.partitions|defaultParallelism", line)
+    ]
+    assert not hits, hits

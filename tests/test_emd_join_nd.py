@@ -581,18 +581,19 @@ def test_topk_degenerate_seed_falls_back_to_bruteforce(
 def test_parallelism_floor_widens_without_reexecuting_upstream(
     spark, hist_df, bins_2d, monkeypatch
 ):
-    """The stat-stage parallelism floor must (a) widen a narrow input up to
-    the session shuffle parallelism so per-record Python kernels never run
-    single-task on a small-but-dense table (one 12 MB parquet split held a
-    measured 456 s task at sf1 before the floor), and (b) probe the
-    partition count on the MATERIALIZED centroid cache, never on the raw
-    plan — rdd.getNumPartitions() on an un-executed AQE plan runs the whole
+    """The stat-stage spread guard must (a) widen a narrow input up to its
+    row-derived width so per-record Python kernels never run single-task
+    on a small-but-dense table (one 12 MB parquet split held a measured
+    456 s task at sf1 before the guard), and (b) probe the partition count
+    on the MATERIALIZED centroid cache, never on the raw plan —
+    rdd.getNumPartitions() on an un-executed AQE plan runs the whole
     upstream chain an extra time.  Guarded here with a counting pandas UDF
     upstream of a coalesce(1): every upstream row evaluation increments an
     accumulator, and one grid-ctx build must evaluate each row EXACTLY
     once."""
     from pyspark.sql import functions as F  # noqa: F811
 
+    from melody_join_spark.operators._width import task_width
     from melody_join_spark.operators.emd_join_nd import (
         _build_grid_ctx,
         build_config,
@@ -623,15 +624,15 @@ def test_parallelism_floor_widens_without_reexecuting_upstream(
         np.atleast_2d(np.asarray(bins_2d, dtype=np.float64)), seed=42
     )
     # simulate the sf1 regime (many rows per task) on the tiny test table:
-    # with the real 128-rows-per-task cap a table this small would be LEFT
+    # with the real rows-per-task unit a table this small would be LEFT
     # NARROW by design (see test_parallelism_floor_row_aware)
     import melody_join_spark.operators.emd_join_nd as EJ
 
-    monkeypatch.setattr(EJ, "_FLOOR_ROWS_PER_TASK", 1)
+    monkeypatch.setattr(EJ, "_GRID_ROWS", 1)
     ctx = _build_grid_ctx(
         narrow, np.asarray(bins_2d, dtype=np.float64), cfg, grid=3
     )
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    target = task_width(spark, n, 1)
     assert ctx.rec1.rdd.getNumPartitions() >= min(target, n)
     assert acc.value == n, (
         f"upstream evaluated {acc.value} rows for {n} inputs — the floor "
@@ -641,64 +642,71 @@ def test_parallelism_floor_widens_without_reexecuting_upstream(
 
 
 def test_parallelism_floor_row_aware(spark, hist_df):
-    """With a row count supplied, the floor keeps >= _FLOOR_ROWS_PER_TASK
-    rows per task: a tiny table is LEFT NARROW (shattering 72 media rows
-    into 32 near-empty Arrow/UDF tasks measured +0.9-1.0 s, BENCHAB_r06),
-    while a row count in the straggler regime still widens to the session
-    cap."""
-    from melody_join_spark.operators.emd_join_nd import (
-        _FLOOR_ROWS_PER_TASK,
-        _parallelism_floor,
-    )
+    """With a row count supplied, the guard keeps >= ``unit`` rows per
+    task: a tiny table is LEFT NARROW (shattering 72 media rows into 32
+    near-empty Arrow/UDF tasks measured +0.9-1.0 s, BENCHAB_r06), while a
+    row count in the straggler regime still widens to the full cap of
+    WAVES x defaultParallelism.  Without a row count the width is one task
+    per core."""
+    from melody_join_spark.operators._width import WAVES, spread
+    from melody_join_spark.operators.emd_join_nd import _GRID_ROWS
 
-    target = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    dp = spark.sparkContext.defaultParallelism
+    cap = WAVES * dp
     cached = hist_df.coalesce(2).persist()
     try:
         n = cached.count()
-        assert n < _FLOOR_ROWS_PER_TASK * target  # fixture is tiny
-        narrow_kept = _parallelism_floor(cached, n)
+        assert n < _GRID_ROWS * cap  # fixture is tiny
+        narrow_kept = spread(cached, n, _GRID_ROWS)
         assert (
             narrow_kept.rdd.getNumPartitions()
-            <= max(2, -(-n // _FLOOR_ROWS_PER_TASK))
+            <= max(2, -(-n // _GRID_ROWS))
         )
-        widened = _parallelism_floor(cached, _FLOOR_ROWS_PER_TASK * target)
-        assert widened.rdd.getNumPartitions() >= target
-        # unknown row count: conservative full widening (straggler-safe)
-        unknown = _parallelism_floor(cached)
-        assert unknown.rdd.getNumPartitions() >= target
+        widened = spread(cached, _GRID_ROWS * cap, _GRID_ROWS)
+        assert widened.rdd.getNumPartitions() >= cap
+        # unknown row count: one task per core (straggler-safe)
+        unknown = spread(cached)
+        assert unknown.rdd.getNumPartitions() >= dp
     finally:
         cached.unpersist()
 
 
-def test_parallelism_floor_rejects_unpersisted_input(spark, hist_df):
-    """Misuse guard (round-5 VERDICT next #7): _parallelism_floor's
-    partition probe executes the upstream plan when the relation is not
-    cache-backed, so a raw chain must be REFUSED loudly — a future call
-    site cannot silently pay an extra chain execution.  Directly-persisted
-    frames AND narrow projections of persisted frames (whose own
-    storageLevel reads NONE but whose probe hits the InMemoryRelation)
-    must both pass."""
+def test_spread_guard_never_probes_an_uncached_wide_chain(spark, hist_df):
+    """The guard's partition probe executes the upstream plan when a wide
+    operator sits above every cache, so such a chain must come back
+    UNTOUCHED with no job run — a call site cannot silently pay an extra
+    chain execution.  A narrow chain is probed without a job;
+    directly-persisted frames AND narrow projections of persisted frames
+    (whose own storageLevel reads NONE, so the guard reads the
+    cache-substituted plan) are probed and widened even when the cached
+    plan itself is wide."""
     from melody_join_spark import cache
-    from melody_join_spark.operators.emd_join_nd import _parallelism_floor
+    from melody_join_spark.operators._width import spread
 
     # earlier operators in the module (e.g. the distributed kNN) may hold
     # two-phase-released caches whose plan sameResults this projection —
-    # the raw chain would then legitimately be cache-backed and the guard
-    # (correctly) would not fire; re-establish the test's premise first
+    # the raw chain would then legitimately be cache-backed; re-establish
+    # the test's premise first
     cache.release_caches(spark)
+    tracker = spark.sparkContext.statusTracker()
 
-    raw = hist_df.selectExpr("id", "w")  # un-persisted chain
-    with pytest.raises(ValueError, match="persist"):
-        _parallelism_floor(raw)
+    def jobs() -> int:
+        return len(tracker.getJobIdsForGroup(None))
 
-    cached = hist_df.persist()
+    wide = hist_df.repartition(3, "id").selectExpr("id", "w")  # un-persisted
+    j0 = jobs()
+    assert spread(wide, 10**9, 1) is wide
+    raw = hist_df.selectExpr("id", "w")  # narrow, un-persisted
+    spread(raw, 10**9, 1)
+    assert jobs() == j0, "the guard executed an uncached chain"
+
+    cached = hist_df.repartition(1, "id").persist()
     try:
         cached.count()
-        assert _parallelism_floor(cached) is not None
-        # projection of a persisted frame must pass too (whether Spark
-        # reports the cache's storageLevel on it or the guard falls back
-        # to finding the InMemoryRelation in the substituted plan)
+        assert spread(cached) is not None
         proj = cached.select("id", "w")
-        assert _parallelism_floor(proj) is not None
+        widened = spread(proj, 10**9, 1)
+        assert widened is not proj
+        assert widened.rdd.getNumPartitions() > 1
     finally:
         cached.unpersist()

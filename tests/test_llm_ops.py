@@ -695,6 +695,32 @@ def test_dedupe_incremental(docs, spark):
         assert 10_002 not in kept, method
 
 
+def test_zero_vector_cosine_is_zero_on_every_path(spark):
+    """A zero vector has one documented cosine, 0.0, on every path:
+    cosine_pairs (the SQL expression, which ANSI division by zero used to
+    fail), and cosine_topk on the lookup and the blocked path, with and
+    without fold_exact (whose 0/0 used to come back null)."""
+    vecs = spark.createDataFrame(
+        [(1, [0.0, 0.0, 0.0]), (2, [1.0, 0.0, 0.0]), (3, [1.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    half = 1.0 / np.sqrt(2.0)
+    want = {(1, 2): 0.0, (1, 3): 0.0, (2, 3): half}
+    got = {(r.rid, r.sid): r.cosine for r in cosine_pairs(vecs, -1.0).collect()}
+    assert got.keys() == want.keys()
+    assert all(got[p] == pytest.approx(want[p], abs=1e-12) for p in want)
+    both = {**want, **{(b, a): c for (a, b), c in want.items()}}
+    for fold_exact in (False, True):
+        for dist in (False, True):
+            rows = cosine_topk(
+                vecs, vecs, k=2, distributed=dist, fold_exact=fold_exact
+            ).collect()
+            got = {(r.qid, r.nid): r.cosine for r in rows}
+            assert got.keys() == both.keys(), (fold_exact, dist)
+            for p, c in both.items():
+                assert got[p] == pytest.approx(c, abs=1e-12), (p, fold_exact, dist)
+
+
 def test_cosine_topk_distributed_matches_collected(spark, emb):
     """The cogrouped block path (no driver collect) returns exactly the
     collected-broadcast path's ranking and unrounded cosines, in both
@@ -986,7 +1012,7 @@ def test_jaccard_tokens_spread_guard(spark):
 
 
 def test_spread_skips_wide_plans_without_execution(spark):
-    """Round-11 optimization pin: `_spread` must NOT probe `.rdd` on an
+    """Round-11 optimization pin: `spread` must NOT probe `.rdd` on an
     input whose plan already contains a wide operator — under AQE that
     probe EAGERLY executes every upstream shuffle stage, so the LM trainer
     spreading its cleaned (aggregated) input re-ran the whole pipeline
@@ -994,7 +1020,7 @@ def test_spread_skips_wide_plans_without_execution(spark):
     sf0.1).  Wide inputs come back untouched (they are already partitioned
     by spark.sql.shuffle.partitions); narrow single-split inputs still
     spread (the test above)."""
-    from melody_join_spark.operators.dedup import _spread
+    from melody_join_spark.operators._width import spread
 
     import pyspark.sql.functions as F
 
@@ -1003,12 +1029,12 @@ def test_spread_skips_wide_plans_without_execution(spark):
     )
     agg = docs.groupBy("k").agg(F.count("*").alias("c"))
     jobs_before = len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
-    out = _spread(agg)
+    out = spread(agg)
     assert out is agg  # untouched, no repartition inserted
     jobs_after = len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
     assert jobs_after == jobs_before  # and no eager AQE stage execution
     joined = docs.join(agg, "k")
-    assert _spread(joined) is joined
+    assert spread(joined) is joined
 
 
 def test_derive_nprobe_recall_target_properties():
@@ -1165,36 +1191,32 @@ def test_similar_pairs_auto_derived_relation_single_scan(spark, emb):
 
 
 def test_cross_width_derivation(spark, emb):
-    """cosine_pairs' task width is derived, not the old literal 32
-    (round-8 VERDICT next #5): floor = defaultParallelism, widened toward
-    one task per _CROSS_PAIRS_PER_TASK pair evals, capped at
-    _CROSS_MAX_WAVES waves."""
-    from melody_join_spark.operators.similarity import (
-        _CROSS_MAX_WAVES,
-        _CROSS_PAIRS_PER_TASK,
-        _cross_width,
-    )
+    """cosine_pairs' task width is derived from its N^2/2 pairs through the
+    one width helper, not the old literal 32 (round-8 VERDICT next #5): one
+    task per CROSS_PAIRS pair evals, at least one, capped at WAVES waves;
+    without a count hint, one wave."""
+    from melody_join_spark.operators._width import CROSS_PAIRS, WAVES, task_width
 
     dp = spark.sparkContext.defaultParallelism
 
+    def width(n):  # cosine_pairs' work: N^2/2 pairs, unknown without N
+        return task_width(spark, None if n is None else n * n / 2.0, CROSS_PAIRS)
+
     def derived(n):
-        return min(
-            max(dp, -(-(n * n // 2) // _CROSS_PAIRS_PER_TASK)), _CROSS_MAX_WAVES * dp
-        )
+        return min(max(1, -(-(n * n // 2) // CROSS_PAIRS)), WAVES * dp)
 
     # no count hint -> exactly the cluster width (the old local[32] shape)
-    assert _cross_width(spark) == dp
-    # small N -> floor holds (every core gets work, nothing shatters)
-    assert _cross_width(spark, 1000) == dp
-    # bench/driver shapes (N <= ~11k on 32 cores) keep the historical 32;
-    # 6400 vectors need 11 tasks, so below 11 cores the derivation widens
-    assert _cross_width(spark, 6400) == derived(6400)
-    # huge N -> widens past the floor but never beyond the wave cap:
-    # 10^6 vectors = 5e11 pairs would need 2.5e5 tasks; capped at 8 waves
+    assert width(None) == dp
+    # small N -> one task: 5e5 pair evals do not repay a second task
+    assert width(1000) == 1
+    # 6400 vectors need 11 tasks of CROSS_PAIRS each
+    assert width(6400) == derived(6400) == min(11, WAVES * dp)
+    # huge N -> widens past one wave but never beyond the wave cap:
+    # 10^6 vectors = 5e11 pairs would need 2.5e5 tasks
     n = 10**6
-    w = _cross_width(spark, n)
+    w = width(n)
     assert w == derived(n)
-    assert w == _CROSS_MAX_WAVES * dp  # the cap binds at 10^6 on any <=31k-core cluster
+    assert w == WAVES * dp  # the cap binds at 10^6 on any <=31k-core cluster
     # plan shape: the width actually lands in the physical plan
     df = cosine_pairs(emb, 0.25, n=n)
     assert f"RoundRobinPartitioning({w}" in df._jdf.queryExecution().executedPlan().toString() or (
