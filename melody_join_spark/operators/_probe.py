@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import persist, release_on_gc
+from ._sqltext import sql_longs
 from ._width import spread, task_width
 
 Prep = Callable[[pd.DataFrame], Any]
@@ -133,10 +134,10 @@ def cogroup_blocks(
     # key columns LONG on both sides: int-typed exploded literals silently
     # fail to align with pmod(xxhash64)'s long in the cogroup
     q2 = q.withColumn("qc", F.pmod(F.xxhash64(q_id), F.lit(qcN))).withColumn(
-        "dc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(dcN)]))
+        "dc", F.explode(F.expr(sql_longs(range(dcN))))
     )
     d2 = db.withColumn("dc", F.pmod(F.xxhash64(db_id), F.lit(dcN))).withColumn(
-        "qc", F.explode(F.array(*[F.lit(i).cast("long") for i in range(qcN)]))
+        "qc", F.explode(F.expr(sql_longs(range(qcN))))
     )
 
     def group(qpdf: pd.DataFrame, dpdf: pd.DataFrame) -> pd.DataFrame:

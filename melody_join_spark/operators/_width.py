@@ -13,7 +13,14 @@ per-partition cascade set-up).  On a 4-core ``local[4]`` host the 900-row
 d=3 grid self-join's runner stage took 2.8-3.2 s in 32 tasks while its own
 work, 65,422 candidate pairs and 321 exact LPs, is well under 0.5 s: 8
 waves of ~0.35 s, so a task costs about ``TASK_S = 0.3`` s before it does
-any work.  A unit is then ``TASK_S`` over the per-unit cost of the stage:
+any work.  Most of that turned out to be pyspark's per-task re-read of every
+zip archive on the worker's path, which ``melody_join_spark._daemon`` now
+skips: on the same host a no-op 32-task ``mapInPandas`` stage over 3,200
+rows fell from 2.2-3.0 s to 1.05-1.25 s, a task from launch to finish from a
+median of 0.24-0.35 s to 0.11-0.14 s.  ``TASK_S`` keeps its 0.3 s, so every
+width, plan shape and task count stays as it was; re-deriving it from the
+new round trip needs its own A/B.  A unit is then ``TASK_S`` over the
+per-unit cost of the stage:
 
 - a candidate pair through the bound cascade costs ~6.4 us
   (``kernel.bounds_us_per_pair`` of perfbench's kernel probe), so a runner

@@ -43,6 +43,7 @@ from ._probe import broadcast_blocks, lookup_rows
 from .emd_join_nd import (
     NdJoinConfig,
     _cascade_for,
+    _cell_expr,
     _centroid_cols,
     _grid_boundaries,
     build_config,
@@ -66,17 +67,6 @@ class EmdIndex:
         self.bnds = bnds        # (d, grid-1) quantile boundaries
         self.cfg = cfg
         self.grid = grid
-
-
-def _cell_expr(bnds: np.ndarray, grid: int) -> F.Column:
-    d = bnds.shape[0]
-    cell = F.lit(0)
-    for k in range(d):
-        idx_k = F.lit(0)
-        for b in bnds[k]:
-            idx_k = idx_k + F.when(F.col(f"cent_{k}") >= float(b), 1).otherwise(0)
-        cell = cell * grid + idx_k
-    return cell.cast("long")
 
 
 def emd_index_build(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..cache import persist, release_on_gc
+from ._sqltext import sql_doubles
 from ._width import CROSS_PAIRS, task_width
 
 __all__ = [
@@ -58,8 +59,8 @@ def pair_emd_expr(
     ta, tb = F.col(total_a), F.col(total_b)
     diffs = F.zip_with(cum_a, cum_b, lambda x, y: F.abs(x * tb - y * ta))
     if positions is not None:
-        dx = [float(d) for d in np.diff(np.asarray(positions, dtype=np.float64))] + [0.0]
-        diffs = F.zip_with(diffs, F.array(*[F.lit(d) for d in dx]), lambda d, s: d * s)
+        dx = [*np.diff(np.asarray(positions, dtype=np.float64)), 0.0]
+        diffs = F.zip_with(diffs, F.expr(sql_doubles(dx)), lambda d, s: d * s)
     num = F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
     return num / (ta * tb)
 
@@ -72,7 +73,7 @@ def with_mean_position(df: DataFrame, positions: np.ndarray | None = None) -> Da
     if positions is None:
         idx = F.transform(F.sequence(F.lit(0), F.size("w") - 1), lambda i: i.cast("double"))
     else:
-        idx = F.array(*[F.lit(float(p)) for p in np.asarray(positions)])
+        idx = F.expr(sql_doubles(np.asarray(positions)))
     dot = F.aggregate(
         F.zip_with("w", idx, lambda wv, x: wv * x), F.lit(0.0), lambda a, x: a + x
     )

@@ -74,6 +74,7 @@ from ..kernel import (
     projection_positions,
 )
 from ._probe import run_query_blocks
+from ._sqltext import sql_double, sql_doubles
 from ._width import EMD_PAIRS, TASK_S, spread, task_width
 
 __all__ = [
@@ -424,17 +425,20 @@ def _centroid_cols(hist: DataFrame, bin_points: np.ndarray, w_col: str) -> DataF
     Zero-mass rows are REJECTED here (their centroid is undefined; the
     kernel's normalize() would leave them as zero vectors whose EMD to
     everything is 0 — mirroring build_histograms' total > 0 ingestion filter
-    keeps every strategy consistent)."""
-    d = bin_points.shape[1]
-    total = F.aggregate(w_col, F.lit(0.0), lambda a, x: a + x)
-    out = hist.withColumn("_tot", total).where(F.col("_tot") > 0)
-    for k in range(d):
-        coords = F.array(*[F.lit(float(b)) for b in bin_points[:, k]])
-        dot = F.aggregate(
-            F.zip_with(w_col, coords, lambda w, c: w * c), F.lit(0.0), lambda a, x: a + x
+    keeps every strategy consistent).  Both sums are left folds from 0.0."""
+    w = f"`{w_col}`"
+    cents = [
+        F.expr(
+            f"aggregate(zip_with({w}, {sql_doubles(bin_points[:, k])}, (x, c) -> x * c),"
+            f" 0.0D, (a, x) -> a + x) / _tot AS cent_{k}"
         )
-        out = out.withColumn(f"cent_{k}", dot / F.col("_tot"))
-    return out.drop("_tot")
+        for k in range(bin_points.shape[1])
+    ]
+    return (
+        hist.select("*", F.expr(f"aggregate({w}, 0.0D, (a, x) -> a + x) AS _tot"))
+        .where("_tot > 0")
+        .select(*map(F.col, hist.columns), *cents)
+    )
 
 
 def _stat_udf(cfg: NdJoinConfig):
@@ -544,14 +548,30 @@ def _grid_boundaries(
     """(d, grid-1) per-dimension quantile cell boundaries — the reference's
     Percentile.evaluate grid (QNEPreReducer.java:161-189) as one agg."""
     probs = [i / grid for i in range(1, grid)]
-    aggs = [
-        F.percentile_approx(f"cent_{k}", F.array(*[F.lit(p) for p in probs]), 10000).alias(f"b{k}")
-        for k in range(d)
-    ]
-    row = hist.agg(*aggs).collect()[0]
+    row = hist.agg(*_quantile_aggs(d, probs)).collect()[0]
     # the sketches are null when there are no records; then any bounds do
     zeros = [0.0] * (grid - 1)
     return np.array([row[f"b{k}"] or zeros for k in range(d)], dtype=np.float64)
+
+
+def _quantile_aggs(d: int, probs: list[float]) -> list[F.Column]:
+    """b0..b{d-1}: the ``probs`` quantile sketch of each centroid column."""
+    arr = sql_doubles(probs)
+    return [
+        F.expr(f"percentile_approx(cent_{k}, {arr}, 10000)").alias(f"b{k}") for k in range(d)
+    ]
+
+
+def _cell_expr(bnds: np.ndarray, grid: int) -> F.Column:
+    """Native cell id: per-dim index = #boundaries <= coord, base-``grid``
+    encoded as ``(0 * grid + idx_0) * grid + idx_1 ...`` (LONG)."""
+    cell = "0"
+    for k in range(bnds.shape[0]):
+        idx_k = "0"
+        for b in bnds[k]:
+            idx_k += f" + CASE WHEN cent_{k} >= {sql_double(b)} THEN 1 ELSE 0 END"
+        cell = f"({cell}) * {grid} + ({idx_k})"
+    return F.expr(f"CAST({cell} AS BIGINT)")
 
 
 def _derive_grid(n: int, d: int) -> int:
@@ -854,12 +874,7 @@ def _build_grid_ctx(
         # callers (tests, emd_index) keep the exact percentile_approx
         # boundaries below.
         fine_probs = [i / 128.0 for i in range(1, 128)]
-        aggs = [F.count(F.lit(1)).alias("n")] + [
-            F.percentile_approx(
-                f"cent_{k}", F.array(*[F.lit(p) for p in fine_probs]), 10000
-            ).alias(f"b{k}")
-            for k in range(d)
-        ]
+        aggs = [F.count(F.lit(1)).alias("n")] + _quantile_aggs(d, fine_probs)
         if cfg is None:
             # fold the dual-seed sample into the same agg (round 12): 8
             # hash-min rows — min_by over xxhash64(id, salt) is one
@@ -869,9 +884,7 @@ def _build_grid_ctx(
             # join output; this one is also more deterministic than the
             # old partition-order limit(8).
             aggs += [
-                F.min_by("w", F.xxhash64(F.col("id"), F.lit(9000 + t))).alias(
-                    f"sw{t}"
-                )
+                F.expr(f"min_by(w, xxhash64(id, {9000 + t}))").alias(f"sw{t}")
                 for t in range(8)
             ]
         row = rec0.agg(*aggs).collect()[0]  # materializes rec0
@@ -903,14 +916,6 @@ def _build_grid_ctx(
         sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
         cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
 
-    # native cell id: per-dim index = #boundaries <= coord, base-`grid` encoded
-    cell = F.lit(0)
-    for k in range(d):
-        idx_k = F.lit(0)
-        for b in bnds[k]:
-            idx_k = idx_k + F.when(F.col(f"cent_{k}") >= float(b), 1).otherwise(0)
-        cell = cell * grid + idx_k
-
     stat_udf, stat_len = _stat_udf(cfg)
     # the spread guard sits BETWEEN the caches, after rec0 is materialized
     # (the boundary agg above always scans it): the partition probe then
@@ -919,7 +924,7 @@ def _build_grid_ctx(
     # it are what need the width; rec0's cheap JVM aggregates do not.
     rec1 = persist(
         spread(rec0, n_rec, _GRID_ROWS)
-        .withColumn("cell", cell.cast("long"))
+        .withColumn("cell", _cell_expr(bnds, grid))
         .withColumn("st", stat_udf("w"))
     )
 

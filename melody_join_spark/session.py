@@ -29,19 +29,20 @@ def _default_heap() -> str:
 
 def get_spark(app_name: str = "melody-join-spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Allocator hygiene for the Python workers (guide §5): this kernel
-    # faults NEW anonymous mappings at ~140 ms/MB (measured: a first-touch
-    # 75 MB numpy fill costs ~10-12 s cold; the same bytes through a warm
-    # heap cost ~20 ms).  glibc serves large numpy/Arrow buffers via
-    # mmap/munmap by default, so EVERY sizable temporary in a UDF batch
-    # re-pays the cold-fault tax even in a reused worker.  Raising the
-    # mmap threshold and disabling trim keeps those buffers in the sbrk
-    # heap, which both faults ~15x cheaper cold AND stays warm across
-    # tasks for the lifetime of the (reused) worker.  Set via the
-    # environment BEFORE the JVM starts so the pyspark daemon and its
-    # forked workers inherit it; harmless on kernels with normal fault
-    # costs, and a standard deployment-level allocator setting on real
-    # clusters (spark-env.sh) rather than a local[32]-only trick.
+    # Allocator hygiene for the Python workers (guide §5): glibc serves
+    # large numpy/Arrow buffers via mmap/munmap by default, so every
+    # sizable temporary in a UDF batch re-pays first-touch page faults even
+    # in a reused worker.  Raising the mmap threshold and disabling trim
+    # keeps those buffers in the sbrk heap, where they stay warm across
+    # tasks for the lifetime of the (reused) worker.  The fault cost is
+    # modest: a first-touch 75 MB np.ones measured 0.06-0.10 s through
+    # mmap and 0.03 s through the heap on a 4-core VM (the ~140 ms/MB,
+    # 10-12 s for that fill, this note once gave did not reproduce
+    # there).  Set via the environment BEFORE the JVM starts so the
+    # pyspark daemon and its forked workers inherit it; a standard
+    # deployment-level allocator setting on real clusters (spark-env.sh)
+    # rather than a local-only trick.  The workers' one other process
+    # setting is the daemon module (spark.python.daemon.module below).
     for var, val in (
         ("MALLOC_MMAP_THRESHOLD_", str(1 << 30)),
         ("MALLOC_TRIM_THRESHOLD_", "-1"),
@@ -67,14 +68,19 @@ def get_spark(app_name: str = "melody-join-spark", shuffle_partitions: int | Non
         # overrides for bench hosts.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap())
         # pin Xms to Xmx so G1 never uncommits heap regions back to the
-        # OS between queries — re-faulting uncommitted pages costs ~140
-        # ms/MB on this kernel (see the allocator note above); pages stay
-        # resident once touched.  Standard long-lived-service JVM setting.
+        # OS between queries, so pages stay resident once touched and are
+        # never re-faulted (see the allocator note above).  Standard
+        # long-lived-service JVM setting.
         .config(
             "spark.driver.extraJavaOptions",
             "-Xms"
             + (os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap()),
         )
+        # the Python workers run under melody_join_spark._daemon, which
+        # skips pyspark's per-task re-read of every zip archive on the
+        # worker's path (~0.2-0.4 s a task on Python 3.11); next to the
+        # allocator settings above, it is the other worker-process setting
+        .config("spark.python.daemon.module", "melody_join_spark._daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # deterministic epoch math for naive (NTZ) timestamps across hosts
