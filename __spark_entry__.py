@@ -1277,8 +1277,8 @@ def _q_exact_dedup(spark, sf_dir):
 
 def _q_dedup_clusters(spark, sf_dir):
     """Transitive near-dup clustering: jaccard dup edges -> connected
-    components (min-label propagation), every document labeled with the
-    smallest id in its dup cluster.  Hash-checked against a DuckDB
+    components (driver union-find at this size), every document labeled
+    with the smallest id in its dup cluster.  Hash-checked against a DuckDB
     recursive-CTE reachability oracle."""
     from melody_join_spark.operators.dedup import dup_clusters
 

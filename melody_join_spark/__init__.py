@@ -9,11 +9,8 @@ multimodal plumbing) the reference's core generalizes to.
 Public surface:
 - kernel: pure numpy EMD + bounds (``melody_join_spark.kernel``)
 - operators: ``emd_join``, ``emd_topk``, dedup/similarity/text operators
-- config: ``EngineConfig`` mirroring melody-conf.properties defaults
 """
-
-from .config import DEFAULT_CONFIG, EngineConfig
 
 __version__ = "0.1.0"
 
-__all__ = ["EngineConfig", "DEFAULT_CONFIG", "__version__"]
+__all__ = ["__version__"]

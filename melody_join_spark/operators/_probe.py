@@ -12,7 +12,7 @@ functions and nothing else:
   block.
 
 **Lookup** (:func:`lookup_rows` + :func:`broadcast_blocks`): the size probe
-collects at most ``collect_threshold + 1`` query rows and is itself the
+collects at most ``COLLECT_ROWS + 1`` query rows and is itself the
 collect, so the query chain runs once and needs no cache.  ``prep`` runs
 once on the driver, its payload is broadcast, and one ``mapInPandas`` runs
 ``block`` on every Arrow batch of the database.
@@ -61,28 +61,26 @@ Prep = Callable[[pd.DataFrame], Any]
 Block = Callable[[Any, pd.DataFrame], pd.DataFrame]
 
 _BLOCK_ENTRIES = 1 << 22
+# the largest query side a lookup collects onto the driver
+COLLECT_ROWS = 8192
 
 
 def lookup_rows(
-    q: DataFrame,
-    collect_threshold: int,
-    distributed: bool | None,
-    op: str,
-    alternative: str,
+    q: DataFrame, distributed: bool | None, op: str, alternative: str
 ) -> pd.DataFrame | None:
     """The size probe, which is also the collect: the query side as pandas
-    when it has at most ``collect_threshold`` rows, else ``None`` (take the
+    when it has at most ``COLLECT_ROWS`` rows, else ``None`` (take the
     blocked path).  ``distributed=True`` skips the probe; ``False`` on an
     oversized query side raises ``ValueError`` naming ``alternative``."""
     if distributed:
         return None
-    rows = q.limit(collect_threshold + 1).collect()
-    if len(rows) <= collect_threshold:
+    rows = q.limit(COLLECT_ROWS + 1).collect()
+    if len(rows) <= COLLECT_ROWS:
         return pd.DataFrame(rows, columns=q.columns)
     if distributed is False:
         raise ValueError(
-            f"{op}: query set exceeds collect_threshold={collect_threshold} "
-            f"rows; collecting it would bottleneck the driver. {alternative}"
+            f"{op}: query set exceeds {COLLECT_ROWS} rows; collecting it "
+            f"would bottleneck the driver. {alternative}"
         )
     return None
 
@@ -165,14 +163,14 @@ def run_query_blocks(
     *,
     unit: float,
     distributed: bool | None,
-    collect_threshold: int,
     op: str,
-    alternative: str,
 ) -> DataFrame:
     """Probe, then the lookup or the blocked path; ``finish`` turns the
     per-block output into the operator's result (the global ranking).
     ``unit`` is the block entries one blocked-path task should carry."""
-    qpdf = lookup_rows(q, collect_threshold, distributed, op, alternative)
+    qpdf = lookup_rows(
+        q, distributed, op, "Pass distributed=True (cogrouped block path)."
+    )
     if qpdf is not None:
         payload = prep(qpdf) if len(qpdf) else None
         return finish(broadcast_blocks(db, payload, block, schema))

@@ -144,7 +144,13 @@ def dedupe(
     raise ValueError(f"unknown dedupe mode {mode!r}")
 
 
-def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
+# dup_clusters labels an edge list of at most this many edges on the driver
+_DRIVER_EDGES = 200_000
+# round cap of the distributed star rounds, which need O(log^2 n)
+_STAR_ROUNDS = 25
+
+
+def _star_rounds(edges: DataFrame) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris et
     al., "Connected Components in MapReduce and Beyond"): converges in
     O(log^2 n) rounds on ANY graph — including adversarial long chains,
@@ -186,7 +192,7 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
         return (r["n"], r["h"])
 
     fp = fingerprint(e)
-    for _ in range(max_iter):
+    for _ in range(_STAR_ROUNDS):
         # large-star over the symmetric neighborhood view
         sym = e.unionByName(
             e.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -220,7 +226,7 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
         if new_fp == fp:
             return e  # stable star set: every edge is (node, component min)
         fp = new_fp
-    raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
+    raise RuntimeError(f"dup_clusters did not converge in {_STAR_ROUNDS} rounds")
 
 
 def _driver_union_find(
@@ -268,9 +274,6 @@ def dup_clusters(
     pairs: DataFrame,
     ids: DataFrame | None = None,
     id_col: str = "id",
-    max_iter: int = 25,
-    algorithm: str = "auto",
-    driver_threshold: int = 200_000,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph ->
     (id, cluster_id), cluster_id = smallest id reachable through dup edges.
@@ -279,151 +282,67 @@ def dup_clusters(
     transitive, but a 100-TB cleaning pipeline wants whole dup CLUSTERS
     (keep one representative per component, audit the rest).
 
-    ``algorithm='auto'`` (default): persist the edge relation, count it at
-    full parallelism, and when it fits collect it from the cache and run
-    exact union-find on the driver — one job instead of 3-5 iterative
-    rounds of window-min + checkpoint machinery (measured ~7 s of fixed
-    per-round cost on a 256-edge graph).  (NOT a bare
+    Size-adaptive: persist the edge relation, count it at full parallelism,
+    and when it has at most ``_DRIVER_EDGES`` edges collect it from the
+    cache and run exact union-find on the driver — one job instead of 3-5
+    iterative rounds of window-min + checkpoint machinery (measured ~7 s of
+    fixed per-round cost on a 256-edge graph).  (NOT a bare
     ``limit(N+1).collect()`` probe: CollectLimit executes the expensive
     upstream pairs chain incrementally on 1, 4, 16, ... partitions —
-    measured 4x slower than one full-parallelism pass.)  Dup graphs are usually tiny relative to
-    their corpus (dup RATE matters, not corpus size), but when the probe
-    overflows the threshold the distributed star path takes over untouched.
-    Only edge endpoints ever reach the driver — an ``ids`` table of any
-    size is labeled by a distributed left join.
+    measured 4x slower than one full-parallelism pass.)  Dup graphs are
+    usually tiny relative to their corpus (dup RATE matters, not corpus
+    size).  Only edge endpoints ever reach the driver — an ``ids`` table of
+    any size is labeled by a distributed left join.
 
-    ``algorithm='star'``: alternating large-star/small-star rounds
-    (`_star_rounds`) — O(log^2 n) rounds on ANY graph shape, the
-    100-TB-safe choice (an adversarial chain of length L costs ~log L
-    rounds, not L).  ``algorithm='label'``: min-label propagation — each
-    round every node takes the min of its own and its neighbors' labels;
-    rounds = component diameter (tiny for near-dup blobs, pathological for
-    chains).  Both raise on non-convergence rather than returning a wrong
-    labeling, and both are pure DataFrame plans (window mins / edge joins —
-    one or two shuffles per round, state O(|E|) on executors).
+    Larger edge lists run alternating large-star/small-star rounds
+    (`_star_rounds`): O(log^2 n) rounds on ANY graph shape (an adversarial
+    chain of length L costs ~log L rounds, not L), as a pure DataFrame plan
+    (window mins, state O(|E|) on executors).  They raise on
+    non-convergence rather than return a wrong labeling.
 
     ``ids`` (optional, one ``id_col`` column) adds isolated nodes so every
     input row gets a cluster (itself when it has no dup edge).
     """
-    if algorithm == "auto":
-        # persist + count FIRST, then read the probe from the cache.  A bare
-        # limit(N+1).collect() on the raw plan goes through CollectLimit's
-        # incremental execution (1 partition, then 4, 16, ... until N+1 rows
-        # or exhaustion), which re-runs the expensive upstream pairs chain
-        # (tokenize + prefix join + verify) serially at low parallelism —
-        # measured 38.7 s vs 9.4 s for the jaccard-fed bench query.  count()
-        # materializes the same chain ONCE at full parallelism.
-        edge_probe = persist(
-            pairs.select(
-                F.col("rid").cast("long").alias("a"),
-                F.col("sid").cast("long").alias("b"),
-            )
-        )
-        if edge_probe.count() <= driver_threshold:
-            probe = edge_probe.collect()
-            edge_probe.unpersist()
-            return _driver_union_find(
-                pairs.sparkSession, [(r.a, r.b) for r in probe], ids, id_col
-            )
-        algorithm = "star"  # too big for the driver: distributed rounds
-    else:
-        edge_probe = None
-    if algorithm == "star":
-        # consume the already-cached (a, b) relation when auto fell through
-        edges_ab = (
-            edge_probe
-            if edge_probe is not None
-            else pairs.select(
-                F.col("rid").cast("long").alias("a"),
-                F.col("sid").cast("long").alias("b"),
-            )
-        )
-        star = _star_rounds(edges_ab, max_iter)
-        # stable star edges point node -> component min; roots and isolated
-        # nodes label themselves
-        members = star.select("a", F.col("b").alias("lbl")).unionByName(
-            star.select(F.col("b").alias("a"), F.col("b").alias("lbl"))
-        )
-        nodes = members.select("a")
-        if ids is not None:
-            nodes = nodes.unionByName(
-                ids.select(F.col(id_col).cast("long").alias("a"))
-            )
-        out = (
-            nodes.distinct()
-            .join(members.groupBy("a").agg(F.min("lbl").alias("lbl")), "a", "left")
-            .select(
-                F.col("a").alias("id"),
-                F.coalesce("lbl", F.col("a")).alias("cluster_id"),
-            )
-        )
-        # star is a local checkpoint: Spark's ContextCleaner reclaims it
-        return out if edge_probe is None else release_on_gc(out, edge_probe)
-    if algorithm != "label":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    # symmetric edges from ONE pass over pairs: a union of two selects would
-    # embed the (possibly expensive) upstream pairs plan twice in the same
-    # job — with jaccard_pairs upstream that doubles the whole tokenize +
-    # prefix-join + verify chain.  explode keeps a single scan.
+    # persist + count FIRST, then read the probe from the cache.  A bare
+    # limit(N+1).collect() on the raw plan goes through CollectLimit's
+    # incremental execution (1 partition, then 4, 16, ... until N+1 rows
+    # or exhaustion), which re-runs the expensive upstream pairs chain
+    # (tokenize + prefix join + verify) serially at low parallelism —
+    # measured 38.7 s vs 9.4 s for the jaccard-fed bench query.  count()
+    # materializes the same chain ONCE at full parallelism.
     edges = persist(
         pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("rid").cast("long").alias("a"),
-                        F.col("sid").cast("long").alias("b"),
-                    ),
-                    F.struct(
-                        F.col("sid").cast("long").alias("a"),
-                        F.col("rid").cast("long").alias("b"),
-                    ),
-                )
-            ).alias("e")
-        ).select("e.a", "e.b")
+            F.col("rid").cast("long").alias("a"),
+            F.col("sid").cast("long").alias("b"),
+        )
     )
-    nodes = edges.select("a").distinct()
+    if edges.count() <= _DRIVER_EDGES:
+        probe = edges.collect()
+        edges.unpersist()
+        return _driver_union_find(
+            pairs.sparkSession, [(r.a, r.b) for r in probe], ids, id_col
+        )
+    star = _star_rounds(edges)
+    # stable star edges point node -> component min; roots and isolated
+    # nodes label themselves
+    members = star.select("a", F.col("b").alias("lbl")).unionByName(
+        star.select(F.col("b").alias("a"), F.col("b").alias("lbl"))
+    )
+    nodes = members.select("a")
     if ids is not None:
         nodes = nodes.unionByName(
             ids.select(F.col(id_col).cast("long").alias("a"))
-        ).distinct()
-    # localCheckpoint per round (see _star_rounds): round N's plan would
-    # otherwise embed round N-1's, and Catalyst re-analysis of the
-    # compounding tree dominates after ~8 rounds even with the data cached
-    labels = nodes.select("a", F.col("a").alias("lbl")).localCheckpoint(
-        eager=True
+        )
+    out = (
+        nodes.distinct()
+        .join(members.groupBy("a").agg(F.min("lbl").alias("lbl")), "a", "left")
+        .select(
+            F.col("a").alias("id"),
+            F.coalesce("lbl", F.col("a")).alias("cluster_id"),
+        )
     )
-    for _ in range(max_iter):
-        # candidate labels flowing across edges this round
-        cand = (
-            edges.alias("e")
-            .join(labels.alias("l"), F.col("e.b") == F.col("l.a"), "inner")
-            .select(F.col("e.a").alias("a"), F.col("l.lbl").alias("lbl"))
-            .groupBy("a")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        new_labels = (
-            labels.join(cand, "a", "left")
-            .select(
-                "a",
-                F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "a")
-            .where(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        edges.unpersist()
-        raise RuntimeError(f"dup_clusters did not converge in {max_iter} rounds")
-    edges.unpersist()
-    # labels is a local checkpoint: Spark's ContextCleaner reclaims it
-    return labels.select(F.col("a").alias("id"), F.col("lbl").alias("cluster_id"))
+    # star is a local checkpoint: Spark's ContextCleaner reclaims it
+    return release_on_gc(out, edges)
 
 
 def dup_clusters_oracle_sql(pairs_sql: str, ids_sql: str | None = None) -> str:

@@ -46,6 +46,7 @@ from .emd_join_nd import (
     _cell_expr,
     _centroid_cols,
     _grid_boundaries,
+    _has_mass,
     build_config,
 )
 
@@ -92,8 +93,7 @@ def emd_index_build(
     d = bin_points.shape[1]
     spark = hist.sparkSession
 
-    mass = F.aggregate(F.col(w_col), F.lit(0.0), lambda a, x: a + x) > 0
-    rec = hist.where(mass).select(
+    rec = hist.where(_has_mass(w_col)).select(
         F.col(id_col).cast("long").alias("id"), F.col(w_col).alias("w")
     )
     rec0 = persist(_centroid_cols(rec, bin_points, "w"))
@@ -239,20 +239,19 @@ def emd_index_search(
     threshold: float,
     id_col: str = "id",
     w_col: str = "w",
-    collect_threshold: int = 8192,
 ) -> DataFrame:
     """Range search: every (qid, nid, emd) with EMD <= threshold (+slack),
     id-equal matches excluded.  The reachable-cell union of all queries
     becomes a literal ``cell IN (...)`` scan filter — partition pruning on
     the disk-backed index — then ONE mapInPandas runs the screen cascade +
     batched exact stage against the broadcast query block.  Query sets over
-    ``collect_threshold`` are rejected (use ``emd_join_nd(other=...)`` /
+    ``_probe.COLLECT_ROWS`` rows are rejected (use ``emd_join_nd(other=...)`` /
     ``emd_knn(distributed=True)`` for table-scale query sides)."""
     cfg, bnds, grid = index.cfg, index.bnds, index.grid
     d = bnds.shape[0]
     q = queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
     qpdf = lookup_rows(
-        q, collect_threshold, False, "emd_index_search",
+        q, False, "emd_index_search",
         "Use emd_join_nd(other=...) or emd_knn(distributed=True) for "
         "table-scale query sides.",
     )

@@ -210,16 +210,15 @@ def emd_topk_join(
     k: int,
     positions: np.ndarray | None = None,
     strategy: str = "prune",
-    sample_size: int = 60,
-    seed: int = 42,
 ) -> DataFrame:
     """The k smallest-EMD pairs; returns (rank, rid, sid, emd), rank 1-based,
     ties broken by (emd, rid, sid) (JoinedPair.compareTo, utils/JoinedPair
     .java:45-58 orders by distance then ids).
 
-    ``prune`` seeds an upper bound for the kth distance from a deterministic
-    sample's pairwise EMDs (the reference's sample-seeded bound,
-    QNEPreReducer.java:96-109 / HistUtil.getKEmd:641-652), runs the cell
+    ``prune`` seeds an upper bound for the kth distance from the pairwise
+    EMDs of a deterministic 60-row sample, 1,770 pairs (the reference's
+    sample-seeded bound, QNEPreReducer.java:96-109 / HistUtil.getKEmd:
+    641-652), runs the cell
     threshold join at that bound, then takes the global top-k — two passes,
     no cross product.  Falls back to bruteforce when the sample can't cover k
     pairs.
@@ -248,7 +247,7 @@ def emd_topk_join(
     # the first ids are near-duplicates and loosen the kth bound (the
     # round-3 ND top-k lesson applied to the 1-D path; the bound stays
     # sound either way, only the join radius tightness changes)
-    sample = hist.orderBy(F.xxhash64(F.col("id")), F.col("id")).limit(sample_size)
+    sample = hist.orderBy(F.xxhash64(F.col("id")), F.col("id")).limit(60)
     sa, sb = _pair_frame(sample, "a"), _pair_frame(sample, "b")
     spairs = (
         sa.crossJoin(sb)

@@ -179,11 +179,7 @@ def build_config(
     bin_points: np.ndarray,
     seed_weights: np.ndarray | None = None,
     n_proj: int | None = None,
-    num_duals: int | None = None,
-    num_reductions: int | None = None,
-    reduced_dim: int = 8,
     seed: int = 42,
-    slack: float = 1e-4,
     ground: str | np.ndarray = "l2",
 ) -> NdJoinConfig:
     """Build the broadcastable join config on the driver.
@@ -219,10 +215,8 @@ def build_config(
     # extra dual is one O(B) dot per pair vs an LP per unpruned survivor
     # (measured on the sf0.1 sqrt(L1) join: 6/2 cut exact LPs 466k -> 341k
     # and wall 20.2 -> 14.8 s; see ABCHECK_r05.md)
-    if num_duals is None:
-        num_duals = 2 if minkowski is not None else 6
-    if num_reductions is None:
-        num_reductions = 1 if minkowski is not None else 2
+    num_duals = 2 if minkowski is not None else 6
+    num_reductions = 1 if minkowski is not None else 2
 
     projs = []
     if n_proj is None:
@@ -253,12 +247,13 @@ def build_config(
                 continue
             duals.append(DualPotentials.from_seed_pair(sw[i], sw[j], cost))
 
+    # 8-dimensional reductions, as the reference (NEProcessReducer.java:53)
     reductions = [
-        ReductionMap(cost, reduced=min(reduced_dim, cost.shape[0]), seed=seed + k)
+        ReductionMap(cost, reduced=min(8, cost.shape[0]), seed=seed + k)
         for k in range(num_reductions)
     ]
     cfg = NdJoinConfig(
-        bin_points, cost, projs, duals, reductions, slack, rubner_ord=minkowski
+        bin_points, cost, projs, duals, reductions, rubner_ord=minkowski
     )
     cfg.is_metric()  # fill the cached verdict driver-side before shipping
     return cfg
@@ -303,6 +298,18 @@ def _emit_pairs(ids, li, ri, emds, ordered: bool = False) -> pd.DataFrame:
 
 
 _NO_PAIRS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
+
+# hash blocks of the all-pairs block join (``_block_bruteforce``): 36
+# self-join groups, 64 two-table groups
+_BLOCKS = 8
+
+
+def _has_mass(w_col: str):
+    """Row filter for histograms with positive total weight.  A zero-mass
+    row has no EMD (the kernel would score it 0.0 against everything), so
+    every operator drops it on entry, as build_histograms' total > 0
+    ingestion filter does."""
+    return F.aggregate(F.col(w_col), F.lit(0.0), lambda a, x: a + x) > 0
 
 
 def _window_pairs(
@@ -588,7 +595,7 @@ def _derive_grid(n: int, d: int) -> int:
     return int(np.clip(round(float(max(n, 2)) ** exp), 3, 64))
 
 
-def _derive_pivots(n: int, arbitrary_cost: bool) -> int:
+def _derive_pivots(n: int) -> int:
     """Auto pivot count ~ sqrt(N)/3: fit to the tuned sf0.1 constant
     (24 at N=5793).  Arbitrary costs used to get ~2x the pivots (the LAESA
     triangle screen was their only strong pair filter); since the
@@ -599,7 +606,6 @@ def _derive_pivots(n: int, arbitrary_cost: bool) -> int:
     per record in the assignment stage (97.9% of (record, pivot) slots
     fall inside the window cut at the bench theta), so excess pivots now
     buy little and pay linearly."""
-    del arbitrary_cost  # one curve fits both since the IndMin stage landed
     return int(np.clip(round(np.sqrt(float(max(n, 4))) / 3.0), 8, 128))
 
 
@@ -620,15 +626,12 @@ def emd_join_nd(
     cfg: NdJoinConfig | None = None,
     strategy: str = "grid",
     grid: int | None = None,
-    num_blocks: int = 8,
     id_col: str = "id",
     w_col: str = "w",
     seed: int = 42,
     other: DataFrame | None = None,
     stats: "JoinStats | None" = None,
     ground: str | np.ndarray = "l2",
-    cell_cap: int | None = None,
-    num_pivots: int | None = None,
 ) -> DataFrame:
     """EMD threshold join -> DataFrame(rid, sid, emd).
 
@@ -664,9 +667,7 @@ def emd_join_nd(
     theta = float(threshold)
     two_table = other is not None
 
-    # zero-mass histograms are rejected up front (EMD undefined; parity with
-    # build_histograms' total > 0 ingestion filter) so every strategy agrees
-    mass = F.aggregate(F.col(w_col), F.lit(0.0), lambda a, x: a + x) > 0
+    mass = _has_mass(w_col)
     rec = hist.where(mass).select(
         F.col(id_col).cast("long").alias("id"),
         F.col(w_col).alias("w"),
@@ -726,7 +727,7 @@ def emd_join_nd(
     if strategy == "bruteforce":
         return release_on_gc(
             _block_bruteforce(
-                rec, cfg, theta, num_blocks, two_table, stats=stats, n_rows=n_rows
+                rec, cfg, theta, two_table, stats=stats, n_rows=n_rows
             ),
             *held,
         )
@@ -751,13 +752,10 @@ def emd_join_nd(
         # assignment mapInPandas each consume rec — without the boundary the
         # upstream (histogram build at sf-scale) executes twice
         rec = persist(rec)
-        if num_pivots is None:
-            num_pivots = _derive_pivots(
-                rec.count(), arbitrary_cost=cfg.rubner_ord is None
-            )
         return release_on_gc(
             _pivot_join(
-                rec, cfg, theta, num_pivots=num_pivots, seed=seed, stats=stats
+                rec, cfg, theta, num_pivots=_derive_pivots(rec.count()),
+                seed=seed, stats=stats,
             ),
             rec,
         )
@@ -824,7 +822,7 @@ def emd_join_nd(
         )
 
     ctx = _build_grid_ctx(rec, bin_points, cfg, grid, seed=seed, ground=ground)
-    out = _grid_join(ctx, theta, stats=stats, two_table=two_table, cell_cap=cell_cap)
+    out = _grid_join(ctx, theta, stats=stats, two_table=two_table)
     return release_on_gc(out, ctx.rec1, *held)
 
 
@@ -952,7 +950,6 @@ def _grid_join(
     theta: float,
     stats: "JoinStats | None" = None,
     two_table: bool = False,
-    cell_cap: int | None = None,
 ) -> DataFrame:
     cfg, d, grid, bnds, cs = ctx.cfg, ctx.d, ctx.grid, ctx.bnds, ctx.cs
     rec1 = ctx.rec1
@@ -1071,7 +1068,7 @@ def _grid_join(
 
     # hot-cell salting: cells over the cap fan out into block-PAIR sub-groups
     # (the _block_bruteforce triangle applied per hot cell) so one group
-    # holds ~cell_cap rows, never the whole cell.  Cold cells keep salt
+    # holds ~_derive_cell_cap rows, never the whole cell.  Cold cells keep salt
     # factor 1 — the plan below degenerates to the unsalted one (sub == 0)
     # with no extra replication.
     #
@@ -1108,9 +1105,7 @@ def _grid_join(
     # every row the cell hosts, so sum(cnt x load) bounds the candidate
     # pairs.  The per-cell counts are already collected, so it is free.
     width = task_width(rec1.sparkSession, float(cs.cnt @ load), EMD_PAIRS)
-    if cell_cap is None:
-        cell_cap = _derive_cell_cap(int(cs.cnt.sum()), width)
-    salt = _salt_factors(load, cell_cap)
+    salt = _salt_factors(load, _derive_cell_cap(int(cs.cnt.sum()), width))
     max_s = int(salt.max()) if salt.size else 1
     if max_s > 1:
         hot = {int(c): int(salt[c]) for c in np.flatnonzero(salt > 1)}
@@ -1507,14 +1502,13 @@ def _block_bruteforce(
     rec: DataFrame,
     cfg: NdJoinConfig,
     theta: float,
-    num_blocks: int,
     two_table: bool = False,
     stats: "JoinStats | None" = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """All-pairs block join (J7 semantics, bsp/BaselineBSP.join:274-345).
 
-    Self-join: records hash into ``num_blocks`` blocks; each unordered block
+    Self-join: records hash into ``_BLOCKS`` blocks; each unordered block
     pair (i <= j) is one candidate group — a triangle of B(B+1)/2 groups
     with B-fold replication, never a row-level cross join.  Two-table: the
     full B x B block grid, R rows fan out over rows of the grid, S rows over
@@ -1523,7 +1517,7 @@ def _block_bruteforce(
     the groups run through the shared cascade runner.  ``n_rows``, when the
     caller already counted the records, sizes the runner by its candidate
     pairs (at most n^2/2); without it the runner takes one wave."""
-    P = int(num_blocks)
+    P = _BLOCKS
     blk = F.pmod(F.xxhash64(F.col("id")), F.lit(P))
     rec = rec.withColumn("blk", blk)
     if two_table:
@@ -1585,16 +1579,16 @@ def emd_knn(
     seed: int = 42,
     ground: str | np.ndarray = "l2",
     distributed: bool | None = None,
-    collect_threshold: int = 8192,
 ) -> DataFrame:
     """k nearest database histograms per query under exact EMD ->
-    (qid, nid, emd, rank); excludes identical-id matches.
+    (qid, nid, emd, rank); excludes identical-id matches and zero-mass rows
+    on either side.
 
     The reference carries an unreachable kNN guest path (Grid.getGuestForKNN,
     utils/Grid.java:60-207, SURVEY.md §2.3 J5); this is the capability done
-    Spark-first.  Small query sets (<= ``collect_threshold``; the lookup
-    contract) are collected + broadcast, and each database partition runs
-    the optimal multi-step kNN loop — candidates sorted by Rubner lower
+    Spark-first.  Small query sets (at most ``_probe.COLLECT_ROWS`` rows;
+    the lookup contract) are collected + broadcast, and each database
+    partition runs the optimal multi-step kNN loop — candidates sorted by Rubner lower
     bound, exact EMD evaluated in that order, and the scan stops as soon as
     the next lower bound exceeds the running kth distance (Seidl-Kriegel
     optimality: no exact computation can be saved).  Per-partition top-k
@@ -1617,7 +1611,10 @@ def emd_knn(
         sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
         cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
 
-    q = queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
+    mass = _has_mass(w_col)
+    q = queries.where(mass).select(
+        F.col(id_col).alias("id"), F.col(w_col).alias("w")
+    )
     cost = cfg.cost
     # the 1-D CDF closed form assumes |x-y| costs — Minkowski-only
     d1 = cfg.bin_points.shape[1] == 1 and cfg.rubner_ord is not None
@@ -1781,7 +1778,9 @@ def emd_knn(
 
     return run_query_blocks(
         q,
-        db.select(F.col(id_col).alias("id"), F.col(w_col).alias("w")),
+        db.where(mass).select(
+            F.col(id_col).alias("id"), F.col(w_col).alias("w")
+        ),
         ("id", "id"),
         prep,
         knn_block,
@@ -1789,10 +1788,7 @@ def emd_knn(
         rank,
         unit=EMD_PAIRS,  # each entry pays the lower-bound screens
         distributed=distributed,
-        collect_threshold=collect_threshold,
         op="emd_knn",
-        alternative="Pass distributed=True (cogrouped block path) or raise "
-        "collect_threshold explicitly.",
     )
 
 
@@ -1807,8 +1803,6 @@ def emd_topk_nd(
     cfg: NdJoinConfig | None = None,
     strategy: str = "grid",
     grid: int | None = None,
-    num_blocks: int = 8,
-    sample_size: int | None = None,
     id_col: str = "id",
     w_col: str = "w",
     seed: int = 42,
@@ -1816,12 +1810,14 @@ def emd_topk_nd(
     stats: "JoinStats | None" = None,
 ) -> DataFrame:
     """k smallest-EMD pairs -> (rank, rid, sid, emd); ties by (emd, rid, sid)
-    (JoinedPair.compareTo order, utils/JoinedPair.java:45-58).
+    (JoinedPair.compareTo order, utils/JoinedPair.java:45-58).  Zero-mass
+    rows are dropped on entry, as in :func:`emd_join_nd`.
 
     Sample-seeded bound (QNEPreReducer.java:96-109 / HistUtil.getKEmd:
-    641-652): exact EMDs over the first ``sample_size`` ids give an upper
-    bound for the global kth distance; the grid threshold join at that bound
-    then covers the true top-k; orderBy(emd).limit(k) merges."""
+    641-652): exact EMDs over a seeded hash-order sample of the rows (its
+    size derived from N and k) give an upper bound for the global kth
+    distance; the threshold join at that bound then covers the true top-k;
+    orderBy(emd).limit(k) merges."""
     from pyspark.sql.window import Window
 
     bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
@@ -1839,7 +1835,9 @@ def emd_topk_nd(
     if minkowski_g is None and strategy == "grid":
         strategy = "bruteforce"  # arbitrary cost: no centroid grid geometry
 
-    rec = hist.select(F.col(id_col).cast("long").alias("id"), F.col(w_col).alias("w"))
+    rec = hist.select(
+        F.col(id_col).cast("long").alias("id"), F.col(w_col).alias("w")
+    ).where(_has_mass("w"))
     ctx = None
     rec_n = None
     if strategy == "grid":
@@ -1851,13 +1849,9 @@ def emd_topk_nd(
         # The old order — cfg seed collect on the raw chain, persist+count
         # rec, sample rec, then build the ctx with its own count/boundary
         # jobs — paid three extra upstream-chain actions for the same
-        # information.  (Sampling from the mass-filtered cache is
-        # output-safe: the ceiling is an upper bound for the kth distance
-        # over rows the join actually considers, and any ceiling >= the
-        # true kth yields the identical top-k.)
-        mass = F.aggregate(F.col("w"), F.lit(0.0), lambda a, x: a + x) > 0
+        # information.
         ctx = _build_grid_ctx(
-            rec.where(mass).withColumn("side", F.lit(0)),
+            rec.withColumn("side", F.lit(0)),
             bin_points, cfg, grid, seed=seed, ground=ground,
         )
         cfg = ctx.cfg
@@ -1891,19 +1885,17 @@ def emd_topk_nd(
     # VERDICT wrong #2).  xxhash64(id, seed) is a deterministic shuffle of
     # the id space — same ceiling tightness as a uniform random sample,
     # stable across partitionings/reruns.
-    if sample_size is None:
-        # derive from N, not k alone: the seed must reach the duplicate/
-        # near-duplicate tail of the TABLE for the kth ceiling to be tight
-        # — the r5 k-only derivation (max(500, 15k)) resolved to 500 here
-        # and cost +3 s on the sf0.1 d=3 bench (ceiling too loose, grid
-        # pass at an inflated radius; within-process interleaved probe:
-        # 500 -> 9.0-9.8 s vs 600/750 -> 6.2-6.9 s).  8*sqrt(N) reproduces
-        # the hand-tuned 600 at sf0.1 (N=5793 -> 609) and scales the seed
-        # with the dup-tail mass; the 4096 cap bounds the driver-side
-        # LB matrix (seeds^2/2 pairs) at any N.
-        if rec_n is None:
-            rec_n = rec.count()  # persisted above: cheap, reused by the sample
-        sample_size = max(500, 15 * k, min(int(8.0 * rec_n**0.5), 4096))
+    # The sample size derives from N, not k alone: the seed must reach the
+    # duplicate/near-duplicate tail of the TABLE for the kth ceiling to be
+    # tight — the r5 k-only derivation (max(500, 15k)) resolved to 500 here
+    # and cost +3 s on the sf0.1 d=3 bench (ceiling too loose, grid pass at
+    # an inflated radius; within-process interleaved probe: 500 -> 9.0-9.8 s
+    # vs 600/750 -> 6.2-6.9 s).  8*sqrt(N) reproduces the hand-tuned 600 at
+    # sf0.1 (N=5793 -> 609) and scales the seed with the dup-tail mass; the
+    # 4096 cap bounds the driver-side LB matrix (seeds^2/2 pairs) at any N.
+    if rec_n is None:
+        rec_n = rec.count()  # persisted above: cheap, reused by the sample
+    sample_size = max(500, 15 * k, min(int(8.0 * rec_n**0.5), 4096))
     sample = (
         sample_src.select("id", "w")
         .orderBy(F.xxhash64(F.col("id"), F.lit(int(seed))), F.col("id"))
@@ -1915,7 +1907,7 @@ def emd_topk_nd(
     scored = None
     if n * (n - 1) // 2 < k:
         scored = _block_bruteforce(
-            rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks,
+            rec.withColumn("side", F.lit(0)), cfg, float("inf"),
             stats=stats, n_rows=rec_n,
         )
     else:
@@ -1967,7 +1959,7 @@ def emd_topk_nd(
             # join would both blow up — fall back to the all-pairs oracle,
             # which needs no radius (round-4 ADVICE, emd_join_nd.py:1669)
             scored = _block_bruteforce(
-                rec.withColumn("side", F.lit(0)), cfg, float("inf"), num_blocks,
+                rec.withColumn("side", F.lit(0)), cfg, float("inf"),
                 stats=stats, n_rows=rec_n,
             )
     if scored is None:
@@ -1984,7 +1976,7 @@ def emd_topk_nd(
             else:
                 cand = emd_join_nd(
                     rec, bin_points, probe, cfg=cfg, strategy=strategy,
-                    grid=grid, num_blocks=num_blocks, stats=stats,
+                    grid=grid, stats=stats,
                 )
             # ONE action (round 12): TakeOrdered answers both "are there
             # >= k pairs at this radius" (len(rows) == k) and "which are

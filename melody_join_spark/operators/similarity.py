@@ -171,7 +171,6 @@ def cosine_topk(
     q_vec_col: str | None = None,
     round_to: int | None = None,
     distributed: bool | None = None,
-    collect_threshold: int = 8192,
     fold_exact: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query -> (qid, nid, cosine,
@@ -206,9 +205,9 @@ def cosine_topk(
     A zero vector's cosine is 0.0 on both paths, with and without
     ``fold_exact``.
 
-    A query set over ``collect_threshold`` with ``distributed=False`` is
-    rejected with a clear error instead of silently bottlenecking the
-    driver."""
+    A query set over ``_probe.COLLECT_ROWS`` rows with
+    ``distributed=False`` is rejected with a clear error instead of
+    silently bottlenecking the driver."""
     q_id_col = q_id_col or id_col
     q_vec_col = q_vec_col or vec_col
     q = queries.select(
@@ -262,10 +261,7 @@ def cosine_topk(
         lambda local: _rank_topk(local, k, round_to),
         unit=_TOPK_FOLD_ENTRIES if fold_exact else _TOPK_ENTRIES,
         distributed=distributed,
-        collect_threshold=collect_threshold,
         op="cosine_topk",
-        alternative="Pass distributed=True (block-matrix path) or raise "
-        "collect_threshold explicitly.",
     )
 
 
@@ -417,12 +413,12 @@ def ivf_search(
     q_vec_col: str = "embedding",
     round_to: int | None = None,
     distributed: bool | None = None,
-    collect_threshold: int = 8192,
 ) -> DataFrame:
     """Query a built index -> (qid, nid, cosine, rank): each query probes
     its ``nprobe`` nearest lists.  Excludes self-matches.
 
-    Small query sets (<= ``collect_threshold``; the lookup contract) are
+    Small query sets (at most ``_probe.COLLECT_ROWS`` rows; the lookup
+    contract) are
     collected: the probe relation is built on the driver, broadcast into
     the candidate join, and carries a literal list_id IN (...) filter so a
     disk-backed index scans only the probed partitions (PartitionFilters).
@@ -441,9 +437,8 @@ def ivf_search(
         F.col(q_id_col).alias("qid"), _as_double(q_vec_col).alias("qv")
     )
     qpdf = lookup_rows(
-        q, collect_threshold, distributed, "ivf_search",
-        "Pass distributed=True (mapInPandas probe assignment) or raise "
-        "collect_threshold explicitly.",
+        q, distributed, "ivf_search",
+        "Pass distributed=True (mapInPandas probe assignment).",
     )
     np_eff = min(nprobe, C.shape[0])
     if qpdf is None:

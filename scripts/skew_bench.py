@@ -19,8 +19,9 @@ Total join work is identical with the cap on or off; only the distribution
 over tasks changes.
 
 Protocol (bench-hygiene: interleaved min-of-n, per-run host busy): run the
-same join with ``cell_cap`` disabled (one giant block-pair group) and
-enabled, alternating, and for each run pull the PER-TASK durations of the
+same join with the hot-cell cap disabled (one giant block-pair group) and
+set to 200 (the floor of ``_derive_cell_cap``, substituted for the
+derivation), alternating, and for each run pull the PER-TASK durations of the
 heaviest stage from the Spark UI REST API — max task vs median task is the
 straggler number the 100-TB story cares about.
 
@@ -82,7 +83,7 @@ def main() -> None:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     from pyspark.sql import SparkSession
 
-    from melody_join_spark.operators.emd_join_nd import emd_join_nd
+    import melody_join_spark.operators.emd_join_nd as EJ
 
     shape = sys.argv[3] if len(sys.argv) > 3 else "dup"
     rng = np.random.default_rng(3)
@@ -112,9 +113,8 @@ def main() -> None:
             )
             df = spark.createDataFrame(rows, "id long, w array<double>")
             t0, b0 = time.time(), host_busy()
-            out = emd_join_nd(
-                df, bins, 0.05, strategy="grid", grid=2, cell_cap=cap
-            )
+            EJ._derive_cell_cap = lambda n, width, cap=cap: cap
+            out = EJ.emd_join_nd(df, bins, 0.05, strategy="grid", grid=2)
             cnt = out.count()
             dt = time.time() - t0
             b1 = host_busy()

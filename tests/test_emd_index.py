@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from melody_join_spark.operators import _probe
 from melody_join_spark.operators.emd_index import (
     emd_index_build,
     emd_index_load,
@@ -19,7 +20,7 @@ from melody_join_spark.plans.tpch_bridge import bin_points_2d, lineitem_histogra
 SF = "/root/testdata/sf0.001"
 
 
-def test_index_build_search_matches_join(spark, tmp_path):
+def test_index_build_search_matches_join(spark, tmp_path, monkeypatch):
     hist = lineitem_histograms_2d(spark, SF).select("id", "w")
     path = str(tmp_path / "emd_index")
     idx = emd_index_build(hist, bin_points_2d(), path, grid=6)
@@ -60,8 +61,9 @@ def test_index_build_search_matches_join(spark, tmp_path):
     assert "cell" in scan_line
 
     # oversized query sets are rejected, not collected
-    with pytest.raises(ValueError, match="collect_threshold"):
-        emd_index_search(idx2, hist, theta, collect_threshold=4)
+    monkeypatch.setattr(_probe, "COLLECT_ROWS", 4)
+    with pytest.raises(ValueError, match="exceeds 4 rows"):
+        emd_index_search(idx2, hist, theta)
 
 
 def test_index_versioned_commit_and_staleness_detection(spark, tmp_path):

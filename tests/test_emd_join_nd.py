@@ -71,7 +71,7 @@ def test_bruteforce_matches_kernel_oracle(spark, hist_df, bins_2d):
     rows = [(r.id, r.w) for r in hist_df.collect()]
     expect = _kernel_oracle(rows, bins_2d, THETA)
     got = _collect_pairs(
-        emd_join_nd(hist_df, bins_2d, THETA, strategy="bruteforce", num_blocks=4)
+        emd_join_nd(hist_df, bins_2d, THETA, strategy="bruteforce")
     )
     assert set(got) == set(expect)
     for k in expect:
@@ -80,7 +80,7 @@ def test_bruteforce_matches_kernel_oracle(spark, hist_df, bins_2d):
 
 def test_grid_matches_bruteforce(spark, hist_df, bins_2d):
     bf = _collect_pairs(
-        emd_join_nd(hist_df, bins_2d, THETA, strategy="bruteforce", num_blocks=4)
+        emd_join_nd(hist_df, bins_2d, THETA, strategy="bruteforce")
     )
     for grid in (2, 4):
         gr = _collect_pairs(
@@ -131,7 +131,7 @@ def test_collinear_bins_equal_1d_closed_form(spark):
 def test_pivot_matches_bruteforce(spark, hist_df, bins_2d):
     """MRSimJoin pivot strategy == triangle bruteforce (identical pair set)."""
     bf = _collect_pairs(
-        emd_join_nd(hist_df, bins_2d, THETA, strategy="bruteforce", num_blocks=4)
+        emd_join_nd(hist_df, bins_2d, THETA, strategy="bruteforce")
     )
     pv = _collect_pairs(emd_join_nd(hist_df, bins_2d, THETA, strategy="pivot"))
     assert set(pv) == set(bf)
@@ -140,12 +140,15 @@ def test_pivot_matches_bruteforce(spark, hist_df, bins_2d):
 
 
 def test_pivot_fewer_records_than_pivots(spark, bins_2d):
-    """An input with fewer records than requested pivots uses every record
-    as a pivot; an empty input joins nothing."""
+    """An input with fewer records than the derived pivot count uses every
+    record as a pivot; an empty input joins nothing."""
+    from melody_join_spark.operators.emd_join_nd import _derive_pivots
+
     rows = [(i + 1, [float((i * j) % 4 + 1) for j in range(B)]) for i in range(5)]
+    assert _derive_pivots(len(rows)) > len(rows)
     df = spark.createDataFrame(rows, "id long, w array<double>")
     got = _collect_pairs(
-        emd_join_nd(df, bins_2d, 1.0, strategy="pivot", num_pivots=16)
+        emd_join_nd(df, bins_2d, 1.0, strategy="pivot")
     )
     expect = _kernel_oracle(rows, bins_2d, 1.0)
     assert expect
@@ -215,8 +218,7 @@ def test_two_table_join_matches_kernel(spark, hist_df, bins_2d):
 
     for strat in ("bruteforce", "grid"):
         got = _collect_pairs(
-            emd_join_nd(R, bins_2d, THETA, strategy=strat, other=S, grid=3,
-                        num_blocks=3)
+            emd_join_nd(R, bins_2d, THETA, strategy=strat, other=S, grid=3)
         )
         assert set(got) == set(expect), strat
         for kpair in expect:
@@ -401,11 +403,12 @@ def test_topk_single_join_pass(spark, hist_df, bins_2d, monkeypatch):
     assert calls["n"] == 1, f"expected single-pass top-k, got {calls['n']} joins"
 
 
-def test_hot_cell_salting_matches_bruteforce(spark):
+def test_hot_cell_salting_matches_bruteforce(spark, monkeypatch):
     """Adversarially skewed data: every record lands in ONE grid cell; a tiny
-    cell_cap forces that cell to split into block-pair sub-groups (round-2
+    cell cap forces that cell to split into block-pair sub-groups (round-2
     VERDICT item 4).  The salted plan must produce exactly the bruteforce
     pair set — each pair once — with no straggler task holding the cell."""
+    import melody_join_spark.operators.emd_join_nd as EJ
     from melody_join_spark.operators.emd_join_nd import _salt_factors
 
     rng = np.random.default_rng(3)
@@ -418,18 +421,17 @@ def test_hot_cell_salting_matches_bruteforce(spark):
     df = spark.createDataFrame(rows, "id long, w array<double>")
     theta = 0.05
     bf = _collect_pairs(
-        emd_join_nd(df, bins, theta, strategy="bruteforce", num_blocks=4)
+        emd_join_nd(df, bins, theta, strategy="bruteforce")
     )
     assert _salt_factors(np.array([120]), 16)[0] > 1  # the cap really bites
-    gr = _collect_pairs(
-        emd_join_nd(df, bins, theta, strategy="grid", grid=2, cell_cap=16)
-    )
+    # unsalted (derived cap) parity on the skewed input
+    gr2 = _collect_pairs(emd_join_nd(df, bins, theta, strategy="grid", grid=2))
+    assert set(gr2) == set(bf)
+    monkeypatch.setattr(EJ, "_derive_cell_cap", lambda n, width: 16)
+    gr = _collect_pairs(emd_join_nd(df, bins, theta, strategy="grid", grid=2))
     assert set(gr) == set(bf)
     for k in bf:
         assert gr[k] == pytest.approx(bf[k], abs=1e-9)
-    # unsalted (default cap) parity on the same skewed input
-    gr2 = _collect_pairs(emd_join_nd(df, bins, theta, strategy="grid", grid=2))
-    assert set(gr2) == set(bf)
 
 
 def test_grid_matches_bruteforce_3d(spark):
@@ -449,7 +451,7 @@ def test_grid_matches_bruteforce_3d(spark):
     df = spark.createDataFrame(rows, "id long, w array<double>")
     theta = 0.4
     bf = _collect_pairs(
-        emd_join_nd(df, bins, theta, strategy="bruteforce", num_blocks=4)
+        emd_join_nd(df, bins, theta, strategy="bruteforce")
     )
     assert bf  # non-trivial result set
     for strat, kw in (("grid", {"grid": 3}), ("pivot", {})):
@@ -476,7 +478,7 @@ def test_grid_matches_bruteforce_4d(spark):
     df = spark.createDataFrame(rows, "id long, w array<double>")
     theta = 0.35
     bf = _collect_pairs(
-        emd_join_nd(df, bins, theta, strategy="bruteforce", num_blocks=4)
+        emd_join_nd(df, bins, theta, strategy="bruteforce")
     )
     assert bf
     got = _collect_pairs(emd_join_nd(df, bins, theta, strategy="grid", grid=3))
@@ -490,7 +492,7 @@ def test_auto_strategy_dispatch(spark, hist_df, bins_2d):
     pivot; result sets identical to explicit strategies."""
     theta = 0.35
     bf = _collect_pairs(
-        emd_join_nd(hist_df, bins_2d, theta, strategy="bruteforce", num_blocks=4)
+        emd_join_nd(hist_df, bins_2d, theta, strategy="bruteforce")
     )
     # 60 rows <= probe threshold -> auto = bruteforce path
     auto = _collect_pairs(emd_join_nd(hist_df, bins_2d, theta, strategy="auto"))
@@ -527,9 +529,12 @@ def test_seed_invariance_of_result_sets(spark, hist_df, bins_2d):
     assert set(base["grid"]) == set(base["pivot"])
 
 
-def test_emd_knn_distributed_matches_collected(spark, hist_df, bins_2d):
+def test_emd_knn_distributed_matches_collected(
+    spark, hist_df, bins_2d, monkeypatch
+):
     """The cogrouped no-collect kNN path returns the broadcast path's exact
     result (same screened loop, different physical distribution)."""
+    from melody_join_spark.operators import _probe
     from melody_join_spark.operators.emd_join_nd import emd_knn
 
     rows = [(r.id, r.w) for r in hist_df.collect()]
@@ -545,9 +550,43 @@ def test_emd_knn_distributed_matches_collected(spark, hist_df, bins_2d):
                          distributed=True).collect()
     }
     assert got == ref and len(got) == 6 * 4
-    with pytest.raises(ValueError, match="collect_threshold"):
-        emd_knn(hist_df, queries, bins_2d, k=4, distributed=False,
-                collect_threshold=2)
+    monkeypatch.setattr(_probe, "COLLECT_ROWS", 2)
+    with pytest.raises(ValueError, match="exceeds 2 rows.*distributed=True"):
+        emd_knn(hist_df, queries, bins_2d, k=4, distributed=False)
+
+
+def test_topk_drops_zero_mass_rows(spark, bins_2d):
+    """An all-zero row has no EMD (the kernel scores it 0.0 against any
+    histogram), so top-k drops it on entry on every path — here the
+    bruteforce fallback of a table too small to seed k sample pairs."""
+    rng = np.random.default_rng(5)
+    rows = [(i + 1, [float(x) for x in rng.random(B) + 0.1]) for i in range(5)]
+    df = spark.createDataFrame(rows + [(6, [0.0] * B)], "id long, w array<double>")
+    top = emd_topk_nd(df, bins_2d, 20).collect()
+    expect = _kernel_oracle(rows, bins_2d, float("inf"))
+    assert len(top) == len(expect) == 10
+    assert {(r.rid, r.sid): r.emd for r in top} == pytest.approx(expect, abs=1e-9)
+
+
+def test_knn_drops_zero_mass_rows(spark):
+    """A zero row in the database is never a neighbour, even of a query
+    whose centroid it shares (bins symmetric about the origin, uniform
+    query) and with k covering the whole database."""
+    from melody_join_spark.operators.emd_join_nd import emd_knn
+
+    bins = np.array(
+        [[i, j] for i in (-1, 0, 1) for j in (-1, 0, 1)], dtype=np.float64
+    )
+    rng = np.random.default_rng(9)
+    db = spark.createDataFrame(
+        [(i + 1, [float(x) for x in rng.random(B) + 0.1]) for i in range(8)]
+        + [(0, [0.0] * B)],
+        "id long, w array<double>",
+    )
+    q = spark.createDataFrame([(100, [1.0] * B)], "id long, w array<double>")
+    got = emd_knn(db, q, bins, k=9).collect()
+    assert sorted(r.nid for r in got) == list(range(1, 9))
+    assert min(r.emd for r in got) > 0
 
 
 def test_topk_degenerate_seed_falls_back_to_bruteforce(

@@ -42,7 +42,7 @@ def test_generate_feeds_join_and_text_roundtrip(spark, media_df, tmp_path):
     hist = generate_histograms(spark, media=media_df, bins=12, fake=True)
     line = np.arange(12, dtype=np.float64).reshape(-1, 1)
     res = emd_join_nd(hist, line, 2.0, strategy="grid", grid=4)
-    bf = emd_join_nd(hist, line, 2.0, strategy="bruteforce", num_blocks=3)
+    bf = emd_join_nd(hist, line, 2.0, strategy="bruteforce")
     got = {(r.rid, r.sid): r.emd for r in res.collect()}
     exp = {(r.rid, r.sid): r.emd for r in bf.collect()}
     assert set(got) == set(exp)

@@ -368,42 +368,19 @@ def test_dup_clusters_matches_union_find(spark):
     assert got[74] == 70  # 5-node chain collapses to its min id
 
 
-def test_dup_clusters_star_equals_label_and_survives_chains(spark):
-    """The default star algorithm == label propagation on random graphs, and
-    converges in O(log n) rounds on an adversarial 120-node chain where
-    label propagation needs diameter rounds (raises at the same max_iter)."""
+def test_dup_clusters_star_survives_chains(spark, monkeypatch):
+    """The distributed star rounds converge in O(log n) rounds on an
+    adversarial 120-node chain (diameter 119 >> the 25-round cap), where
+    min-label propagation would need diameter rounds."""
+    from melody_join_spark.operators import dedup
     from melody_join_spark.operators.dedup import dup_clusters
 
-    rng = np.random.default_rng(31)
-    edges = sorted(
-        {
-            (int(min(a, b)), int(max(a, b)))
-            for a, b in rng.choice(80, size=(60, 2))
-            if a != b
-        }
-    )
-    pairs = spark.createDataFrame(edges, "rid long, sid long")
-    star = {
-        r.id: r.cluster_id
-        for r in dup_clusters(pairs, algorithm="star").collect()
-    }
-    label = {
-        r.id: r.cluster_id
-        for r in dup_clusters(pairs, algorithm="label").collect()
-    }
-    assert star == label
-
-    # adversarial chain 0-1-2-...-119: diameter 119 >> max_iter
+    monkeypatch.setattr(dedup, "_DRIVER_EDGES", 0)  # force the star rounds
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(119)], "rid long, sid long"
     )
-    got = {
-        r.id: r.cluster_id
-        for r in dup_clusters(chain, max_iter=25, algorithm="star").collect()
-    }
+    got = {r.id: r.cluster_id for r in dup_clusters(chain).collect()}
     assert got == {i: 0 for i in range(120)}
-    with pytest.raises(RuntimeError):
-        dup_clusters(chain, max_iter=10, algorithm="label").collect()
 
 
 # ---------------------------------------------------------------------------
@@ -536,10 +513,10 @@ def test_winnow_pairs_matches_python_and_plan_is_jvm(spark, docs):
     assert got == want
 
 
-def test_dup_clusters_auto_equals_star_and_falls_back(spark):
-    """The size-adaptive driver union-find (algorithm='auto') labels
-    identically to the distributed star rounds, and a tiny driver_threshold
-    forces the distributed fallback."""
+def test_dup_clusters_auto_equals_star_and_falls_back(spark, monkeypatch):
+    """The driver union-find labels identically to the distributed star
+    rounds, which take over when the edge list exceeds ``_DRIVER_EDGES``."""
+    from melody_join_spark.operators import dedup
     from melody_join_spark.operators.dedup import dup_clusters
 
     rng = np.random.default_rng(11)
@@ -556,21 +533,13 @@ def test_dup_clusters_auto_equals_star_and_falls_back(spark):
         r.id: r.cluster_id
         for r in dup_clusters(pairs, ids=ids, id_col="doc_id").collect()
     }
+    assert len(auto) == 320  # every id labeled, isolated ones by themselves
+    monkeypatch.setattr(dedup, "_DRIVER_EDGES", 10)
     star = {
         r.id: r.cluster_id
-        for r in dup_clusters(
-            pairs, ids=ids, id_col="doc_id", algorithm="star"
-        ).collect()
+        for r in dup_clusters(pairs, ids=ids, id_col="doc_id").collect()
     }
-    assert auto == star
-    assert len(auto) == 320  # every id labeled, isolated ones by themselves
-    fb = {
-        r.id: r.cluster_id
-        for r in dup_clusters(
-            pairs, ids=ids, id_col="doc_id", driver_threshold=10
-        ).collect()
-    }
-    assert fb == star
+    assert star == auto
 
 
 def test_ivf_build_persist_search(spark, tmp_path):
@@ -755,19 +724,23 @@ def test_cosine_topk_distributed_matches_collected(spark, emb):
                 assert [res[(zq, r)][1] for r in range(1, 6)] == [0.0] * 5
 
 
-def test_cosine_topk_collect_guard(emb):
+def test_cosine_topk_collect_guard(emb, monkeypatch):
     """An oversized query set with distributed=False raises instead of
     silently collecting it onto the driver."""
+    from melody_join_spark.operators import _probe
+
+    monkeypatch.setattr(_probe, "COLLECT_ROWS", 4)
     qs = emb.limit(10)
-    with pytest.raises(ValueError, match="collect_threshold"):
-        cosine_topk(emb, qs, k=3, distributed=False, collect_threshold=4)
+    with pytest.raises(ValueError, match="exceeds 4 rows.*distributed=True"):
+        cosine_topk(emb, qs, k=3, distributed=False)
     # auto mode dispatches to the block path instead of raising
-    assert cosine_topk(emb, qs, k=3, collect_threshold=4).count() == 10 * 3
+    assert cosine_topk(emb, qs, k=3).count() == 10 * 3
 
 
-def test_ivf_search_distributed_matches_collected(spark, emb):
+def test_ivf_search_distributed_matches_collected(spark, emb, monkeypatch):
     """Distributed probe assignment (mapInPandas vs broadcast codebook)
     selects the same lists, so the search output is identical."""
+    from melody_join_spark.operators import _probe
     from melody_join_spark.operators.similarity import ivf_build, ivf_search
 
     idx = ivf_build(emb, nlist=16)
@@ -783,8 +756,9 @@ def test_ivf_search_distributed_matches_collected(spark, emb):
                             distributed=True).collect()
     }
     assert got == ref and len(got) > 0
-    with pytest.raises(ValueError, match="collect_threshold"):
-        ivf_search(idx, qs, k=5, distributed=False, collect_threshold=4)
+    monkeypatch.setattr(_probe, "COLLECT_ROWS", 4)
+    with pytest.raises(ValueError, match="exceeds 4 rows.*distributed=True"):
+        ivf_search(idx, qs, k=5, distributed=False)
 
 
 def test_dedupe_embeddings_greedy_rule(spark, docs, emb):

@@ -91,11 +91,11 @@ def test_strategies_equal_kernel_double_loop(spark, case):
     h = _df(spark, left)
     expect = _oracle(left, left, theta, self_join=True)
     for strategy in ("grid", "pivot", "bruteforce"):
-        _check(emd_join_nd(h, BINS, theta, strategy=strategy, num_blocks=3), expect)
+        _check(emd_join_nd(h, BINS, theta, strategy=strategy), expect)
     o = _df(spark, right)
     expect = _oracle(left, right, theta, self_join=False)
     for strategy in ("grid", "bruteforce"):
         _check(
-            emd_join_nd(h, BINS, theta, strategy=strategy, num_blocks=3, other=o),
+            emd_join_nd(h, BINS, theta, strategy=strategy, other=o),
             expect,
         )
