@@ -36,7 +36,7 @@ from .bounds import (
     rubner_bound,
     rubner_bound_to_bbox,
 )
-from .cascade import CascadeStats, EmdCascade
+from .cascade import CascadeStats, EmdCascade, multistep
 from .normal import (
     cdf_approx_error,
     cell_normal_bound,
@@ -74,6 +74,7 @@ __all__ = [
     "rubner_bound_to_bbox",
     "CascadeStats",
     "EmdCascade",
+    "multistep",
     "cdf_approx_error",
     "cell_normal_bound",
     "fit_normal",

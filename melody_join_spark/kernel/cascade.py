@@ -10,10 +10,29 @@ bounds first is the single biggest performance lever of the engine
 The cascade is evaluated on *blocks of candidate pairs* (numpy index arrays)
 so each stage prunes vectorized before the next, strictly more expensive,
 stage runs on the survivors.
+
+A cascade is also the one exact-EMD and lower-bound oracle of every search
+that is not a fixed-radius filter: :meth:`EmdCascade.exact_pairs` is its
+exact stage (the line closed form, else the memoised batched LP) and
+:meth:`EmdCascade.lower_bounds` the max of its Rubner and projection bounds.
+:func:`multistep` runs the multi-step k-nearest rule over them (Seidl and
+Kriegel; the verification step of MELODY-Join): each owner (a query, a
+record choosing its pivot, the top-k seed sample) visits its candidates in
+ascending lower-bound order, solves them exactly, and stops at the first
+candidate whose bound is above its running kth exact value.  Every
+candidate that could enter the top k has a bound at most its value, hence
+at most the kth, so it is solved; a candidate whose bound equals the kth is
+solved too, so ties at the kth value are complete.  Solving one candidate
+at a time, no search with the same bounds solves fewer.  Rounds batch the
+rule: each round solves every active owner's next slice of candidates (the
+ones whose bound is at most the kth at the round's start) in one stacked
+exact call, so the interpreter cost is per round, not per owner; a slice
+wider than one trades a few extra solves for fewer calls.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -27,11 +46,11 @@ from .bounds import (
     projection_bound_pairs,
     rubner_bound,
 )
-from .emd import emd_1d_pairs, emd_exact
+from .emd import emd_1d_pairs
 from .emd_batch import emd_exact_pairs_memo, support_table
 from .normal import cdf_approx_error, fit_normal, normal_bound_pairs
 
-__all__ = ["EmdCascade", "CascadeStats"]
+__all__ = ["EmdCascade", "CascadeStats", "multistep"]
 
 
 @dataclass
@@ -154,9 +173,6 @@ class EmdCascade:
             cdf = np.cumsum(self.weights[:, order], axis=1)
             self._line = (pos[order], cdf)
 
-    def exact(self, li: int, ri: int) -> float:
-        return emd_exact(self.weights[li], self.weights[ri], self.cost)
-
     def _fit_normal_stat(self, i: int):
         """Fit projection ``i``'s (mu, sigma, err) columns — the normal
         stage's per-record precompute, deferred out of __post_init__."""
@@ -193,6 +209,46 @@ class EmdCascade:
         return max(float(fwd), float(bwd))
 
     CHUNK = 1 << 18  # 256k pairs per block: uniform, reusable temporaries
+
+    def exact_pairs(self, li: np.ndarray, ri: np.ndarray) -> np.ndarray:
+        """Exact EMD of the pairs (li[k], ri[k]): the vectorized closed form
+        on a line, the batched LP otherwise."""
+        if self._line is not None:
+            pos, cdf = self._line
+            return emd_1d_pairs(cdf, li, ri, positions=pos)
+        # batched transportation simplex: identical rows (same row group)
+        # short-circuit to 0, every distinct (group, group) pair solves
+        # exactly once (memo), and the distinct pairs solve as STACKED
+        # tableaus per support-shape class — O(pivots) interpreter cost,
+        # not O(pairs * pivots)
+        return emd_exact_pairs_memo(
+            self.weights,
+            self.cost,
+            li,
+            ri,
+            self.row_group,
+            self._pair_memo,
+            sup=self._sup,
+            cnt=self._cnt,
+            n_groups=self._n_groups,
+        )
+
+    def lower_bounds(self, li: np.ndarray, ri: np.ndarray) -> np.ndarray:
+        """Per pair, the max of the Rubner and the projection bounds — the
+        static geometric bounds :func:`multistep` orders candidates by.
+        Zero for an arbitrary cost matrix, which has neither.  Runs in
+        ``CHUNK``-pair blocks, as :meth:`run` does."""
+        li = np.asarray(li, dtype=np.int64)
+        ri = np.asarray(ri, dtype=np.int64)
+        lb = np.zeros(li.size)
+        for s in range(0, li.size, self.CHUNK):
+            a, b = li[s : s + self.CHUNK], ri[s : s + self.CHUNK]
+            out = lb[s : s + self.CHUNK]
+            if self.rubner_ord is not None:
+                out[:] = rubner_bound(self.cents[a], self.cents[b], ord=self.rubner_ord)
+            for pos in self.proj_positions:
+                np.maximum(out, projection_bound_pairs(self.weights, pos, a, b), out=out)
+        return lb
 
     def run(
         self,
@@ -413,28 +469,65 @@ class EmdCascade:
                 if not self._reduction_on:
                     break
 
-        # 6. exact EMD on survivors (vectorized closed form on a line, LP
-        # otherwise)
-        if self._line is not None:
-            pos, cdf = self._line
-            emds = emd_1d_pairs(cdf, li, ri, positions=pos)
-        else:
-            # batched transportation simplex over survivors: identical rows
-            # (same row group) short-circuit to 0, every distinct
-            # (group, group) pair solves exactly once (memo), and the
-            # distinct pairs solve as STACKED tableaus per support-shape
-            # class — O(pivots) interpreter cost, not O(pairs * pivots)
-            emds = emd_exact_pairs_memo(
-                self.weights,
-                self.cost,
-                li,
-                ri,
-                self.row_group,
-                self._pair_memo,
-                sup=self._sup,
-                cnt=self._cnt,
-                n_groups=self._n_groups,
-            )
+        # 6. exact EMD on survivors
+        emds = self.exact_pairs(li, ri)
         st.exact_evaluated += li.size
         keep = emds <= thr
         return li[keep], ri[keep], emds[keep]
+
+
+def multistep(
+    LB: np.ndarray,
+    k: int,
+    exact: Callable[[np.ndarray, np.ndarray], np.ndarray],
+    chunk: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The multi-step k-nearest search (module docstring) for every owner
+    (row) of the (owners, candidates) lower-bound matrix ``LB`` at once.
+
+    ``+inf`` (or NaN) in ``LB`` excludes an entry.  ``exact(owners,
+    candidates)`` returns the exact values of those entries.  Each round
+    solves, in one ``exact`` call, every active owner's next ``chunk``
+    entries in bound order whose bound is at most the owner's running kth
+    value (``+inf`` until k are solved; a NaN value never tightens it).
+    Returns the solved (owner, candidate, value) triples, owner-major; the
+    k smallest values of an owner are its exact k nearest."""
+    LB = np.asarray(LB, dtype=np.float64)
+    n_own, n_cand = LB.shape
+    order = np.argsort(LB, axis=1, kind="stable")
+    LBs = np.take_along_axis(LB, order, axis=1)
+    end = np.isfinite(LBs).sum(axis=1)  # excluded entries sort last
+    ptr = np.zeros(n_own, dtype=np.int64)
+    best = np.full((n_own, k), np.inf)  # each owner's k smallest so far
+    kth = np.full(n_own, np.inf)
+    steps = np.arange(chunk)
+    owners, cands, values = [], [], []
+    live = np.flatnonzero(end > 0)
+    while live.size:
+        cols = ptr[live, None] + steps
+        take = (cols < end[live, None]) & (
+            LBs[live[:, None], np.minimum(cols, n_cand - 1)] <= kth[live, None]
+        )
+        cnt = take.sum(axis=1)  # a prefix of the slice: LBs rows ascend
+        live, cnt = live[cnt > 0], cnt[cnt > 0]
+        if not live.size:
+            break
+        own = np.repeat(live, cnt)
+        offs = np.arange(own.size) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        cand = order[own, ptr[own] + offs]
+        vals = np.asarray(exact(own, cand), dtype=np.float64)
+        owners.append(own)
+        cands.append(cand)
+        values.append(vals)
+        ptr[live] += cnt
+        new = np.full((live.size, chunk), np.inf)
+        new[np.repeat(np.arange(live.size), cnt), offs] = vals
+        merged = np.concatenate([best[live], new], axis=1)
+        merged.partition(k - 1, axis=1)
+        best[live] = merged[:, :k]
+        kth[live] = best[live].max(axis=1)
+        live = live[ptr[live] < end[live]]
+    if not owners:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, np.empty(0)
+    return np.concatenate(owners), np.concatenate(cands), np.concatenate(values)

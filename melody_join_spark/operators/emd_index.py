@@ -42,6 +42,7 @@ from ..kernel import normalize
 from ._probe import broadcast_blocks, lookup_rows
 from .emd_join_nd import (
     NdJoinConfig,
+    _bins,
     _cascade_for,
     _cell_expr,
     _centroid_cols,
@@ -87,9 +88,7 @@ def emd_index_build(
     grounds only (the grid needs centroid geometry, like the join)."""
     if not isinstance(ground, str):
         raise ValueError("emd_index_build requires a Minkowski ground")
-    bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
-    if bin_points.shape[0] == 1 and bin_points.shape[1] > 1:
-        bin_points = bin_points.T
+    bin_points = _bins(bin_points)
     d = bin_points.shape[1]
     spark = hist.sparkSession
 
@@ -241,15 +240,18 @@ def emd_index_search(
     w_col: str = "w",
 ) -> DataFrame:
     """Range search: every (qid, nid, emd) with EMD <= threshold (+slack),
-    id-equal matches excluded.  The reachable-cell union of all queries
-    becomes a literal ``cell IN (...)`` scan filter — partition pruning on
-    the disk-backed index — then ONE mapInPandas runs the screen cascade +
-    batched exact stage against the broadcast query block.  Query sets over
+    id-equal matches and zero-mass queries excluded.  The reachable-cell
+    union of all queries becomes a literal ``cell IN (...)`` scan filter —
+    partition pruning on the disk-backed index — then ONE mapInPandas runs
+    the screen cascade + batched exact stage against the broadcast query
+    block.  Query sets over
     ``_probe.COLLECT_ROWS`` rows are rejected (use ``emd_join_nd(other=...)`` /
     ``emd_knn(distributed=True)`` for table-scale query sides)."""
     cfg, bnds, grid = index.cfg, index.bnds, index.grid
     d = bnds.shape[0]
-    q = queries.select(F.col(id_col).alias("id"), F.col(w_col).alias("w"))
+    q = queries.where(_has_mass(w_col)).select(
+        F.col(id_col).alias("id"), F.col(w_col).alias("w")
+    )
     qpdf = lookup_rows(
         q, False, "emd_index_search",
         "Use emd_join_nd(other=...) or emd_knn(distributed=True) for "

@@ -70,6 +70,7 @@ from ..kernel import (
     EmdCascade,
     ReductionMap,
     ground_distance_matrix,
+    multistep,
     normalize,
     projection_positions,
 )
@@ -93,7 +94,9 @@ class JoinStats:
     qnePairCounter, utils/TimerUtil.java:12-26, BASELINE.md).
 
     Spark accumulators aggregate per-task CascadeStats back to the driver;
-    read ``snapshot()`` after an action on the join result.  The
+    read ``snapshot()`` after an action on the join result.  A grid join
+    on line bins (d = 1) under a Minkowski ground runs the 1-D operator's
+    codegen cells plan, which fills no counters.  The
     ``guest_*`` counters track CELL-level elimination during guest
     enumeration (the Grid.getGuestWithDual screens, utils/Grid.java:352-457):
     how many candidate (record, cell) replications each screen removed
@@ -196,15 +199,11 @@ def build_config(
     Rubner in the matching p-norm); an arbitrary matrix keeps only the
     cost-matrix-generic stages (dual, reduction, IndMin, exact) — like the
     reference, whose grid/normal machinery is built on L2 geometry."""
-    bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
-    if bin_points.shape[0] == 1 and bin_points.shape[1] > 1:
-        bin_points = bin_points.T
+    bin_points = _bins(bin_points)
     cost = ground_distance_matrix(
         bin_points.ravel(), dimension=bin_points.shape[1], ground=ground
     )
-    minkowski = {"l1": 1.0, "l2": 2.0, "l3": 3.0}.get(ground) if isinstance(
-        ground, str
-    ) else None
+    minkowski = _minkowski(None, ground)
     d = bin_points.shape[1]
     rng = np.random.default_rng(seed)
 
@@ -259,6 +258,31 @@ def build_config(
     return cfg
 
 
+def _bins(bin_points) -> np.ndarray:
+    """(B, d) float bin locations; a single row of B > 1 values is read as
+    B positions on a line."""
+    bp = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
+    return bp.T if bp.shape[0] == 1 and bp.shape[1] > 1 else bp
+
+
+def _minkowski(cfg: NdJoinConfig | None, ground) -> float | None:
+    """The ground's Minkowski exponent — ``cfg``'s when given, else 1/2/3
+    for 'l1'/'l2'/'l3' — or None for an explicit cost matrix."""
+    if cfg is not None:
+        return cfg.rubner_ord
+    return {"l1": 1.0, "l2": 2.0, "l3": 3.0}.get(ground) if isinstance(ground, str) else None
+
+
+def _seeded_config(
+    frame: DataFrame, col: str, bin_points: np.ndarray, seed: int, ground
+) -> NdJoinConfig:
+    """:func:`build_config` with its dual potentials seeded from the first
+    8 ``col`` weight rows of ``frame``."""
+    rows = frame.select(col).limit(8).collect()
+    sw = np.array([r[0] for r in rows], dtype=np.float64)
+    return build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
+
+
 # ---------------------------------------------------------------------------
 # shared pieces
 # ---------------------------------------------------------------------------
@@ -283,6 +307,22 @@ def _cascade_for(weights: np.ndarray, cfg: NdJoinConfig) -> EmdCascade:
         rubner_ord=cfg.rubner_ord,
         metric_cost=cfg.metric_cost,
     )
+
+
+def _lb_matrix(casc: EmdCascade, n_own: int) -> np.ndarray:
+    """The (owners, candidates) :meth:`EmdCascade.lower_bounds` matrix of a
+    cascade over the stacked rows [owners; candidates], built in owner
+    slices of about ``casc.CHUNK`` pairs."""
+    n_cand = casc.weights.shape[0] - n_own
+    cand = np.arange(n_own, n_own + n_cand)
+    LB = np.empty((n_own, n_cand))
+    step = max(1, casc.CHUNK // max(n_cand, 1))
+    for s in range(0, n_own, step):
+        o = np.arange(s, min(s + step, n_own))
+        LB[o] = casc.lower_bounds(np.repeat(o, n_cand), np.tile(cand, o.size)).reshape(
+            o.size, n_cand
+        )
+    return LB
 
 
 def _emit_pairs(ids, li, ri, emds, ordered: bool = False) -> pd.DataFrame:
@@ -423,6 +463,14 @@ def _run_cascade(
 # assignment is LP-bound, 6.7 s for them on one task (~1.16 ms a record).
 _GRID_ROWS = int(TASK_S / 0.57e-3)
 _PIVOT_ROWS = int(TASK_S / 1.16e-3)
+
+# candidates per owner per round of each multi-step search
+# (kernel.cascade.multistep): one pivot at a time for the nearest-pivot
+# assignment; at least these many (or 2k / 4k) for a kNN query and for the
+# top-k seed ceiling, whose owners need k solves before their bound tightens
+_PIVOT_CHUNK = 1
+_KNN_CHUNK = 64
+_SEED_CHUNK = 256
 
 
 def _centroid_cols(hist: DataFrame, bin_points: np.ndarray, w_col: str) -> DataFrame:
@@ -654,16 +702,12 @@ def emd_join_nd(
     'pivot' (which needs it to be a metric, as the reference assumes); the
     grid strategy is centroid-geometry-based and requires Minkowski.
     """
-    bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
-    if bin_points.shape[0] == 1 and bin_points.shape[1] > 1:
-        bin_points = bin_points.T
+    bin_points = _bins(bin_points)
     # for the grid strategy, cfg seeding is DEFERRED into _build_grid_ctx so
     # the seed sample reads the cached centroid table instead of re-running
     # the (possibly expensive) upstream plan one extra time
     if cfg is None and strategy != "grid":
-        seed_rows = hist.select(w_col).limit(8).collect()
-        sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
-        cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
+        cfg = _seeded_config(hist, w_col, bin_points, seed, ground)
     theta = float(threshold)
     two_table = other is not None
 
@@ -692,15 +736,7 @@ def emd_join_nd(
         # - tiny input: the grid's stats/boundaries jobs cost more than the
         #   O(n^2/blocks) block join they would save -> bruteforce
         # - else: the quantile-grid MELODY plan
-        minkowski_g = (
-            cfg.rubner_ord
-            if cfg is not None
-            else (
-                {"l1": 1.0, "l2": 2.0, "l3": 3.0}.get(ground)
-                if isinstance(ground, str)
-                else None
-            )
-        )
+        minkowski_g = _minkowski(cfg, ground)
         small_probe = 512
         # persist BEFORE the sizing probe: partitions the probe scans are
         # cached, so the chosen strategy reuses them instead of re-running
@@ -761,27 +797,21 @@ def emd_join_nd(
         )
     if strategy != "grid":
         raise ValueError(f"unknown strategy {strategy!r}")
-    minkowski = (
-        cfg.rubner_ord
-        if cfg is not None
-        else ({"l1": 1.0, "l2": 2.0, "l3": 3.0}.get(ground) if isinstance(ground, str) else None)
-    )
-    if minkowski is None:
+    if _minkowski(cfg, ground) is None:
         raise ValueError(
             "grid strategy requires a Minkowski ground ('l1'/'l2'/'l3'); "
             "use strategy='pivot' (metric cost) or 'bruteforce' for an "
             "arbitrary cost matrix"
         )
 
-    if bin_points.shape[1] == 1 and stats is None:
+    if bin_points.shape[1] == 1:
         # Collinear bins: 1-D EMD is a closed form over prefix CDFs, fully
         # expressible as JVM codegen — delegate to the cells plan of the 1-D
         # operator (hash-checked emd_threshold_cells machinery) instead of
         # shipping arrays through a Python cascade.  Same semantics: the
         # cells plan filters emd <= passed threshold, so pass theta + slack
         # (cascade parity); every Minkowski p coincides with |x - y| on a
-        # line.  Covers self- AND two-table joins; the pandas path remains
-        # when the caller wants JoinStats instrumentation.
+        # line.  Covers self- AND two-table joins; ``stats`` stays empty.
         from .emd_join import emd_threshold_join
         from .histograms import with_cum
 
@@ -910,9 +940,7 @@ def _build_grid_ctx(
         bnds = _grid_boundaries(rec0, d, grid)  # materializes rec0
         n_rec = rec0.count()  # cached by now: metadata-cheap
     if cfg is None:
-        seed_rows = rec0.select("w").limit(8).collect()
-        sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
-        cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
+        cfg = _seeded_config(rec0, "w", bin_points, seed, ground)
 
     stat_udf, stat_len = _stat_udf(cfg)
     # the spread guard sits BETWEEN the caches, after rec0 is materialized
@@ -1181,12 +1209,16 @@ def _pivot_join(
     1. P pivots sampled on the driver (InputSampler.RandomSampler analog,
        mrsim/generic/MRSimJoinHD.java:379-390) — deterministic seeded
        choice of P distinct records.
-    2. One mapInPandas pass computes each record's exact EMD to every pivot
-       (CloudJoinBaseMapper.map:81-196 does the same); nearest pivot = base
-       partition.  Generalized-hyperplane window rule: record e is
+    2. One mapInPandas pass finds each record's nearest pivot = base
+       partition (CloudJoinBaseMapper.map:81-196 solves all P exact EMDs
+       instead): the multi-step search of
+       :mod:`~melody_join_spark.kernel.cascade` with k = 1 under Minkowski
+       grounds, a LAESA loop over the pivot-pivot distances under a metric
+       cost matrix.  Generalized-hyperplane window rule: record e is
        replicated to window partition (i, j) when
        (d(e, P_far) - d(e, P_near)) / 2 <= theta (+slack) — the condition
-       under which a qualifying partner can live across the boundary.
+       under which a qualifying partner can live across the boundary; only
+       pivots whose lower bound admits that are solved exactly.
     3. Rows explode into their partition keys and run through the shared
        cascade runner (``_run_cascade``, min(P^2, the candidate-pair
        width) tasks); ``pivot_pairs`` generates the candidates: base partitions
@@ -1216,162 +1248,80 @@ def _pivot_join(
     # contract already requires a METRIC cost (hyperplane windows assume the
     # triangle inequality), so |d(r, p) - d(p, q)| lower-bounds d(r, q)
     PP = None
-    if cfg.rubner_ord is None and len(PV) > 1:
-        from ..kernel.emd_batch import emd_exact_pairs_memo as _eepm
-
-        Pn = len(PV)
-        ii, jj = np.triu_indices(Pn, 1)
-        _, pgrp = np.unique(PV, axis=0, return_inverse=True)
-        es = _eepm(PV, cfg.cost, ii, jj, pgrp, {})
-        PP = np.zeros((Pn, Pn))
+    if cfg.rubner_ord is None and P > 1:
+        ii, jj = np.triu_indices(P, 1)
+        es = _cascade_for(PV, cfg).exact_pairs(ii, jj)
+        PP = np.zeros((P, P))
         PP[ii, jj] = es
         PP[jj, ii] = es
-    # the 1-D CDF closed form assumes |x-y| costs — Minkowski-only
-    d1 = np.atleast_2d(cfg.bin_points).shape[1] == 1 and cfg.rubner_ord is not None
-
-    pv_cents = PV @ cfg.bin_points  # (P, d) pivot centroids for the lb screen
 
     def dists_part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if d1:
-            pos = cfg.bin_points[:, 0]
-            order = np.argsort(pos, kind="stable")
-            dx = np.diff(pos[order])
-            pv_cdf = np.cumsum(PV[:, order], axis=1)[:, :-1]  # (P, B-1)
-        proj = [
-            (np.argsort(np.asarray(p), kind="stable"), np.asarray(p))
-            for p in cfg.proj_positions
-        ]
         for pdf in it:
             W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
             n = W.shape[0]
-            if d1:
-                cdf = np.cumsum(W[:, order], axis=1)[:, :-1]
-                D = np.abs(cdf[:, None, :] - pv_cdf[None, :, :]) @ dx  # (n, P)
-            else:
-                # exact EMD to a pivot is an LP; most pivots are screened out
-                # by vectorized lower bounds first (the reference pays the
-                # full P LPs per record, CloudJoinBaseMapper.java:81-196):
-                # 1. Rubner centroid distance to every pivot (one matrix op)
-                # 2. projection bounds (batched cumsum tensor per projection)
-                # Then per record: exact EMDs in ascending-lb order stop as
-                # soon as lb > d_near (multistep argmin optimality), and the
-                # window distances only need exactness when
-                # lb <= d_near + 2*reach — pivots beyond that can never admit
-                # a cross-boundary match, so their slot stays +inf and the
-                # JVM window rule drops them for free.
-                cents = W @ cfg.bin_points  # (n, d)
-                from ..kernel.emd_batch import (
-                    emd_exact_pairs_memo,
-                    support_table,
+            # one cascade over [records; pivots]: exact EMD to a pivot is an
+            # LP (the closed form on a line), so most pivots are screened by
+            # lower bounds first, where the reference pays the full P LPs per
+            # record (CloudJoinBaseMapper.java:81-196)
+            casc = _cascade_for(np.vstack([W, PV]), cfg)
+            EX = np.full((n, P), np.nan)
+            d_near = np.full(n, np.inf)
+            if cfg.rubner_ord is not None:
+                # the nearest pivot by the multi-step rule (k = 1), then
+                # the window distances: exactness is only needed where
+                # lb <= d_near + 2*reach — pivots beyond that can never
+                # admit a cross-boundary match, so their slot stays +inf
+                # and the JVM window rule drops them for free (the static
+                # bounds do not tighten from solves)
+                LB = _lb_matrix(casc, n)
+                rr, jj, es = multistep(
+                    LB, 1, lambda o, c: casc.exact_pairs(o, n + c), _PIVOT_CHUNK
                 )
-
-                Wall = np.vstack([W, PV])
-                _, grp_all = np.unique(Wall, axis=0, return_inverse=True)
-                sup_all, cnt_all = support_table(Wall)
-                ngrp = int(grp_all.max()) + 1
-                memo: dict = {}
-                EX = np.full((n, P), np.nan)
+                EX[rr, jj] = es
+                np.minimum.at(d_near, rr, es)
+                rr, jj = np.nonzero((LB <= d_near[:, None] + 2.0 * reach) & np.isnan(EX))
+                if rr.size:
+                    EX[rr, jj] = casc.exact_pairs(rr, n + jj)
+            else:
+                # arbitrary (metric) cost: no centroid geometry, but the
+                # pivot-pivot matrix gives LAESA bounds.  ONE loop covers
+                # both the nearest-pivot search and the window distances:
+                # round t solves each record's cheapest-lb unsolved pivot,
+                # every solve tightens all its unsolved slots via
+                # |d(r,p) - PP[p,q]| <= d(r,q), and a record stops when that
+                # bound exceeds the DYNAMIC window cut d_near + 2*reach
+                # (pivots past it can never admit a cross-boundary match).
+                # Solving cheapest-first under the shrinking cut lets each
+                # solved slot push later slots past the cut before they are
+                # paid for — a few LPs per record, not the reference's n*P.
                 rows_n = np.arange(n)
-                d_near = np.full(n, np.inf)
-                if cfg.rubner_ord is not None:
-                    LB = np.linalg.norm(
-                        cents[:, None, :] - pv_cents[None, :, :],
-                        ord=cfg.rubner_ord,
-                        axis=2,
-                    )  # (n, P)
-                    for o, p_pos in proj:
-                        dxp = np.diff(p_pos[o])
-                        wc = np.cumsum(W[:, o], axis=1)[:, :-1]
-                        pc = np.cumsum(PV[:, o], axis=1)[:, :-1]
-                        pb = np.abs(wc[:, None, :] - pc[None, :, :]) @ dxp
-                        np.maximum(LB, pb, out=LB)
-                    # batched multi-step assignment: round t evaluates, for
-                    # every record still undecided, its t-th-closest pivot
-                    # BY LOWER BOUND through one stacked simplex call; a
-                    # record stops when its next lb exceeds its running
-                    # nearest exact distance (same optimality as the scalar
-                    # loop, interpreter cost O(rounds) not
-                    # O(records x pivots)).  Memo dedups duplicate
-                    # histograms' LPs.
-                    lb_order = np.argsort(LB, axis=1, kind="stable")
-                    ptr = np.zeros(n, dtype=np.int64)
-                    while True:
-                        j_next = lb_order[rows_n, np.minimum(ptr, P - 1)]
-                        go = (ptr < P) & (LB[rows_n, j_next] <= d_near)
-                        if not go.any():
-                            break
-                        rr = np.flatnonzero(go)
-                        jn = j_next[rr]
-                        es = emd_exact_pairs_memo(
-                            Wall, cfg.cost, rr, n + jn, grp_all, memo,
-                            sup=sup_all, cnt=cnt_all, n_groups=ngrp,
+                LB = np.zeros((n, P))
+                while True:
+                    masked = np.where(np.isnan(EX), LB, np.inf)
+                    jn_all = masked.argmin(axis=1)
+                    lb_next = masked[rows_n, jn_all]
+                    go = np.isfinite(lb_next) & (
+                        lb_next <= d_near + 2.0 * reach
+                    )
+                    if not go.any():
+                        break
+                    rr = np.flatnonzero(go)
+                    jn = jn_all[rr]
+                    es = casc.exact_pairs(rr, n + jn)
+                    EX[rr, jn] = es
+                    d_near[rr] = np.minimum(d_near[rr], es)
+                    if PP is not None:
+                        # NB: fancy-indexed LB[rr] is a copy — assign back
+                        LB[rr] = np.maximum(
+                            LB[rr], np.abs(es[:, None] - PP[jn])
                         )
-                        EX[rr, jn] = es
-                        d_near[rr] = np.minimum(d_near[rr], es)
-                        ptr[rr] += 1
-                    # window distances (static LB: Minkowski bounds don't
-                    # tighten from solves): exactness only needed where a
-                    # cross-boundary match is possible
-                    cut_w = d_near[:, None] + 2.0 * reach
-                    need = (LB <= cut_w) & np.isnan(EX)
-                    rr, jj = np.nonzero(need)
-                    if rr.size:
-                        EX[rr, jj] = emd_exact_pairs_memo(
-                            Wall, cfg.cost, rr, n + jj, grp_all, memo,
-                            sup=sup_all, cnt=cnt_all, n_groups=ngrp,
-                        )
-                else:
-                    # arbitrary (metric) cost: no centroid geometry, but the
-                    # pivot-pivot matrix gives LAESA bounds — each solved
-                    # distance d(r, p) tightens every unsolved pivot q via
-                    # |d(r, p) - PP[p, q]| <= d(r, q).  Round t solves each
-                    # record's current-best unsolved pivot; records stop
-                    # when that bound exceeds d_near.  This replaces the
-                    # round-3 behavior (all n*P LPs, the reference's own
-                    # cost, CloudJoinBaseMapper.java:81-196) with ~a few
-                    # LPs per record.
-                    # ONE loop covers both the nearest-pivot search and the
-                    # window distances: round t solves each record's
-                    # cheapest-lb unsolved pivot, every solve tightens all
-                    # its unsolved slots via |d(r,p) - PP[p,q]| <= d(r,q),
-                    # and a record stops when that bound exceeds the DYNAMIC
-                    # window cut d_near + 2*reach (pivots past it can never
-                    # admit a cross-boundary match).  Solving cheapest-first
-                    # under the shrinking cut is strictly cheaper than the
-                    # former two-phase shape (d_near loop + one bulk solve
-                    # of every slot under the INITIAL cut): each solved slot
-                    # can push later slots past the cut before they are
-                    # paid for.
-                    LB = np.zeros((n, P))
-                    while True:
-                        masked = np.where(np.isnan(EX), LB, np.inf)
-                        jn_all = masked.argmin(axis=1)
-                        lb_next = masked[rows_n, jn_all]
-                        go = np.isfinite(lb_next) & (
-                            lb_next <= d_near + 2.0 * reach
-                        )
-                        if not go.any():
-                            break
-                        rr = np.flatnonzero(go)
-                        jn = jn_all[rr]
-                        es = emd_exact_pairs_memo(
-                            Wall, cfg.cost, rr, n + jn, grp_all, memo,
-                            sup=sup_all, cnt=cnt_all, n_groups=ngrp,
-                        )
-                        EX[rr, jn] = es
-                        d_near[rr] = np.minimum(d_near[rr], es)
-                        if PP is not None:
-                            # NB: fancy-indexed LB[rr] is a copy — assign back
-                            LB[rr] = np.maximum(
-                                LB[rr], np.abs(es[:, None] - PP[jn])
-                            )
-                # solved slots keep their exact value (more finite
-                # coordinates for the join-time LAESA screen); unsolved
-                # slots have lb > d_near + 2*reach, so the true distance
-                # fails the hyperplane rule and +inf drops them for free.
-                # A solved slot whose exact exceeds the cut is equally
-                # dropped by the JVM rule, so membership is unchanged.
-                D = np.where(np.isnan(EX), np.inf, EX)
+            # solved slots keep their exact value (more finite coordinates
+            # for the join-time LAESA screen); unsolved slots have
+            # lb > d_near + 2*reach, so the true distance fails the
+            # hyperplane rule and +inf drops them for free.  A solved slot
+            # whose exact exceeds the cut is equally dropped by the JVM
+            # rule, so membership is unchanged.
+            D = np.where(np.isnan(EX), np.inf, EX)
             base = D.argmin(axis=1)
             yield pd.DataFrame(
                 {
@@ -1588,183 +1538,53 @@ def emd_knn(
     utils/Grid.java:60-207, SURVEY.md §2.3 J5); this is the capability done
     Spark-first.  Small query sets (at most ``_probe.COLLECT_ROWS`` rows;
     the lookup contract) are collected + broadcast, and each database
-    partition runs the optimal multi-step kNN loop — candidates sorted by Rubner lower
-    bound, exact EMD evaluated in that order, and the scan stops as soon as
-    the next lower bound exceeds the running kth distance (Seidl-Kriegel
-    optimality: no exact computation can be saved).  Per-partition top-k
-    lists then merge through one small shuffle.
+    partition runs the multi-step k-nearest search of
+    :mod:`~melody_join_spark.kernel.cascade` with the queries as owners,
+    its rows as candidates and the cascade's Rubner + projection bounds.
+    Per-partition top-k lists then merge through one small shuffle.
 
     Large query sets take the NO-collect block path (``distributed=None``
     decides from the size probe; True forces): queries and database rows
     hash into blocks that meet in ``cogroup().applyInPandas`` groups, sized
     by row count as described in
     :mod:`~melody_join_spark.operators._probe`; every (q-block, db-block)
-    group runs the SAME multi-step screened loop, and the global ranking
+    group runs the SAME multi-step search, and the global ranking
     window merges.  ``distributed=False`` on an oversized query set
     raises instead of silently bottlenecking the driver.
     """
-    bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
-    if bin_points.shape[0] == 1 and bin_points.shape[1] > 1:
-        bin_points = bin_points.T
+    bin_points = _bins(bin_points)
     if cfg is None:
-        seed_rows = db.select(w_col).limit(8).collect()
-        sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
-        cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
+        cfg = _seeded_config(db, w_col, bin_points, seed, ground)
 
     mass = _has_mass(w_col)
     q = queries.where(mass).select(
         F.col(id_col).alias("id"), F.col(w_col).alias("w")
     )
-    cost = cfg.cost
-    # the 1-D CDF closed form assumes |x-y| costs — Minkowski-only
-    d1 = cfg.bin_points.shape[1] == 1 and cfg.rubner_ord is not None
-    if d1:
-        pos = cfg.bin_points[:, 0]
-        order = np.argsort(pos, kind="stable")
 
-    proj = [
-        (np.argsort(np.asarray(p), kind="stable"), np.asarray(p))
-        for p in cfg.proj_positions
-    ]
-
-    def prep(qpdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    def prep(qpdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
         qids_ = qpdf["id"].to_numpy().astype(np.int64)
-        QW_ = normalize(np.stack(qpdf["w"].to_numpy()).astype(np.float64))
-        return qids_, QW_, QW_ @ cfg.bin_points
+        return qids_, normalize(np.stack(qpdf["w"].to_numpy()).astype(np.float64))
 
     def knn_block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        """The screened multi-step loop for one (query block, db block)
-        pair."""
-        from ..kernel.emd_batch import emd_exact_pairs_memo, support_table
-
-        qids_, QW_, qc_ = payload
+        """The multi-step search of one (query block, db block) pair: every
+        query is an owner, every block row a candidate, all queries'
+        rounds stacked into one exact call."""
+        qids_, QW_ = payload
         nq = len(qids_)
         ids = pdf["id"].to_numpy()
         W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
-        cents = W @ cfg.bin_points
-        out_q, out_n, out_e = [], [], []
-        if d1:
-            dcdf = np.cumsum(W[:, order], axis=1)[:, :-1]
-            dx = np.diff(cfg.bin_points[order, 0])
-            qcdf = np.cumsum(QW_[:, order], axis=1)[:, :-1]
-            pcdfs = []
-        else:
-            # precompute per-block projection CDFs once: the Rubner
-            # ordering alone admits too many exact LPs at d>=2; maxing in
-            # the (vectorized) projection bounds cuts the exact count —
-            # same multi-step loop, tighter screen
-            pcdfs = [
-                (np.cumsum(W[:, o], axis=1)[:, :-1], np.diff(p[o]),
-                 np.cumsum(QW_[:, o], axis=1)[:, :-1])
-                for o, p in proj
-            ]
-            # combined (queries + block rows) matrix for the batched
-            # exact stage: group ids dedup identical histograms (one LP
-            # per distinct group pair, memo'd across queries)
-            Wall = np.vstack([QW_, W])
-            _, grp_all = np.unique(Wall, axis=0, return_inverse=True)
-            sup_all, cnt_all = support_table(Wall)
-            n_groups = int(grp_all.max()) + 1
-            memo: dict = {}
-        if d1:
-            for qi in range(nq):
-                lb = np.linalg.norm(
-                    cents - qc_[qi], ord=cfg.rubner_ord, axis=1
-                )  # Rubner
-                o = np.argsort(lb, kind="stable")
-                o = o[ids[o] != qids_[qi]]
-                kth = np.inf
-                heap: list[tuple[float, int]] = []
-                for j in o:
-                    if lb[j] > kth:
-                        break  # optimal multi-step stop
-                    e = float(np.abs(dcdf[j] - qcdf[qi]) @ dx)
-                    heap.append((e, int(ids[j])))
-                    if len(heap) >= k:
-                        heap.sort()
-                        heap = heap[:k]
-                        kth = heap[-1][0]
-                for e, nid in sorted(heap)[:k]:
-                    out_q.append(int(qids_[qi]))
-                    out_n.append(nid)
-                    out_e.append(e)
-            return pd.DataFrame({"qid": out_q, "nid": out_n, "emd": out_e})
-
-        # d >= 2: ROUND-BASED multi-step across ALL queries at once.  The
-        # per-query chunked loop cost ~2 batch-solver calls per query —
-        # each call's fixed overhead (group gather, tableau setup)
-        # dominated emd_knn_big's wall time.  Instead every round collects
-        # each active query's next lb-ordered candidate chunk and solves
-        # ONE stacked batch for the whole block; rounds needed ~ a small
-        # constant, so solver-call count drops from O(queries) to O(1) per
-        # block.  Same optimal stop per query (a query goes inactive when
-        # its next lower bound exceeds its running kth distance).
-        ndb = W.shape[0]
-        LBm = np.zeros((nq, ndb))
-        # query-sliced: the (slice, ndb, B) broadcast intermediates stay
-        # ~tens of MB regardless of block sizes
-        QS = max(1, int(8_000_000 // max(1, ndb * cfg.bin_points.shape[0])))
-        for s0 in range(0, nq, QS):
-            s1 = min(s0 + QS, nq)
-            if cfg.rubner_ord is not None:
-                LBm[s0:s1] = np.linalg.norm(
-                    cents[None, :, :] - qc_[s0:s1, None, :],
-                    ord=cfg.rubner_ord,
-                    axis=2,
-                )
-            for wc, dxp, qcp in pcdfs:
-                pb = np.abs(wc[None, :, :] - qcp[s0:s1, None, :]) @ dxp
-                np.maximum(LBm[s0:s1], pb, out=LBm[s0:s1])
-        LBm[ids[None, :] == qids_[:, None]] = np.inf  # self-matches out
-        orders_q = np.argsort(LBm, axis=1, kind="stable")
-        LBs = np.take_along_axis(LBm, orders_q, axis=1)
-        nvalid = (np.isfinite(LBs)).sum(axis=1)
-        ptr = np.zeros(nq, dtype=np.int64)
-        kth_arr = np.full(nq, np.inf)
-        heaps: list[list[tuple[float, int]]] = [[] for _ in range(nq)]
-        CHUNK = max(64, 2 * k)
-        while True:
-            li_parts: list[np.ndarray] = []
-            ri_parts: list[np.ndarray] = []
-            for qi in range(nq):
-                p0 = ptr[qi]
-                lim = min(nvalid[qi], p0 + CHUNK)
-                if p0 >= lim or LBs[qi, p0] > kth_arr[qi]:
-                    continue
-                hi = p0 + int(
-                    np.searchsorted(LBs[qi, p0:lim], kth_arr[qi], "right")
-                )
-                if hi == p0:
-                    continue
-                li_parts.append(np.full(hi - p0, qi, dtype=np.int64))
-                ri_parts.append(orders_q[qi, p0:hi])
-                ptr[qi] = hi
-            if not li_parts:
-                break
-            liq = np.concatenate(li_parts)
-            rjj = np.concatenate(ri_parts)
-            es = emd_exact_pairs_memo(
-                Wall, cost, liq, nq + rjj, grp_all, memo,
-                sup=sup_all, cnt=cnt_all, n_groups=n_groups,
-            )
-            off = 0
-            for part_q, part_r in zip(li_parts, ri_parts):
-                qi = int(part_q[0])
-                cnt = part_q.size
-                vals = es[off : off + cnt]
-                off += cnt
-                h = heaps[qi]
-                h.extend(zip(vals.tolist(), ids[part_r].astype(int).tolist()))
-                if len(h) >= k:
-                    h.sort()
-                    del h[k:]
-                    kth_arr[qi] = h[-1][0]
-        for qi in range(nq):
-            for e, nid in sorted(heaps[qi])[:k]:
-                out_q.append(int(qids_[qi]))
-                out_n.append(nid)
-                out_e.append(e)
-        return pd.DataFrame({"qid": out_q, "nid": out_n, "emd": out_e})
+        casc = _cascade_for(np.vstack([QW_, W]), cfg)
+        LB = _lb_matrix(casc, nq)
+        LB[ids[None, :] == qids_[:, None]] = np.inf  # self-matches out
+        own, cand, emd = multistep(
+            LB, k, lambda o, c: casc.exact_pairs(o, nq + c), max(_KNN_CHUNK, 2 * k)
+        )
+        # each query's k smallest by (emd, nid)
+        nid = ids[cand]
+        o = np.lexsort((nid, emd, own))
+        own, nid, emd = own[o], nid[o], emd[o]
+        keep = np.arange(own.size) - np.searchsorted(own, own) < k
+        return pd.DataFrame({"qid": qids_[own[keep]], "nid": nid[keep], "emd": emd[keep]})
 
     def rank(local: DataFrame) -> DataFrame:
         from pyspark.sql.window import Window
@@ -1814,25 +1634,15 @@ def emd_topk_nd(
     rows are dropped on entry, as in :func:`emd_join_nd`.
 
     Sample-seeded bound (QNEPreReducer.java:96-109 / HistUtil.getKEmd:
-    641-652): exact EMDs over a seeded hash-order sample of the rows (its
-    size derived from N and k) give an upper bound for the global kth
-    distance; the threshold join at that bound then covers the true top-k;
-    orderBy(emd).limit(k) merges."""
+    641-652): the kth smallest exact EMD among the pairs of a seeded
+    hash-order sample of the rows (its size derived from N and k), found by
+    the multi-step search of :mod:`~melody_join_spark.kernel.cascade`, is an
+    upper bound for the global kth distance; the threshold join at that
+    bound then covers the true top-k; orderBy(emd).limit(k) merges."""
     from pyspark.sql.window import Window
 
-    bin_points = np.atleast_2d(np.asarray(bin_points, dtype=np.float64))
-    if bin_points.shape[0] == 1 and bin_points.shape[1] > 1:
-        bin_points = bin_points.T
-    minkowski_g = (
-        cfg.rubner_ord
-        if cfg is not None
-        else (
-            {"l1": 1.0, "l2": 2.0, "l3": 3.0}.get(ground)
-            if isinstance(ground, str)
-            else None
-        )
-    )
-    if minkowski_g is None and strategy == "grid":
+    bin_points = _bins(bin_points)
+    if _minkowski(cfg, ground) is None and strategy == "grid":
         strategy = "bruteforce"  # arbitrary cost: no centroid grid geometry
 
     rec = hist.select(
@@ -1859,11 +1669,7 @@ def emd_topk_nd(
         sample_src = ctx.rec1
     else:
         if cfg is None:
-            seed_rows = hist.select(w_col).limit(8).collect()
-            sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
-            cfg = build_config(
-                bin_points, seed_weights=sw, seed=seed, ground=ground
-            )
+            cfg = _seeded_config(hist, w_col, bin_points, seed, ground)
         rec = persist(rec)
         sample_src = rec
 
@@ -1877,7 +1683,6 @@ def emd_topk_nd(
     # escalation loop (an extra full join pass on a miss) with one pass —
     # the single-pass property the reference gets from per-cell rank
     # ceilings (Grid.pruneCandidates:329-350).
-    from ..kernel.emd_batch import emd_exact_pairs_memo
 
     # seeded hash-order sample, NOT first-N-by-id: on id-clustered data the
     # first ids are near-duplicates of each other, which loosens the kth
@@ -1912,49 +1717,21 @@ def emd_topk_nd(
         )
     else:
         # the ceiling is the kth-smallest EXACT EMD among the sample's
-        # pairs; how close we get to the sample's true kth is pure LP
-        # budget.  Instead of LPing a random pair subset (round-3), rank
-        # ALL sample pairs by the vectorized Rubner lower bound and solve
-        # in that order with the Seidl-Kriegel stop (once the running kth
-        # exact <= the next pair's lower bound, no further pair can improve
-        # it) — the ceiling equals the sample's exact kth with near-minimal
-        # LPs, so the single grid join runs at the tightest radius any
-        # sample of this size can justify.
-        iu = np.triu_indices(n, 1)
-        if cfg.rubner_ord is not None:
-            Csamp = SW @ cfg.bin_points
-            lb = np.linalg.norm(
-                Csamp[iu[0]] - Csamp[iu[1]], ord=cfg.rubner_ord, axis=1
-            )
-        else:
-            lb = np.zeros(iu[0].size)
-        order = np.argsort(lb, kind="stable")
-        lb_sorted = lb[order]
-        _, sgrp = np.unique(SW, axis=0, return_inverse=True)
-        memo: dict = {}
-        vals = np.empty(0)
-        kth = np.inf
-        pos = 0
-        CHUNK = max(256, 4 * k)
-        while pos < order.size and lb_sorted[pos] <= kth:
-            hi = pos + int(
-                np.searchsorted(lb_sorted[pos : pos + CHUNK], kth, "right")
-            )
-            idx = order[pos:hi]
-            pos = hi
-            if idx.size == 0:
-                break
-            es = emd_exact_pairs_memo(
-                SW, cfg.cost, iu[0][idx], iu[1][idx], sgrp, memo
-            )
-            vals = np.concatenate([vals, es])
-            if vals.size >= k:
-                vals = np.partition(vals, k - 1)[:k]
-                kth = float(vals.max())
+        # pairs: ONE owner whose candidates are all sample pairs, found by
+        # the multi-step search (kernel.cascade) — the exact sample kth
+        # with near-minimal LPs, so the single grid join runs at the
+        # tightest radius any sample of this size can justify
+        casc = _cascade_for(SW, cfg)
+        iu0, iu1 = np.triu_indices(n, 1)
+        _, _, vals = multistep(
+            casc.lower_bounds(iu0, iu1)[None, :], k,
+            lambda o, c: casc.exact_pairs(iu0[c], iu1[c]), max(_SEED_CHUNK, 4 * k),
+        )
+        kth = np.sort(vals)[k - 1] if vals.size >= k else np.inf
         probe = max(float(kth), 1e-9)
         if not np.isfinite(probe):
             # degenerate sample (e.g. all-identical or NaN-mass rows) left
-            # the Seidl-Kriegel loop without k finite exact EMDs: there is
+            # the multi-step search without k finite exact EMDs: there is
             # no finite ceiling, and round(inf * 1e6) / a radius-inf grid
             # join would both blow up — fall back to the all-pairs oracle,
             # which needs no radius (round-4 ADVICE, emd_join_nd.py:1669)

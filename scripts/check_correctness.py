@@ -1,7 +1,17 @@
 #!/usr/bin/env python
 """Local mirror of the driver's correctness gate: run every queries() entry
 at sf0.01 on Spark AND its oracle_sql() on DuckDB; compare row count, column
-names, and order-insensitive value multiset.  Exit nonzero on mismatch."""
+names, and order-insensitive value multiset.  Exit nonzero on mismatch.
+
+Usage: python scripts/check_correctness.py [SF_DIR] [--only=q1,q2]
+    [--json=OUT.json] [--against=EARLIER.json] [--check-rotation]
+
+``--against`` compares each query's Spark ``value_hash`` with the one an
+earlier ``--json`` artifact recorded (e.g. at the parent commit), lists
+every query whose hash differs or that the artifact lacks, and exits
+nonzero on any.  It is the cross-commit check where the oracle cannot be
+one: at sf0.1 the EMD family's oracles read sf0.01 fixtures and report
+MISMATCH by construction."""
 
 from __future__ import annotations
 
@@ -13,16 +23,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _args = [
     a for a in sys.argv[1:]
-    if not a.startswith("--only=") and not a.startswith("--json=")
+    if not a.startswith(("--only=", "--json=", "--against="))
     and a != "--check-rotation"
 ]
 ONLY = None
 JSON_OUT = None
+AGAINST = None
 for _a in sys.argv[1:]:
     if _a.startswith("--only="):  # --only=q1,q2 runs a subset while iterating
         ONLY = set(_a.split("=", 1)[1].split(","))
     elif _a.startswith("--json="):  # driver-format artifact for the round log
         JSON_OUT = _a.split("=", 1)[1]
+    elif _a.startswith("--against="):  # earlier --json artifact to diff hashes
+        AGAINST = _a.split("=", 1)[1]
 SF_DIR = _args[0] if _args else "/root/testdata/sf0.01"
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -64,6 +77,20 @@ def check_rotation() -> list[str]:
                     f"({rnd - 1}->{rnd}): {sorted(stuck)}"
                 )
     return errs
+
+
+def hash_diffs(report: dict, earlier: dict) -> list[str]:
+    """Queries of ``report`` whose value_hash differs from ``earlier``'s
+    (both in the --json layout), or that ``earlier`` does not have."""
+    before = earlier["queries"]
+    diffs = []
+    for name, rec in sorted(report.items()):
+        old = before.get(name, {}).get("value_hash")
+        if old is None:
+            diffs.append(f"{name}: not in the earlier artifact")
+        elif old != rec.get("value_hash"):
+            diffs.append(f"{name}: value_hash {old} -> {rec.get('value_hash')}")
+    return diffs
 
 
 def main() -> int:
@@ -142,11 +169,26 @@ def main() -> int:
                  "failures": failures, "queries": report},
                 fh, indent=1, sort_keys=True,
             )
+    status = 0
+    if AGAINST:
+        import json as _json
+
+        with open(AGAINST) as fh:
+            diffs = hash_diffs(report, _json.load(fh))
+        for d in diffs:
+            print(f"  HASH DIFF {d}")
+        print(
+            f"value hashes vs {AGAINST}: "
+            f"{len(report) - len(diffs)}/{len(report)} equal"
+        )
+        if diffs:
+            status = 3
     if failures:
         print(f"FAILED: {failures}")
         return 1
-    print("ALL OK")
-    return 0
+    if status == 0:
+        print("ALL OK")
+    return status
 
 
 if __name__ == "__main__":

@@ -185,3 +185,22 @@ def test_index_rebuild_detects_appended_data(spark, tmp_path):
     assert m2["data_digest"] != m1["data_digest"]
     idx = emd_index_load(spark, path)
     assert idx.records.where(F.col("id") >= 1_000_000_000).count() == 1
+
+
+def test_index_search_drops_zero_mass_queries(spark, tmp_path):
+    """A zero-mass query matches nothing.  Its centroid (the origin, for
+    bins symmetric about it) lies inside every indexed row's reach here, and
+    the exact stage would score it 0.0 against each of them."""
+    bins = np.array([[i, j] for i in (-1, 0, 1) for j in (-1, 0, 1)], dtype=np.float64)
+    rng = np.random.default_rng(5)
+    hist = spark.createDataFrame(
+        [(i + 1, [float(x) for x in rng.random(9) + 0.1]) for i in range(8)],
+        "id long, w array<double>",
+    )
+    idx = emd_index_build(hist, bins, str(tmp_path / "zero_idx"), grid=2)
+    queries = spark.createDataFrame(
+        [(100, [0.0] * 9), (101, [1.0] * 9)], "id long, w array<double>"
+    )
+    got = emd_index_search(idx, queries, 5.0).collect()
+    assert {r.qid for r in got} == {101}
+    assert sorted(r.nid for r in got) == list(range(1, 9))

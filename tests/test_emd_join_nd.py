@@ -589,23 +589,52 @@ def test_knn_drops_zero_mass_rows(spark):
     assert min(r.emd for r in got) > 0
 
 
+def test_emd_knn_line_bins_matches_kernel(spark):
+    """kNN on line bins (d = 1, unsorted positions, sparse and duplicate
+    rows) equals the emd_exact double loop, ties broken by id."""
+    from melody_join_spark.operators.emd_join_nd import emd_knn
+
+    pos = np.array([3.0, 0.0, 1.5, 0.5, 4.0, 2.0])
+    rng = np.random.default_rng(11)
+    pool = rng.random((5, pos.size)) * (rng.random((5, pos.size)) < 0.6)
+    pool[:, 0] += 0.1  # nonzero mass
+    rows = [(i + 1, [float(x) for x in pool[i % 5]]) for i in range(14)]
+    db = spark.createDataFrame(rows, "id long, w array<double>")
+    queries = spark.createDataFrame(rows[:4], "id long, w array<double>")
+    k = 5
+    got = emd_knn(db, queries, pos, k=k).collect()
+    cost = np.abs(pos[:, None] - pos[None, :])
+    W = normalize(np.array([r[1] for r in rows], dtype=np.float64))
+    ids = [r[0] for r in rows]
+    for qi in range(4):
+        want = sorted(
+            (emd_exact(W[qi], W[j], cost), ids[j])
+            for j in range(len(ids))
+            if j != qi
+        )[:k]
+        lst = sorted((r for r in got if r.qid == ids[qi]), key=lambda r: r.rank)
+        assert [r.nid for r in lst] == [nid for _, nid in want]
+        np.testing.assert_allclose([r.emd for r in lst], [e for e, _ in want], atol=1e-9)
+
+
 def test_topk_degenerate_seed_falls_back_to_bruteforce(
     spark, hist_df, bins_2d, monkeypatch
 ):
     """If the seed sample cannot realize k finite exact EMDs (degenerate
-    sample), the Seidl-Kriegel loop leaves kth non-finite; the operator
+    sample), the multi-step search leaves kth non-finite; the operator
     must fall back to the all-pairs oracle instead of raising on
     round(inf * 1e6) or launching a radius-inf grid join (round-4 ADVICE,
-    emd_join_nd.py:1669).  Forced here by NaN-ing the seed solver; the
+    emd_join_nd.py:1669).  Forced here by NaN-ing the seed solver (the
+    driver-side cascade's exact stage; workers keep the real one); the
     fallback must still return the TRUE top-k over the real data."""
     import numpy as _np
 
-    import melody_join_spark.kernel.emd_batch as eb
+    from melody_join_spark.kernel import EmdCascade
 
-    def nan_solver(SW, cost, li, ri, sgrp, memo):
+    def nan_solver(self, li, ri):
         return _np.full(len(li), _np.nan)
 
-    monkeypatch.setattr(eb, "emd_exact_pairs_memo", nan_solver)
+    monkeypatch.setattr(EmdCascade, "exact_pairs", nan_solver)
     k = 5
     top = emd_topk_nd(hist_df, bins_2d, k, strategy="grid", grid=3).collect()
     assert len(top) == k

@@ -62,3 +62,35 @@ def test_streaming_emd_join_nd_matches_kernel(spark, tmp_path):
     for k, v in exp.items():
         assert abs(got[k] - v) < 1e-9
     assert len(exp) > 0, "trivial test: no qualifying pairs"
+
+
+def test_streaming_emd_join_nd_drops_zero_mass_rows(spark, tmp_path):
+    """Zero-mass rows on either side join nothing (the exact stage would
+    score them 0.0 against every row their centroid reaches); every other
+    stream x ref pair is within the wide threshold."""
+    bins = np.array([[i, j] for i in (-1, 0, 1) for j in (-1, 0, 1)], dtype=np.float64)
+    rng = np.random.default_rng(3)
+    schema = "id long, w array<double>"
+    ref = spark.createDataFrame(
+        [(i + 1, [float(x) for x in rng.random(9) + 0.1]) for i in range(3)]
+        + [(0, [0.0] * 9)],
+        schema,
+    )
+    src = str(tmp_path / "zero_stream")
+    spark.createDataFrame(
+        [(10 + i, [float(x) for x in rng.random(9) + 0.1]) for i in range(3)]
+        + [(99, [0.0] * 9)],
+        schema,
+    ).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (
+        streaming_emd_join_nd(stream, ref, bins, 5.0)
+        .writeStream.format("memory")
+        .queryName("emd_nd_stream_zero")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout=120)
+    got = {(r.rid, r.sid) for r in spark.sql("SELECT * FROM emd_nd_stream_zero").collect()}
+    assert got == {(s, r) for s in (10, 11, 12) for r in (1, 2, 3)}
