@@ -296,7 +296,7 @@ def _q_emd_index_search(spark, sf_dir):
     import melody_join_spark.operators.emd_join_nd as _emj
 
     # digest BOTH modules the build output depends on: emd_index.py and
-    # emd_join_nd.py (_grid_boundaries/build_config) —
+    # emd_join_nd.py (_grid_geometry/build_config) —
     # a boundary change must not serve a stale index (round-5 ADVICE,
     # __spark_entry__.py:280)
     h = hashlib.md5()

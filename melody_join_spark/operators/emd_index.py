@@ -5,21 +5,23 @@ service instead indexes the corpus ONCE and serves point/batch lookups
 against it (the IVF lifecycle in ``similarity.py``, here for exact-EMD
 range search).  Spark-first shape:
 
-- **build**: the quantile-grid state (`emd_join_nd`'s stage 1-2 — centroid
-  cells, per-record screen stats) materializes to parquet PARTITIONED BY
-  cell, plus a tiny manifest (bin points, quantile boundaries, ground,
-  dual-seed weights).  The join config rebuilds DETERMINISTICALLY from the
-  manifest at load (same seeded `build_config` path as the join), so no
-  python objects are ever pickled to disk.
-- **search**: each query computes its reachable cell set from the stored
-  boundaries (the same Rubner contraction the join's guest screen uses);
-  the scan carries a literal ``cell IN (...)`` filter, so a disk-backed
-  index reads ONLY the reachable partitions (PartitionFilters — the EMD
-  analog of `ivf_search`'s probed lists, plan-asserted in
-  tests/test_plans.py).  Candidates then run the standard screen cascade +
-  batched exact stage via one mapInPandas, queries broadcast (the lookup
-  contract; `emd_knn`/`emd_join_nd` remain the scale paths for huge query
-  sides).
+- **build**: the join's quantile grid (`emd_join_nd._grid_geometry`: one
+  aggregation job for the boundaries, the dual-seed rows and, here, a
+  full-data digest) assigns each record its centroid cell; the records
+  materialize to parquet PARTITIONED BY cell, plus a tiny manifest (bin
+  points, quantile boundaries, ground, dual-seed weights).  The join config
+  rebuilds DETERMINISTICALLY from the manifest at load (same seeded
+  `build_config` path as the join), so no python objects are ever pickled
+  to disk.
+- **search**: the queries' reachable cells are the join's guest-cell
+  windows (`emd_join_nd._reachable_cells` over the stored boundaries, the
+  same Rubner contraction), unioned; the scan carries a literal
+  ``cell IN (...)`` filter, so a disk-backed index reads ONLY the
+  reachable partitions (PartitionFilters — the EMD analog of
+  `ivf_search`'s probed lists, plan-asserted in tests/test_plans.py).
+  Candidates then run the standard screen cascade + batched exact stage via
+  one mapInPandas, queries broadcast (the lookup contract;
+  `emd_knn`/`emd_join_nd` remain the scale paths for huge query sides).
 
 Reference parity note: the reference has no persisted-index surface at all
 (SURVEY.md §2.1 — every job re-reads histogram text); this generalizes its
@@ -46,8 +48,9 @@ from .emd_join_nd import (
     _cascade_for,
     _cell_expr,
     _centroid_cols,
-    _grid_boundaries,
-    _has_mass,
+    _grid_geometry,
+    _reachable_cells,
+    _valid_hist,
     build_config,
 )
 
@@ -92,34 +95,24 @@ def emd_index_build(
     d = bin_points.shape[1]
     spark = hist.sparkSession
 
-    rec = hist.where(_has_mass(w_col)).select(
+    rec = hist.where(_valid_hist(w_col)).select(
         F.col(id_col).cast("long").alias("id"), F.col(w_col).alias("w")
     )
     rec0 = persist(_centroid_cols(rec, bin_points, "w"))
-    bnds = _grid_boundaries(rec0, d, grid)
-    # deterministic dual seeds: hash-ordered sample, stored in the manifest
-    # so load() rebuilds the IDENTICAL config
-    seed_rows = (
-        rec0.select("w")
-        .orderBy(F.xxhash64(F.col("w").cast("string")), "w")
-        .limit(8)
-        .collect()
+    # the join's geometry job, with a full-data digest folded in (round-6
+    # ADVICE, emd_index.py:149): the boundaries and the 8 seed rows are
+    # DERIVED summaries — appending rows to a large or duplicate-heavy table
+    # can leave both unchanged, and a manifest keyed only on them would
+    # short-circuit the rebuild and silently serve stale records.  The
+    # order-independent count + sum of per-row xxhash64(id, w) guarantees
+    # the build id moves whenever the data does, while genuinely-identical
+    # inputs still short-circuit.  The sum runs in decimal(38,0) so it
+    # never wraps/overflows regardless of row count.  The seeds are stored
+    # in the manifest so load() rebuilds the IDENTICAL config.
+    n, grid, bnds, sw, row = _grid_geometry(
+        rec0, d, grid,
+        extra=(F.sum(F.xxhash64("id", "w").cast("decimal(38,0)")).alias("digest"),),
     )
-    sw = np.array([r[0] for r in seed_rows], dtype=np.float64)
-
-    # full-data digest (round-6 ADVICE, emd_index.py:149): the boundaries
-    # and the 8-row seed sample are DERIVED summaries — appending rows to a
-    # large or duplicate-heavy table can leave both unchanged, and a
-    # manifest keyed only on them would short-circuit the rebuild and
-    # silently serve stale records.  One order-independent JVM agg over the
-    # already-persisted rec0 (count + sum of per-row xxhash64(id, w))
-    # guarantees the build id moves whenever the data does, while
-    # genuinely-identical inputs still short-circuit.  The sum runs in
-    # decimal(38,0) so it never wraps/overflows regardless of row count.
-    dig = rec0.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("id", "w").cast("decimal(38,0)")).alias("s"),
-    ).first()
     manifest = {
         "grid": grid,
         "d": d,
@@ -127,8 +120,8 @@ def emd_index_build(
         "ground": ground,
         "bin_points": bin_points.tolist(),
         "bnds": bnds.tolist(),
-        "seed_weights": sw.tolist(),
-        "data_digest": [int(dig["n"]), str(dig["s"])],
+        "seed_weights": [] if sw is None else sw.tolist(),
+        "data_digest": [n, str(row["digest"])],
     }
     # build id = digest of the manifest (params + data-derived boundaries/
     # seeds): records + manifest land together under a versioned subdir and
@@ -240,16 +233,15 @@ def emd_index_search(
     w_col: str = "w",
 ) -> DataFrame:
     """Range search: every (qid, nid, emd) with EMD <= threshold (+slack),
-    id-equal matches and zero-mass queries excluded.  The reachable-cell
-    union of all queries becomes a literal ``cell IN (...)`` scan filter —
+    id-equal matches and invalid queries (``_valid_hist``) excluded.  The
+    reachable-cell union of all queries becomes a literal ``cell IN (...)`` scan filter —
     partition pruning on the disk-backed index — then ONE mapInPandas runs
     the screen cascade + batched exact stage against the broadcast query
     block.  Query sets over
     ``_probe.COLLECT_ROWS`` rows are rejected (use ``emd_join_nd(other=...)`` /
     ``emd_knn(distributed=True)`` for table-scale query sides)."""
-    cfg, bnds, grid = index.cfg, index.bnds, index.grid
-    d = bnds.shape[0]
-    q = queries.where(_has_mass(w_col)).select(
+    cfg, bnds = index.cfg, index.bnds
+    q = queries.where(_valid_hist(w_col)).select(
         F.col(id_col).alias("id"), F.col(w_col).alias("w")
     )
     qpdf = lookup_rows(
@@ -263,29 +255,8 @@ def emd_index_search(
     QW = normalize(W0.reshape(-1, cfg.bin_points.shape[0]))
     qc = QW @ cfg.bin_points
 
-    # reachable cells per dim via the boundary arrays (the join's guest
-    # window math), unioned across queries
     reach = float(threshold) + cfg.slack
-    lo_edges = [np.concatenate(([-np.inf], bnds[k])) for k in range(d)]
-    hi_edges = [np.concatenate((bnds[k], [np.inf])) for k in range(d)]
-    cells: set[int] = set()
-    for qi in range(qc.shape[0]):
-        ranges = []
-        for k in range(d):
-            jlo = int(np.searchsorted(hi_edges[k], qc[qi, k] - reach, "left"))
-            jhi = int(np.searchsorted(lo_edges[k], qc[qi, k] + reach, "right"))
-            ranges.append(range(jlo, jhi))
-        # cartesian expansion of the per-dim windows (small: windows are a
-        # few cells wide per dim)
-        def rec_expand(k: int, acc: int) -> None:
-            if k == d:
-                cells.add(acc)
-                return
-            for j in ranges[k]:
-                rec_expand(k + 1, acc * grid + j)
-
-        rec_expand(0, 0)
-    probe_cells = sorted(cells)
+    probe_cells = np.unique(_reachable_cells(qc, bnds, reach)[1]).tolist()
 
     def block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         qids_, QW_, qc_ = payload

@@ -53,7 +53,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -73,6 +73,7 @@ from ..kernel import (
     multistep,
     normalize,
     projection_positions,
+    rubner_bound_to_bbox,
 )
 from ._probe import run_query_blocks
 from ._sqltext import sql_double, sql_doubles
@@ -344,12 +345,19 @@ _NO_PAIRS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
 _BLOCKS = 8
 
 
-def _has_mass(w_col: str):
-    """Row filter for histograms with positive total weight.  A zero-mass
-    row has no EMD (the kernel would score it 0.0 against everything), so
-    every operator drops it on entry, as build_histograms' total > 0
-    ingestion filter does."""
-    return F.aggregate(F.col(w_col), F.lit(0.0), lambda a, x: a + x) > 0
+def _valid_hist(w_col: str):
+    """Row filter for valid histograms: every weight finite and >= 0, and a
+    positive total.  A zero-mass row has no EMD (the kernel would score it
+    0.0 against everything), a negative weight is not mass, and a NaN or
+    infinite weight makes every bound and EMD of its row NaN, so every EMD
+    operator drops such rows on entry, as build_histograms' total > 0
+    ingestion filter does.  Spark orders NaN above +inf, so ``x < inf``
+    rejects NaN as well."""
+    w = f"`{w_col}`"
+    return F.expr(
+        f"forall({w}, x -> x >= 0.0D AND x < CAST('Infinity' AS DOUBLE))"
+        f" AND aggregate({w}, 0.0D, (a, x) -> a + x) > 0.0D"
+    )
 
 
 def _window_pairs(
@@ -466,21 +474,18 @@ _PIVOT_ROWS = int(TASK_S / 1.16e-3)
 
 # candidates per owner per round of each multi-step search
 # (kernel.cascade.multistep): one pivot at a time for the nearest-pivot
-# assignment; at least these many (or 2k / 4k) for a kNN query and for the
-# top-k seed ceiling, whose owners need k solves before their bound tightens
+# assignment; at least these many (or 2k) for a kNN query, whose owners
+# need k solves before their bound tightens.  The top-k seed ceiling's one
+# owner takes k a round: exactly the solves its first kth needs.
 _PIVOT_CHUNK = 1
 _KNN_CHUNK = 64
-_SEED_CHUNK = 256
 
 
 def _centroid_cols(hist: DataFrame, bin_points: np.ndarray, w_col: str) -> DataFrame:
     """Append cent_0..cent_{d-1} = normalized-weight centroid coordinates.
     Pure JVM expressions (no UDF): cent_k = sum_i w_i * bins[i, k] / total.
-
-    Zero-mass rows are REJECTED here (their centroid is undefined; the
-    kernel's normalize() would leave them as zero vectors whose EMD to
-    everything is 0 — mirroring build_histograms' total > 0 ingestion filter
-    keeps every strategy consistent).  Both sums are left folds from 0.0."""
+    ``hist`` holds valid rows only (``_valid_hist``), so the total is
+    positive.  Both sums are left folds from 0.0."""
     w = f"`{w_col}`"
     cents = [
         F.expr(
@@ -489,11 +494,9 @@ def _centroid_cols(hist: DataFrame, bin_points: np.ndarray, w_col: str) -> DataF
         )
         for k in range(bin_points.shape[1])
     ]
-    return (
-        hist.select("*", F.expr(f"aggregate({w}, 0.0D, (a, x) -> a + x) AS _tot"))
-        .where("_tot > 0")
-        .select(*map(F.col, hist.columns), *cents)
-    )
+    return hist.select(
+        "*", F.expr(f"aggregate({w}, 0.0D, (a, x) -> a + x) AS _tot")
+    ).select(*map(F.col, hist.columns), *cents)
 
 
 def _stat_udf(cfg: NdJoinConfig):
@@ -597,24 +600,85 @@ def _collect_cell_stats(
 # grid (MELODY) strategy
 # ---------------------------------------------------------------------------
 
-def _grid_boundaries(
-    hist: DataFrame, d: int, grid: int
-) -> np.ndarray:
-    """(d, grid-1) per-dimension quantile cell boundaries — the reference's
-    Percentile.evaluate grid (QNEPreReducer.java:161-189) as one agg."""
-    probs = [i / grid for i in range(1, grid)]
-    row = hist.agg(*_quantile_aggs(d, probs)).collect()[0]
+# the fine quantile sketch every grid's cell boundaries interpolate from
+_SKETCH = [i / 128.0 for i in range(1, 128)]
+
+
+def _grid_geometry(
+    rec0: DataFrame, d: int, grid: int | None, extra: tuple[F.Column, ...] = ()
+) -> tuple[int, int, np.ndarray, np.ndarray | None, Row]:
+    """The quantile grid of the centroid table ``rec0`` from ONE aggregation
+    job — the reference's Percentile.evaluate preprocess
+    (QNEPreReducer.java:161-189): the row count, a 127-point percentile
+    sketch of each centroid column and 8 dual-seed rows (``min_by`` over
+    ``xxhash64(id, salt)`` is one deterministic row per salt), plus the
+    caller's ``extra`` aggregates.
+
+    ``grid`` (G) defaults to ``_derive_grid(n, d)``; the (d, G-1) cell
+    boundaries are the sketch linearly interpolated at i/G.  Boundaries and
+    seeds are load-balancing and screen geometry, not semantics: any
+    monotone boundary set and any seed rows give the same join output (the
+    cell and dual screens are sound, the exact filter decides).
+
+    Returns (n, G, boundaries, seed weights or None, the aggregate row)."""
+    probs = sql_doubles(_SKETCH)
+    row = rec0.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[
+            F.expr(f"percentile_approx(cent_{k}, {probs}, 10000)").alias(f"b{k}")
+            for k in range(d)
+        ],
+        *[F.expr(f"min_by(w, xxhash64(id, {9000 + t}))").alias(f"sw{t}") for t in range(8)],
+        *extra,
+    ).collect()[0]
+    n = int(row["n"])
+    if grid is None:
+        grid = _derive_grid(n, d)
+    want = np.arange(1, grid) / grid
     # the sketches are null when there are no records; then any bounds do
-    zeros = [0.0] * (grid - 1)
-    return np.array([row[f"b{k}"] or zeros for k in range(d)], dtype=np.float64)
+    zeros = [0.0] * len(_SKETCH)
+    bnds = np.stack(
+        [
+            np.interp(want, _SKETCH, np.asarray(row[f"b{k}"] or zeros, dtype=np.float64))
+            for k in range(d)
+        ]
+    )
+    seeds = [list(row[f"sw{t}"]) for t in range(8) if row[f"sw{t}"] is not None]
+    return n, grid, bnds, np.array(seeds, dtype=np.float64) if seeds else None, row
 
 
-def _quantile_aggs(d: int, probs: list[float]) -> list[F.Column]:
-    """b0..b{d-1}: the ``probs`` quantile sketch of each centroid column."""
-    arr = sql_doubles(probs)
-    return [
-        F.expr(f"percentile_approx(cent_{k}, {arr}, 10000)").alias(f"b{k}") for k in range(d)
-    ]
+def _reachable_cells(
+    C: np.ndarray, bnds: np.ndarray, reach: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """Every (row, cell) pair whose quantile cell lies within ``reach`` of
+    the row's centroid on each dimension, rows ascending — the per-dim
+    windows of the Rubner contraction, before any cell screen.
+
+    ``C`` holds (n, d) centroids, ``bnds`` the (d, G-1) boundaries.  Cell j
+    of a dimension spans [bnds[j-1], bnds[j]], unbounded at both ends, and
+    cell ids are base-G with dimension 0 most significant, as in
+    ``_cell_expr``.  Vectorized: two searchsorted calls per dimension give
+    each row's index window (boundaries are sorted), then one mixed-radix
+    decode expands the window combos — no per-row Python loop."""
+    n, d = C.shape
+    grid = bnds.shape[1] + 1
+    jlo = np.empty((n, d), dtype=np.int64)
+    counts = np.empty((n, d), dtype=np.int64)
+    for k in range(d):
+        jlo[:, k] = np.searchsorted(bnds[k], C[:, k] - reach, side="left")
+        jhi = 1 + np.searchsorted(bnds[k], C[:, k] + reach, side="right")
+        counts[:, k] = np.maximum(jhi - jlo[:, k], 0)
+    total = counts.prod(axis=1)
+    rows = np.repeat(np.arange(n), total)
+    rem = np.arange(rows.size) - np.repeat(np.cumsum(total) - total, total)
+    cells = np.zeros(rows.size, dtype=np.int64)
+    mult = 1
+    for k in range(d - 1, -1, -1):  # decode mixed radix, dim 0 most significant
+        ck = counts[rows, k]
+        cells += (jlo[rows, k] + rem % ck) * mult
+        rem //= ck
+        mult *= grid
+    return rows, cells
 
 
 def _cell_expr(bnds: np.ndarray, grid: int) -> F.Column:
@@ -711,15 +775,15 @@ def emd_join_nd(
     theta = float(threshold)
     two_table = other is not None
 
-    mass = _has_mass(w_col)
-    rec = hist.where(mass).select(
+    valid = _valid_hist(w_col)
+    rec = hist.where(valid).select(
         F.col(id_col).cast("long").alias("id"),
         F.col(w_col).alias("w"),
         F.lit(0).alias("side"),
     )
     if two_table:
         rec = rec.unionByName(
-            other.where(mass).select(
+            other.where(valid).select(
                 F.col(id_col).cast("long").alias("id"),
                 F.col(w_col).alias("w"),
                 F.lit(1).alias("side"),
@@ -867,8 +931,6 @@ class _GridCtx:
     bnds: np.ndarray
     cs: "_CellStats"
     cfg: NdJoinConfig
-    d: int
-    grid: int
 
 
 def _build_grid_ctx(
@@ -880,71 +942,19 @@ def _build_grid_ctx(
     ground: str | np.ndarray = "l2",
 ) -> _GridCtx:
     d = bin_points.shape[1]
-    # persist the centroid-annotated records BEFORE the driver-side stat
-    # jobs: the quantile-boundary agg, the cfg seed sample, the stat-column
-    # materialization and the cell-stat collect would otherwise each
-    # re-execute the upstream plan (for the bench bridge tables that is a
-    # 3-join + groupBy chain — measured ~40% of the whole d=2 query before
-    # this cache)
+    # persist the centroid-annotated records BEFORE the driver-side jobs:
+    # the geometry agg, the stat-column materialization and the cell-stat
+    # collect would otherwise each re-execute the upstream plan (for the
+    # bench bridge tables that is a 3-join + groupBy chain — measured ~40%
+    # of the whole d=2 query before this cache)
     rec0 = persist(_centroid_cols(rec, bin_points, "w"))
-    if grid is None:
-        # ONE fused job for count + boundaries (round 12, guide §2.1/§2.6:
-        # the auto-grid path used to pay two sequential driver actions —
-        # count() to derive G, then the percentile agg at probs i/G — each
-        # a full pass/job with its own scheduling gap).  Both come from a
-        # single agg now: the count plus one fixed fine quantile sketch
-        # (127 points) per dimension; G is derived from the count and the
-        # G-1 cell boundaries linearly interpolated from the sketch.
-        # Boundaries are load-balancing geometry, not semantics — ANY
-        # monotone boundary set yields the same join output (cell screens
-        # are sound, the exact filter decides) — and the interpolated
-        # values are deterministic for a given dataset.  Explicit-grid
-        # callers (tests, emd_index) keep the exact percentile_approx
-        # boundaries below.
-        fine_probs = [i / 128.0 for i in range(1, 128)]
-        aggs = [F.count(F.lit(1)).alias("n")] + _quantile_aggs(d, fine_probs)
-        if cfg is None:
-            # fold the dual-seed sample into the same agg (round 12): 8
-            # hash-min rows — min_by over xxhash64(id, salt) is one
-            # deterministic row per salt — replace the separate limit(8)
-            # collect job.  Seeds only shape the dual-potential SCREENS
-            # (sound lower bounds), so any seed choice yields identical
-            # join output; this one is also more deterministic than the
-            # old partition-order limit(8).
-            aggs += [
-                F.expr(f"min_by(w, xxhash64(id, {9000 + t}))").alias(f"sw{t}")
-                for t in range(8)
-            ]
-        row = rec0.agg(*aggs).collect()[0]  # materializes rec0
-        n_rec = int(row["n"])
-        grid = _derive_grid(n_rec, d)
-        want = np.arange(1, grid) / grid
-        # the sketches are null when there are no records; then any bounds do
-        zeros = [0.0] * len(fine_probs)
-        bnds = np.stack(
-            [
-                np.interp(want, fine_probs, np.asarray(row[f"b{k}"] or zeros, dtype=np.float64))
-                for k in range(d)
-            ]
-        )
-        if cfg is None:
-            seed_ws = [row[f"sw{t}"] for t in range(8)]
-            sw = np.array(
-                [list(w) for w in seed_ws if w is not None], dtype=np.float64
-            )
-            cfg = build_config(
-                bin_points, seed_weights=sw if sw.size else None,
-                seed=seed, ground=ground,
-            )
-    else:
-        bnds = _grid_boundaries(rec0, d, grid)  # materializes rec0
-        n_rec = rec0.count()  # cached by now: metadata-cheap
+    n_rec, grid, bnds, sw, _ = _grid_geometry(rec0, d, grid)  # materializes rec0
     if cfg is None:
-        cfg = _seeded_config(rec0, "w", bin_points, seed, ground)
+        cfg = build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
 
     stat_udf, stat_len = _stat_udf(cfg)
     # the spread guard sits BETWEEN the caches, after rec0 is materialized
-    # (the boundary agg above always scans it): the partition probe then
+    # (the geometry agg above always scans it): the partition probe then
     # reads the in-memory relation without re-running the upstream plan.
     # rec1, the per-record stat pass, and the guest enumeration that reads
     # it are what need the width; rec0's cheap JVM aggregates do not.
@@ -960,7 +970,7 @@ def _build_grid_ctx(
     # 74-219) as a broadcastable numpy table
     cs = _collect_cell_stats(rec1, d, len(cfg.proj_positions), len(cfg.duals), grid**d)
     rec0.unpersist()  # rec1 (a superset) is materialized now
-    return _GridCtx(rec1, bnds, cs, cfg, d, grid)
+    return _GridCtx(rec1, bnds, cs, cfg)
 
 
 def _salt_factors(cnt: np.ndarray, cell_cap: int) -> np.ndarray:
@@ -979,7 +989,8 @@ def _grid_join(
     stats: "JoinStats | None" = None,
     two_table: bool = False,
 ) -> DataFrame:
-    cfg, d, grid, bnds, cs = ctx.cfg, ctx.d, ctx.grid, ctx.bnds, ctx.cs
+    cfg, bnds, cs = ctx.cfg, ctx.bnds, ctx.cs
+    d = bnds.shape[0]
     rec1 = ctx.rec1
     n_proj = len(cfg.proj_positions)
     n_dual = len(cfg.duals)
@@ -988,13 +999,10 @@ def _grid_join(
     # survives three sound record-to-cell screens (Grid.getGuestWithDual:
     # 352-457): (1) Rubner distance to the cell's ACTUAL centroid bbox,
     # (2) the normal/EMD_BR bound over the cell's (mu, sigma) bbox per
-    # projection, (3) the dual-key range bound.  Fully vectorized: per-dim
-    # candidate index windows come from two searchsorted calls (cell edges
-    # are sorted), the mixed-radix combo expansion and every screen are
-    # numpy array ops — no per-row Python loop.
+    # projection, (3) the dual-key range bound.  Fully vectorized: the
+    # candidate cells are ``_reachable_cells``' per-dim windows and every
+    # screen is a numpy array op — no per-row Python loop.
     reach = theta + cfg.slack
-    lo_edges = [np.concatenate(([-np.inf], bnds[k])) for k in range(d)]
-    hi_edges = [np.concatenate((bnds[k], [np.inf])) for k in range(d)]
     from ..kernel.normal import cell_normal_bound
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -1005,23 +1013,7 @@ def _grid_join(
         if n == 0:
             return pd.Series([], dtype=object)
         S = np.stack(st.to_numpy())  # (n, stat_len)
-        jlo = np.empty((n, d), dtype=np.int64)
-        counts = np.empty((n, d), dtype=np.int64)
-        for k in range(d):
-            jlo[:, k] = np.searchsorted(hi_edges[k], C[:, k] - reach, side="left")
-            jhi = np.searchsorted(lo_edges[k], C[:, k] + reach, side="right")
-            counts[:, k] = jhi - jlo[:, k]
-        total = counts.prod(axis=1)
-        rep = np.repeat(np.arange(n), total)
-        starts = np.concatenate(([0], np.cumsum(total)[:-1]))
-        rem = np.arange(int(total.sum())) - np.repeat(starts, total)
-        cid = np.zeros(rem.size, dtype=np.int64)
-        mult = 1
-        for k in range(d - 1, -1, -1):  # decode mixed radix, dim 0 most significant
-            ck = counts[rep, k]
-            cid += (jlo[rep, k] + rem % ck) * mult
-            rem //= ck
-            mult *= grid
+        rep, cid = _reachable_cells(C, bnds, reach)
         if stats is not None:
             stats.add("guest_considered", rep.size)
         # dedup rule: guests go only to cells strictly below their native cell
@@ -1034,8 +1026,10 @@ def _grid_join(
         # screen 1: Rubner to the cell's actual centroid bbox (tighter than
         # the quantile-boundary bbox, esp. for unbounded edge cells), in the
         # ground distance's own p-norm
-        clp = np.clip(C[rep], cs.cmin[cid], cs.cmax[cid])
-        keep = np.linalg.norm(C[rep] - clp, ord=cfg.rubner_ord, axis=1) <= reach
+        keep = (
+            rubner_bound_to_bbox(C[rep], cs.cmin[cid], cs.cmax[cid], ord=cfg.rubner_ord)
+            <= reach
+        )
         n_rub = int((~keep).sum())
         rep, cid = rep[keep], cid[keep]
         # screen 2: normal/EMD_BR bound per projection over the (mu, sigma) bbox
@@ -1531,8 +1525,8 @@ def emd_knn(
     distributed: bool | None = None,
 ) -> DataFrame:
     """k nearest database histograms per query under exact EMD ->
-    (qid, nid, emd, rank); excludes identical-id matches and zero-mass rows
-    on either side.
+    (qid, nid, emd, rank); excludes identical-id matches and invalid rows
+    (``_valid_hist``) on either side.
 
     The reference carries an unreachable kNN guest path (Grid.getGuestForKNN,
     utils/Grid.java:60-207, SURVEY.md §2.3 J5); this is the capability done
@@ -1556,8 +1550,8 @@ def emd_knn(
     if cfg is None:
         cfg = _seeded_config(db, w_col, bin_points, seed, ground)
 
-    mass = _has_mass(w_col)
-    q = queries.where(mass).select(
+    valid = _valid_hist(w_col)
+    q = queries.where(valid).select(
         F.col(id_col).alias("id"), F.col(w_col).alias("w")
     )
 
@@ -1598,7 +1592,7 @@ def emd_knn(
 
     return run_query_blocks(
         q,
-        db.where(mass).select(
+        db.where(valid).select(
             F.col(id_col).alias("id"), F.col(w_col).alias("w")
         ),
         ("id", "id"),
@@ -1630,8 +1624,8 @@ def emd_topk_nd(
     stats: "JoinStats | None" = None,
 ) -> DataFrame:
     """k smallest-EMD pairs -> (rank, rid, sid, emd); ties by (emd, rid, sid)
-    (JoinedPair.compareTo order, utils/JoinedPair.java:45-58).  Zero-mass
-    rows are dropped on entry, as in :func:`emd_join_nd`.
+    (JoinedPair.compareTo order, utils/JoinedPair.java:45-58).  Invalid
+    rows (``_valid_hist``) are dropped on entry, as in :func:`emd_join_nd`.
 
     Sample-seeded bound (QNEPreReducer.java:96-109 / HistUtil.getKEmd:
     641-652): the kth smallest exact EMD among the pairs of a seeded
@@ -1647,7 +1641,7 @@ def emd_topk_nd(
 
     rec = hist.select(
         F.col(id_col).cast("long").alias("id"), F.col(w_col).alias("w")
-    ).where(_has_mass("w"))
+    ).where(_valid_hist("w"))
     ctx = None
     rec_n = None
     if strategy == "grid":
@@ -1725,7 +1719,7 @@ def emd_topk_nd(
         iu0, iu1 = np.triu_indices(n, 1)
         _, _, vals = multistep(
             casc.lower_bounds(iu0, iu1)[None, :], k,
-            lambda o, c: casc.exact_pairs(iu0[c], iu1[c]), max(_SEED_CHUNK, 4 * k),
+            lambda o, c: casc.exact_pairs(iu0[c], iu1[c]), k,
         )
         kth = np.sort(vals)[k - 1] if vals.size >= k else np.inf
         probe = max(float(kth), 1e-9)

@@ -431,15 +431,15 @@ def streaming_emd_join_nd(
     |batch| x |ref| vectorized bound evaluations plus an LP per surviving
     pair, and scales horizontally with stream partitions (the reference set
     ships once per executor via broadcast, as the batch operators do for
-    their side inputs).  Zero-mass rows on either side are dropped, as in
-    the batch joins."""
+    their side inputs).  Invalid rows (zero mass, or a negative or
+    non-finite weight) on either side are dropped, as in the batch joins."""
     from ..kernel import normalize
     from ..operators._probe import broadcast_blocks
-    from ..operators.emd_join_nd import _bins, _cascade_for, _has_mass, build_config
+    from ..operators.emd_join_nd import _bins, _cascade_for, _valid_hist, build_config
 
     bin_points = _bins(bin_points)
-    mass = _has_mass(w_col)
-    ref_rows = ref_hist.where(mass).select(id_col, w_col).collect()
+    valid = _valid_hist(w_col)
+    ref_rows = ref_hist.where(valid).select(id_col, w_col).collect()
     rids = np.array([r[0] for r in ref_rows], dtype=np.int64)
     RW = normalize(np.array([r[1] for r in ref_rows], dtype=np.float64))
     if cfg is None:
@@ -461,7 +461,7 @@ def streaming_emd_join_nd(
         return pd.DataFrame({"rid": ids[li], "sid": rids_[ri - n], "emd": emds})
 
     return broadcast_blocks(
-        stream_hist.where(mass).select(
+        stream_hist.where(valid).select(
             F.col(id_col).alias(id_col), F.col(w_col).alias(w_col)
         ),
         (rids, RW),

@@ -778,3 +778,52 @@ def test_spread_guard_never_probes_an_uncached_wide_chain(spark, hist_df):
         assert widened.rdd.getNumPartitions() > 1
     finally:
         cached.unpersist()
+
+
+def test_every_emd_entry_point_drops_invalid_rows(spark, tmp_path):
+    """A row joins nothing unless every weight is finite and >= 0 and the
+    total is positive.  Rows 1-4 are valid and within the wide threshold
+    of each other; row 5 has a negative weight, 6 a NaN, 7 an inf, 8 no
+    mass.  Each must be dropped on entry, on either side of every EMD
+    operator, never scored."""
+    from melody_join_spark.operators.emd_index import emd_index_build, emd_index_search
+    from melody_join_spark.operators.emd_join_nd import emd_knn
+    from melody_join_spark.streaming import streaming_emd_join_nd
+
+    bins = np.array([[0, 0], [1, 0], [0, 1], [1, 1]], dtype=np.float64)
+    rng = np.random.default_rng(4)
+    rows = [(i + 1, [float(x) for x in rng.random(4) + 0.1]) for i in range(4)] + [
+        (5, [2.0, -1.0, 1.0, 1.0]),
+        (6, [float("nan"), 1.0, 1.0, 1.0]),
+        (7, [float("inf"), 1.0, 1.0, 1.0]),
+        (8, [0.0] * 4),
+    ]
+    schema = "id long, w array<double>"
+    hist = spark.createDataFrame(rows, schema)
+    valid = [1, 2, 3, 4]
+    theta = 10.0
+    pairs = {(a, b) for a in valid for b in valid if a < b}
+    for strategy in ("grid", "pivot", "bruteforce"):
+        got = set(_collect_pairs(emd_join_nd(hist, bins, theta, strategy=strategy)))
+        assert got == pairs, strategy
+
+    knn = emd_knn(hist, hist, bins, k=5).collect()
+    assert {(r.qid, r.nid) for r in knn} == {(a, b) for a in valid for b in valid if a != b}
+
+    idx = emd_index_build(hist, bins, str(tmp_path / "invalid_idx"), grid=2)
+    got = emd_index_search(idx, hist, theta).collect()
+    assert {(r.qid, r.nid) for r in got} == {(a, b) for a in valid for b in valid if a != b}
+
+    src = str(tmp_path / "invalid_stream")
+    spark.createDataFrame([(i + 100, w) for i, w in rows], schema).write.parquet(src)
+    q = (
+        streaming_emd_join_nd(spark.readStream.schema(schema).parquet(src), hist, bins, theta)
+        .writeStream.format("memory")
+        .queryName("emd_nd_stream_invalid")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(timeout=120)
+    got = {(r.rid, r.sid) for r in spark.sql("SELECT * FROM emd_nd_stream_invalid").collect()}
+    assert got == {(a + 100, b) for a in valid for b in valid}

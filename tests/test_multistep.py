@@ -53,10 +53,11 @@ def test_lower_bounds_never_exceed_exact(case, ground):
 @st.composite
 def _search(draw):
     """Integer exact values (ties everywhere), integer lower bounds at most
-    the values, and some entries excluded with +inf."""
+    the values or one ulp above them (a bound that rounds above its exact
+    value), and some entries excluded with +inf."""
     n_own = draw(st.integers(1, 4))
     n_cand = draw(st.integers(0, 12))
-    cell = st.tuples(st.integers(0, 4), st.integers(0, 4), st.booleans())
+    cell = st.tuples(st.integers(0, 4), st.integers(0, 4), st.sampled_from(["lb", "ulp", "out"]))
     cells = draw(
         st.lists(
             st.lists(cell, min_size=n_cand, max_size=n_cand),
@@ -64,8 +65,13 @@ def _search(draw):
         )
     )
     V = np.array([[v for v, _, _ in row] for row in cells], dtype=np.float64)
+    bound = {
+        "lb": lambda v, g: min(v, g),
+        "ulp": lambda v, g: np.nextafter(float(v), np.inf),
+        "out": lambda v, g: np.inf,
+    }
     LB = np.array(
-        [[min(v, g) if keep else np.inf for v, g, keep in row] for row in cells],
+        [[bound[kind](v, g) for v, g, kind in row] for row in cells],
         dtype=np.float64,
     )
     return V.reshape(n_own, n_cand), LB.reshape(n_own, n_cand)
@@ -98,3 +104,14 @@ def test_multistep_returns_exact_top_k(case, k, chunk):
             kth = want[-1][0]
             tied = {j for j in range(V.shape[1]) if np.isfinite(LB[o, j]) and V[o, j] == kth}
             assert tied <= set(cand[m].tolist())
+
+
+def test_multistep_solves_a_kth_tie_whose_bound_rounds_above_it():
+    """Three candidates tie at 1.0; the third one's lower bound came out
+    one ulp above its exact value, as the Rubner and projection bounds can.
+    It ties the kth (k = 2) value, so it must be solved."""
+    V = np.array([[1.0, 1.0, 1.0]])
+    LB = np.array([[1.0, 1.0, np.nextafter(1.0, 2.0)]])
+    own, cand, val = multistep(LB, 2, lambda o, c: V[o, c], 1)
+    assert sorted(cand.tolist()) == [0, 1, 2]
+    np.testing.assert_array_equal(val, 1.0)

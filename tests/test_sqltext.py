@@ -13,7 +13,8 @@ from melody_join_spark.operators._sqltext import sql_double, sql_doubles
 from melody_join_spark.operators.emd_join_nd import (
     _cell_expr,
     _centroid_cols,
-    _grid_boundaries,
+    _grid_geometry,
+    _valid_hist,
 )
 
 VALUES = [
@@ -44,8 +45,8 @@ def test_centroids_and_cells_match_numpy(spark):
         pd.DataFrame({"id": np.arange(40), "w": [list(r) for r in w]})
     )
     grid = 4
-    rec = _centroid_cols(hist, bins, "w")
-    bnds = _grid_boundaries(rec, 3, grid)
+    rec = _centroid_cols(hist.where(_valid_hist("w")), bins, "w")
+    _, _, bnds, _, _ = _grid_geometry(rec, 3, grid)
     out = rec.withColumn("cell", _cell_expr(bnds, grid)).orderBy("id").toPandas()
     assert out["id"].tolist() == list(range(1, 40))
 
