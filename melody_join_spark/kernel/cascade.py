@@ -35,7 +35,7 @@ one trades a few extra solves for fewer calls.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -137,7 +137,7 @@ class EmdCascade:
         # of the 92 s sf0.1 3-d join-stage CPU, paid in EVERY per-group
         # cascade construction, while the stage pruned ZERO pairs there
         # (the Rubner screen sees the same centroid geometry first).  The
-        # fits now happen inside run(), only when a candidate block is big
+        # fits now happen inside _block(), only when a candidate block is big
         # enough to repay them (see the stage-2 gate); None = not fitted.
         self.normal_stats = None if self.use_normal else []
         self._normal_on = bool(self.use_normal and self.proj_positions)
@@ -245,7 +245,7 @@ class EmdCascade:
         """Per pair, the max of the Rubner and the projection bounds — the
         static geometric bounds :func:`multistep` orders candidates by.
         Zero for an arbitrary cost matrix, which has neither.  Runs in
-        ``CHUNK``-pair blocks, as :meth:`run` does."""
+        ``CHUNK``-pair blocks, as :meth:`verify` does."""
         li = np.asarray(li, dtype=np.int64)
         ri = np.asarray(ri, dtype=np.int64)
         lb = np.zeros(li.size)
@@ -258,6 +258,38 @@ class EmdCascade:
                 np.maximum(out, projection_bound_pairs(self.weights, pos, a, b), out=out)
         return lb
 
+    def verify(
+        self,
+        groups: Iterable[tuple[np.ndarray, np.ndarray]],
+        threshold: float,
+        stats: CascadeStats | None = None,
+        slack: float = 1e-4,
+    ) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+        """The one verifier: yields (left_idx, right_idx, emd) of the pairs
+        of the candidate groups ``(li, ri)`` with exact EMD <= threshold +
+        slack (slack parity: NEProcessReducer.java:261), block by block.
+
+        The stages run on blocks of exactly ``CHUNK`` pairs (the last one
+        shorter) cut from the groups' concatenation, which is never held
+        whole: the blocks do not depend on the grouping, and the stages'
+        O(chunk * B) temporaries keep one shape the allocator reuses (one
+        huge allocation measured ~40x the same bytes through a warm pool
+        where first touch is slow, without transparent huge pages)."""
+        st = stats if stats is not None else CascadeStats()
+        thr = threshold + slack
+        held, n = [], 0
+        for li, ri in groups:
+            held.append((np.asarray(li, dtype=np.int64), np.asarray(ri, dtype=np.int64)))
+            n += held[-1][0].size
+            if n >= self.CHUNK:
+                li, ri = (np.concatenate(c) for c in zip(*held))
+                cut = n - n % self.CHUNK
+                for s in range(0, cut, self.CHUNK):
+                    yield self._block(li[s : s + self.CHUNK], ri[s : s + self.CHUNK], thr, st)
+                held, n = [(li[cut:], ri[cut:])], n - cut
+        if n:
+            yield self._block(*(np.concatenate(c) for c in zip(*held)), thr, st)
+
     def run(
         self,
         left_idx: np.ndarray,
@@ -266,39 +298,17 @@ class EmdCascade:
         stats: CascadeStats | None = None,
         slack: float = 1e-4,
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Filter candidate pairs: returns (left_idx, right_idx, emd) of pairs
-        with exact EMD <= threshold + slack (slack parity:
-        NEProcessReducer.java:261, DistanceUtil.EPSILON=1e-4).
+        """:meth:`verify` of one candidate list, survivors concatenated."""
+        outs = [(np.empty(0, dtype=np.int64),) * 2 + (np.empty(0),)]
+        outs += self.verify([(left_idx, right_idx)], threshold, stats=stats, slack=slack)
+        return tuple(np.concatenate(col) for col in zip(*outs))
 
-        Large inputs run in fixed-size chunks: the vectorized stages allocate
-        O(chunk * B) temporaries of identical shape each round, which the
-        allocator reuses — on first-touch-slow kernels (containers without
-        THP) one huge allocation costs ~40x more than the same bytes through
-        a warm pool, measured on this host."""
-        li_all = np.asarray(left_idx)
-        ri_all = np.asarray(right_idx)
-        if li_all.size > self.CHUNK:
-            outs = []
-            for s in range(0, li_all.size, self.CHUNK):
-                outs.append(
-                    self.run(
-                        li_all[s : s + self.CHUNK],
-                        ri_all[s : s + self.CHUNK],
-                        threshold,
-                        stats=stats,
-                        slack=slack,
-                    )
-                )
-            return (
-                np.concatenate([o[0] for o in outs]),
-                np.concatenate([o[1] for o in outs]),
-                np.concatenate([o[2] for o in outs]),
-            )
-        st = stats if stats is not None else CascadeStats()
-        li = li_all
-        ri = ri_all
+    def _block(
+        self, li: np.ndarray, ri: np.ndarray, thr: float, st: CascadeStats
+    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The stages, cheap to expensive, on one block of at most ``CHUNK``
+        pairs; survivors have exact EMD <= ``thr``."""
         st.candidates += li.size
-        thr = threshold + slack
 
         # 1. Rubner centroid bound first: with precomputed centroids it is
         # O(d) per pair vs the projection bound's O(B) — cheapest screen.

@@ -7,9 +7,14 @@ operators here (``emd_knn``, ``cosine_topk``, ``emd_index_search``,
 functions and nothing else:
 
 - ``prep(q_pdf) -> payload``: the query block in the form the kernel wants
-  (ids, normalized weights, centroids, ...);
+  (ids, normalized weights, ...);
 - ``block(payload, db_pdf) -> pdf``: one query block against one database
   block.
+
+The EMD blocks stack [payload; block rows] into one cascade
+(``emd_join_nd._stacked_cascade``): ``emd_knn`` runs its multi-step search
+there, and ``emd_index_search`` and ``streaming_emd_join_nd`` share one
+threshold block, ``_range_block``, verified by ``EmdCascade.verify``.
 
 **Lookup** (:func:`lookup_rows` + :func:`broadcast_blocks`): the size probe
 collects at most ``COLLECT_ROWS + 1`` query rows and is itself the

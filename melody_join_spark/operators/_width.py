@@ -36,10 +36,10 @@ per-unit cost of the stage:
 The result is clamped to ``[1, WAVES x defaultParallelism]``: small work gets
 only the tasks it can repay, and large work spans every core in several
 waves.  Eight waves is the old shuffle-partition count on a 4-core host, so
-big work never packs more into one task than before: the partition-batched
-cascade runner holds a task's whole candidate list in memory, and an sf1
-d=3 grid join at 4 waves (16 runner tasks on 4 cores) ran the host out of
-memory where 32 tasks finished.
+big work never packs more into one task than before: an sf1 d=3 grid join
+at 4 waves (16 runner tasks on 4 cores) ran the host out of memory where
+32 tasks finished, and which part of a task's memory filled it has not
+been measured.
 Nothing here reads ``spark.sql.shuffle.partitions``: that setting sizes
 the SQL shuffles, which are not Python runners.
 

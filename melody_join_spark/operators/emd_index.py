@@ -19,9 +19,10 @@ range search).  Spark-first shape:
   ``cell IN (...)`` filter, so a disk-backed index reads ONLY the
   reachable partitions (PartitionFilters — the EMD analog of
   `ivf_search`'s probed lists, plan-asserted in tests/test_plans.py).
-  Candidates then run the standard screen cascade + batched exact stage via
-  one mapInPandas, queries broadcast (the lookup contract;
-  `emd_knn`/`emd_join_nd` remain the scale paths for huge query sides).
+  The scanned rows meet the broadcast queries in one mapInPandas running
+  `emd_join_nd._range_block`, the threshold block shared with
+  `streaming_emd_join_nd` (the lookup contract; `emd_knn`/`emd_join_nd`
+  remain the scale paths for huge query sides).
 
 Reference parity note: the reference has no persisted-index surface at all
 (SURVEY.md §2.1 — every job re-reads histogram text); this generalizes its
@@ -35,7 +36,6 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,10 +45,10 @@ from ._probe import broadcast_blocks, lookup_rows
 from .emd_join_nd import (
     NdJoinConfig,
     _bins,
-    _cascade_for,
     _cell_expr,
     _centroid_cols,
     _grid_geometry,
+    _range_block,
     _reachable_cells,
     _valid_hist,
     build_config,
@@ -236,8 +236,8 @@ def emd_index_search(
     id-equal matches and invalid queries (``_valid_hist``) excluded.  The
     reachable-cell union of all queries becomes a literal ``cell IN (...)`` scan filter —
     partition pruning on the disk-backed index — then ONE mapInPandas runs
-    the screen cascade + batched exact stage against the broadcast query
-    block.  Query sets over
+    the shared threshold block (``_range_block``) against the broadcast
+    query block.  Query sets over
     ``_probe.COLLECT_ROWS`` rows are rejected (use ``emd_join_nd(other=...)`` /
     ``emd_knn(distributed=True)`` for table-scale query sides)."""
     cfg, bnds = index.cfg, index.bnds
@@ -258,41 +258,10 @@ def emd_index_search(
     reach = float(threshold) + cfg.slack
     probe_cells = np.unique(_reachable_cells(qc, bnds, reach)[1]).tolist()
 
-    def block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        qids_, QW_, qc_ = payload
-        nq = len(qids_)
-        ids = pdf["id"].to_numpy()
-        W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
-        # ONE cascade over [queries; partition rows]: the full screen
-        # stack + batched exact stage, exactly like the join's in-cell
-        # verify, with all query pairs stacked into one candidate list
-        casc = _cascade_for(np.vstack([QW_, W]), cfg)
-        li_parts, ri_parts = [], []
-        for qi in range(nq):
-            if cfg.rubner_ord is not None:
-                lb = np.linalg.norm(
-                    casc.cents[nq:] - qc_[qi], ord=cfg.rubner_ord, axis=1
-                )
-                cand = np.flatnonzero((lb <= reach) & (ids != qids_[qi]))
-            else:
-                cand = np.flatnonzero(ids != qids_[qi])
-            if cand.size:
-                li_parts.append(np.full(cand.size, qi, dtype=np.int64))
-                ri_parts.append(cand + nq)
-        if not li_parts:
-            return pd.DataFrame()
-        li, ri, emds = casc.run(
-            np.concatenate(li_parts),
-            np.concatenate(ri_parts),
-            float(threshold),
-            slack=cfg.slack,
-        )
-        return pd.DataFrame({"qid": qids_[li], "nid": ids[ri - nq], "emd": emds})
-
     pruned = index.records.where(F.col("cell").isin(probe_cells))
     return broadcast_blocks(
         pruned.select("id", "w"),
-        (qids, QW, qc),
-        block,
+        (qids, QW),
+        _range_block(cfg, float(threshold)),
         "qid long, nid long, emd double",
-    )
+    ).where(F.col("qid") != F.col("nid"))

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..cache import persist, release_on_gc
+from ..kernel.cascade import TIE_SLACK
 from ._sqltext import sql_doubles
 from ._width import CROSS_PAIRS, task_width
 
@@ -130,9 +131,7 @@ def emd_threshold_join(
                 )
             ),
         )
-        pairs = a.join(b, on=[a.probe == b.cell_b]).where(
-            F.abs(F.col("mpos_a") - F.col("mpos_b")) <= F.lit(cw)
-        )
+        pairs = a.join(b, on=[a.probe == b.cell_b])
         return release_on_gc(
             _finish_threshold(pairs, threshold, positions), hr, hs
         )
@@ -146,12 +145,6 @@ def emd_threshold_join(
         )
         b = _pair_frame(h, "b")
         pairs = a.crossJoin(b).where(F.col("id_a") < F.col("id_b"))
-        # Rubner prefilter: |mean(a) - mean(b)| <= EMD, a cheap scalar
-        # predicate evaluated before the O(B) pair expression; sound, so the
-        # result set is unchanged (DistanceUtil.getRubnerEmd:184-230)
-        pairs = pairs.where(
-            F.abs(F.col("mpos_a") - F.col("mpos_b")) <= F.lit(float(threshold))
-        )
         return _finish_threshold(pairs, threshold, positions)
 
     if strategy != "cells":
@@ -178,13 +171,9 @@ def emd_threshold_join(
     # each cross-cell pair computed exactly once (cell_a < cell_b)
     neigh = a.join(b, on=[a.cell_a + F.lit(1) == b.cell_b])
 
-    out = []
-    for pairs in (same, neigh):
-        pruned = pairs.where(
-            F.abs(F.col("mpos_a") - F.col("mpos_b")) <= F.lit(float(threshold))
-        )
-        out.append(_finish_threshold(pruned, threshold, positions))
-    res = out[0].unionAll(out[1])
+    res = _finish_threshold(same, threshold, positions).unionAll(
+        _finish_threshold(neigh, threshold, positions)
+    )
     # normalize pair order to rid < sid for output parity with the oracle
     return release_on_gc(
         res.select(
@@ -197,9 +186,18 @@ def emd_threshold_join(
 
 
 def _finish_threshold(pairs: DataFrame, threshold: float, positions) -> DataFrame:
+    """The pairs with EMD <= ``threshold``.  The Rubner prefilter
+    |mean(a) - mean(b)| <= EMD(a, b) (DistanceUtil.getRubnerEmd:184-230), a
+    cheap scalar predicate, runs before the O(B) pair expression.  The means
+    are rounded one by one, so a pair whose EMD equals its mean gap (CDFs
+    that never cross) can read its gap a few ulps above its exactly
+    computed EMD; the prefilter admits ``TIE_SLACK`` more, so such a pair at
+    exactly theta still reaches the exact filter."""
+    gap = F.abs(F.col("mpos_a") - F.col("mpos_b"))
     emd = pair_emd_expr(positions=positions)
     return (
-        pairs.withColumn("emd", emd)
+        pairs.where(gap <= F.lit(float(threshold) + TIE_SLACK))
+        .withColumn("emd", emd)
         .where(F.col("emd") <= F.lit(float(threshold)))
         .select(F.col("id_a").alias("rid"), F.col("id_b").alias("sid"), "emd")
     )

@@ -278,8 +278,8 @@ def _seeded_config(
     frame: DataFrame, col: str, bin_points: np.ndarray, seed: int, ground
 ) -> NdJoinConfig:
     """:func:`build_config` with its dual potentials seeded from the first
-    8 ``col`` weight rows of ``frame``."""
-    rows = frame.select(col).limit(8).collect()
+    8 valid (``_valid_hist``) ``col`` weight rows of ``frame``."""
+    rows = frame.where(_valid_hist(col)).select(col).limit(8).collect()
     sw = np.array([r[0] for r in rows], dtype=np.float64)
     return build_config(bin_points, seed_weights=sw, seed=seed, ground=ground)
 
@@ -310,19 +310,25 @@ def _cascade_for(weights: np.ndarray, cfg: NdJoinConfig) -> EmdCascade:
     )
 
 
-def _lb_matrix(casc: EmdCascade, n_own: int) -> np.ndarray:
-    """The (owners, candidates) :meth:`EmdCascade.lower_bounds` matrix of a
-    cascade over the stacked rows [owners; candidates], built in owner
-    slices of about ``casc.CHUNK`` pairs."""
-    n_cand = casc.weights.shape[0] - n_own
-    cand = np.arange(n_own, n_own + n_cand)
-    LB = np.empty((n_own, n_cand))
-    step = max(1, casc.CHUNK // max(n_cand, 1))
-    for s in range(0, n_own, step):
-        o = np.arange(s, min(s + step, n_own))
-        LB[o] = casc.lower_bounds(np.repeat(o, n_cand), np.tile(cand, o.size)).reshape(
-            o.size, n_cand
-        )
+def _stacked_cascade(cfg: NdJoinConfig, head: np.ndarray, rows) -> EmdCascade:
+    """The one cascade prologue: a cascade over [head; rows], ``head`` the
+    normalized rows every task holds (none, queries, pivots, a reference
+    side), ``rows`` a partition's weight column, normalized here."""
+    W = normalize(np.stack(rows).astype(np.float64))
+    H = np.asarray(head, dtype=np.float64).reshape(-1, W.shape[1])
+    return _cascade_for(np.vstack([H, W]) if len(H) else W, cfg)
+
+
+def _lb_matrix(casc: EmdCascade, own: np.ndarray, cand: np.ndarray) -> np.ndarray:
+    """The :meth:`EmdCascade.lower_bounds` matrix of the cascade rows ``own``
+    x ``cand``, built in owner slices of about ``casc.CHUNK`` pairs."""
+    LB = np.empty((own.size, cand.size))
+    step = max(1, casc.CHUNK // max(cand.size, 1))
+    for s in range(0, own.size, step):
+        o = own[s : s + step]
+        LB[s : s + o.size] = casc.lower_bounds(
+            np.repeat(o, cand.size), np.tile(cand, o.size)
+        ).reshape(o.size, cand.size)
     return LB
 
 
@@ -381,6 +387,36 @@ def _window_pairs(
     return li, pool_sorted[np.repeat(lo, counts) + offs]
 
 
+def _range_block(
+    cfg: NdJoinConfig, theta: float
+) -> Callable[[tuple, pd.DataFrame], pd.DataFrame]:
+    """The threshold block of ``emd_index_search`` and
+    ``streaming_emd_join_nd``: payload (ids, normalized weights) x one
+    batch (id, w) -> (qid, nid, emd) within ``theta`` (+ slack).  The
+    candidates, dim-0 centroid windows (any Minkowski Rubner bound implies
+    them; the full cross under an arbitrary cost), stream through
+    :meth:`EmdCascade.verify` in payload slices of about ``CHUNK`` pairs."""
+    reach = theta + cfg.slack if cfg.rubner_ord is not None else np.inf
+
+    def block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        hids, HW = payload
+        nh = len(hids)
+        casc = _stacked_cascade(cfg, HW, pdf["w"].to_numpy())
+        key = casc.cents[:, 0]
+        # sorted once, so each slice's window sort runs on sorted keys
+        pool = nh + np.argsort(key[nh:], kind="stable")
+        step = max(1, casc.CHUNK // pool.size)
+        groups = (
+            _window_pairs(np.arange(s, min(s + step, nh)), pool, key, reach)
+            for s in range(0, nh, step)
+        )
+        out = [(*_NO_PAIRS, np.empty(0)), *casc.verify(groups, theta, slack=cfg.slack)]
+        li, ri, emds = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"qid": hids[li], "nid": pdf["id"].to_numpy()[ri - nh], "emd": emds})
+
+    return block
+
+
 def _run_cascade(
     rows: DataFrame,
     cfg: NdJoinConfig,
@@ -406,14 +442,14 @@ def _run_cascade(
     Hash partitioning on ``grp`` places every row of a group in exactly one
     partition, so per-GROUP pair generation is unchanged — but the cascade
     (np.unique row-grouping, support table, dual keys, every pruning stage
-    and the batched exact solver) is built ONCE per partition and runs on
-    the CONCATENATED candidate list.  One pandas DataFrame and cascade per
-    group pays Arrow + cascade-construction overhead per group (9,597 groups of a few rows each at sf0.1 3-d ~ 10 s of the 60 s
-    join-stage CPU) and fragmented the exact stage's support classes below
-    MIN_BATCH (scalar-LP fallback).  Every cascade stage is a sound
-    per-pair screen whose survivors are decided by the same exact-EMD
-    filter: batching changes only WHERE a pair is pruned, never whether it
-    survives.
+    and the batched exact solver) is built ONCE per partition, and the
+    groups' candidates stream through :meth:`EmdCascade.verify`.  One
+    pandas DataFrame and cascade per group pays Arrow + cascade-
+    construction overhead per group (9,597 groups of a few rows each at
+    sf0.1 3-d ~ 10 s of the 60 s join-stage CPU) and fragmented the exact
+    stage's support classes below MIN_BATCH (scalar-LP fallback).  Every
+    cascade stage is a sound per-pair screen: batching changes only WHERE
+    a pair is pruned, never whether it survives.
 
     ``width`` is the task count, which each strategy derives from its
     candidate-pair estimate through :func:`._width.task_width`, so a task
@@ -430,34 +466,29 @@ def _run_cascade(
         if not pdfs:
             return
         allp = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
+        casc = _stacked_cascade(cfg, (), allp["w"].to_numpy())
         cols = {}
-        for c in allp.columns:
+        for c in allp.columns.drop("w"):
             v = allp[c].to_numpy()
             cols[c] = np.stack(v) if v.dtype == object else v
-        casc = _cascade_for(normalize(cols.pop("w").astype(np.float64)), cfg)
         grps = cols["grp"]
         order = np.argsort(grps, kind="stable")
         gs = grps[order]
         starts = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
         ends = np.r_[starts[1:], order.size]
-        li_parts: list[np.ndarray] = []
-        ri_parts: list[np.ndarray] = []
-        for s, e in zip(starts, ends):
-            li, ri = candidates(int(gs[s]), order[s:e], cols, casc.cents)
-            if li.size:
-                li_parts.append(li)
-                ri_parts.append(ri)
-        if not li_parts:
-            return
-        li = np.concatenate(li_parts) if len(li_parts) > 1 else li_parts[0]
-        ri = np.concatenate(ri_parts) if len(ri_parts) > 1 else ri_parts[0]
+        groups = (
+            candidates(int(gs[s]), order[s:e], cols, casc.cents)
+            for s, e in zip(starts, ends)
+        )
         st = CascadeStats()
-        li, ri, emds = casc.run(li, ri, theta, stats=st, slack=cfg.slack)
+        n_out = 0
+        for li, ri, emds in casc.verify(groups, theta, stats=st, slack=cfg.slack):
+            if li.size:
+                n_out += li.size
+                yield _emit_pairs(cols["id"], li, ri, emds, ordered=ordered)
         if stats is not None:
             stats.update(st)
-            stats.add("result_pairs", li.size)
-        if li.size:
-            yield _emit_pairs(cols["id"], li, ri, emds, ordered=ordered)
+            stats.add("result_pairs", n_out)
 
     if stats is not None:
         stats.add("runner_tasks", width)
@@ -1251,13 +1282,11 @@ def _pivot_join(
 
     def dists_part(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
-            n = W.shape[0]
-            # one cascade over [records; pivots]: exact EMD to a pivot is an
-            # LP (the closed form on a line), so most pivots are screened by
-            # lower bounds first, where the reference pays the full P LPs per
-            # record (CloudJoinBaseMapper.java:81-196)
-            casc = _cascade_for(np.vstack([W, PV]), cfg)
+            n = len(pdf)
+            # one cascade over [pivots; records]: exact EMD to a pivot is an
+            # LP, so most pivots are screened by lower bounds first, where
+            # the reference pays P LPs per record (CloudJoinBaseMapper:81-196)
+            casc = _stacked_cascade(cfg, PV, pdf["w"].to_numpy())
             EX = np.full((n, P), np.nan)
             d_near = np.full(n, np.inf)
             if cfg.rubner_ord is not None:
@@ -1267,15 +1296,15 @@ def _pivot_join(
                 # admit a cross-boundary match, so their slot stays +inf
                 # and the JVM window rule drops them for free (the static
                 # bounds do not tighten from solves)
-                LB = _lb_matrix(casc, n)
+                LB = _lb_matrix(casc, np.arange(P, P + n), np.arange(P))
                 rr, jj, es = multistep(
-                    LB, 1, lambda o, c: casc.exact_pairs(o, n + c), _PIVOT_CHUNK
+                    LB, 1, lambda o, c: casc.exact_pairs(P + o, c), _PIVOT_CHUNK
                 )
                 EX[rr, jj] = es
                 np.minimum.at(d_near, rr, es)
                 rr, jj = np.nonzero((LB <= d_near[:, None] + 2.0 * reach) & np.isnan(EX))
                 if rr.size:
-                    EX[rr, jj] = casc.exact_pairs(rr, n + jj)
+                    EX[rr, jj] = casc.exact_pairs(P + rr, jj)
             else:
                 # arbitrary (metric) cost: no centroid geometry, but the
                 # pivot-pivot matrix gives LAESA bounds.  ONE loop covers
@@ -1301,7 +1330,7 @@ def _pivot_join(
                         break
                     rr = np.flatnonzero(go)
                     jn = jn_all[rr]
-                    es = casc.exact_pairs(rr, n + jn)
+                    es = casc.exact_pairs(P + rr, jn)
                     EX[rr, jn] = es
                     d_near[rr] = np.minimum(d_near[rr], es)
                     if PP is not None:
@@ -1566,9 +1595,8 @@ def emd_knn(
         qids_, QW_ = payload
         nq = len(qids_)
         ids = pdf["id"].to_numpy()
-        W = normalize(np.stack(pdf["w"].to_numpy()).astype(np.float64))
-        casc = _cascade_for(np.vstack([QW_, W]), cfg)
-        LB = _lb_matrix(casc, nq)
+        casc = _stacked_cascade(cfg, QW_, pdf["w"].to_numpy())
+        LB = _lb_matrix(casc, np.arange(nq), np.arange(nq, nq + ids.size))
         LB[ids[None, :] == qids_[:, None]] = np.inf  # self-matches out
         own, cand, emd = multistep(
             LB, k, lambda o, c: casc.exact_pairs(o, nq + c), max(_KNN_CHUNK, 2 * k)

@@ -427,15 +427,14 @@ def streaming_emd_join_nd(
     The 1-D expression-tree lookup (:func:`streaming_emd_lookup`) covers
     collinear bins entirely JVM-side; this operator is its d>=2 twin, where
     exact EMD is an LP per pair and must run in an Arrow-batched pandas
-    pass.  Stateless by design — the work per micro-batch is bounded by
-    |batch| x |ref| vectorized bound evaluations plus an LP per surviving
-    pair, and scales horizontally with stream partitions (the reference set
-    ships once per executor via broadcast, as the batch operators do for
-    their side inputs).  Invalid rows (zero mass, or a negative or
+    pass.  Stateless by design — each micro-batch runs ``emd_index_search``'s
+    threshold block (``emd_join_nd._range_block``) against the broadcast
+    reference set, and scales horizontally with stream partitions; an
+    empty reference side joins nothing.  Invalid rows (zero mass, or a negative or
     non-finite weight) on either side are dropped, as in the batch joins."""
     from ..kernel import normalize
     from ..operators._probe import broadcast_blocks
-    from ..operators.emd_join_nd import _bins, _cascade_for, _valid_hist, build_config
+    from ..operators.emd_join_nd import _bins, _range_block, _valid_hist, build_config
 
     bin_points = _bins(bin_points)
     valid = _valid_hist(w_col)
@@ -445,29 +444,14 @@ def streaming_emd_join_nd(
     if cfg is None:
         cfg = build_config(bin_points, seed_weights=RW, seed=seed, ground=ground)
 
-    def block(payload: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        rids_, RW_ = payload
-        m = RW_.shape[0]
-        ids = pdf[id_col].to_numpy()
-        W = normalize(np.stack(pdf[w_col].to_numpy()).astype(np.float64))
-        n = W.shape[0]
-        # one cascade over the stacked [batch | ref] matrix; candidate
-        # pairs are the full batch x ref cross — the vectorized Rubner
-        # stage prunes it before anything per-pair runs
-        casc = _cascade_for(np.vstack([W, RW_]), cfg)
-        li = np.repeat(np.arange(n), m)
-        ri = n + np.tile(np.arange(m), n)
-        li, ri, emds = casc.run(li, ri, float(threshold), slack=cfg.slack)
-        return pd.DataFrame({"rid": ids[li], "sid": rids_[ri - n], "emd": emds})
-
     return broadcast_blocks(
         stream_hist.where(valid).select(
-            F.col(id_col).alias(id_col), F.col(w_col).alias(w_col)
+            F.col(id_col).alias("id"), F.col(w_col).alias("w")
         ),
         (rids, RW),
-        block,
-        "rid long, sid long, emd double",
-    )
+        _range_block(cfg, float(threshold)),
+        "qid long, nid long, emd double",
+    ).select(F.col("nid").alias("rid"), F.col("qid").alias("sid"), "emd")
 
 
 def streaming_asof_lookup(

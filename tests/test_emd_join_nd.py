@@ -827,3 +827,36 @@ def test_every_emd_entry_point_drops_invalid_rows(spark, tmp_path):
     q.awaitTermination(timeout=120)
     got = {(r.rid, r.sid) for r in spark.sql("SELECT * FROM emd_nd_stream_invalid").collect()}
     assert got == {(a + 100, b) for a in valid for b in valid}
+
+
+def test_dual_seeds_come_from_valid_rows(spark, monkeypatch):
+    """The non-grid entry points seed their dual potentials from the first
+    8 VALID rows: leading zero, NaN, inf and negative rows never reach
+    ``build_config``, which then normalizes without a RuntimeWarning."""
+    import warnings
+
+    from melody_join_spark.operators import emd_join_nd as nd
+
+    bins = np.array([[0, 0], [1, 0], [0, 1], [1, 1]], dtype=np.float64)
+    rng = np.random.default_rng(6)
+    bad = [[0.0] * 4, [float("nan"), 1.0, 1.0, 1.0], [float("inf"), 1.0, 1.0, 1.0],
+           [2.0, -1.0, 1.0, 1.0]] * 2
+    good = [[float(x) for x in rng.random(4) + 0.1] for _ in range(8)]
+    hist = spark.createDataFrame(
+        list(enumerate(bad + good)), "id long, w array<double>"
+    ).coalesce(1)
+    seeds = []
+    real = nd.build_config
+
+    def recording(*args, **kwargs):
+        seeds.append(np.asarray(kwargs["seed_weights"]))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(nd, "build_config", recording)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        nd.emd_join_nd(hist, bins, 1.0, strategy="bruteforce")
+        nd.emd_knn(hist, hist, bins, k=2)
+    assert len(seeds) == 2
+    for sw in seeds:
+        np.testing.assert_array_equal(sw, np.array(good))

@@ -90,3 +90,24 @@ def test_topk_k_larger_than_pairs(spark, hist):
     small = hist.limit(4).cache()
     res = emd_topk_join(small, 100, strategy="prune").collect()
     assert len(res) == 6  # 4C2 pairs only
+
+
+def test_pair_at_theta_whose_mean_gap_rounds_above_it(spark):
+    """Histogram 2 is histogram 1 moved one bin right, so their EMD is
+    exactly 1.0 = theta, and so is their mean gap; but the means 6/5 and
+    11/5 round one by one and their gap reads 1.0000000000000002.  The
+    mean-position screen of every strategy must still pass the pair, whose
+    exactly computed EMD qualifies."""
+    from melody_join_spark.operators.histograms import with_cum
+    from pyspark.sql import functions as F
+
+    h = with_cum(
+        spark.createDataFrame(
+            [(1, [0.0, 4.0, 1.0, 0.0]), (2, [0.0, 0.0, 4.0, 1.0])], "id long, w array<double>"
+        ).withColumn("total", F.aggregate("w", F.lit(0.0), lambda a, x: a + x))
+    )
+    for strategy in ("bruteforce", "cells"):
+        got = [tuple(r) for r in emd_threshold_join(h, THETA, strategy=strategy).collect()]
+        assert got == [(1, 2, 1.0)], strategy
+    got = [tuple(r) for r in emd_threshold_join(h, THETA, strategy="cells", other=h).collect()]
+    assert sorted(got) == [(1, 1, 0.0), (1, 2, 1.0), (2, 1, 1.0), (2, 2, 0.0)]
